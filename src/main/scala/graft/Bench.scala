@@ -604,8 +604,7 @@ object Bench {
     // accretion.
     val wh = Files.createTempDirectory("graft-bench-wh").toString
     TmpDirs.deleteOnExit(wh)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-bench", cpus)
+    val spark = GraftSession.builder("graft-bench", GraftSession.cpus)
       .config("spark.sql.warehouse.dir", wh).getOrCreate()
     // ERROR, not WARN: the driver keeps only a bounded output tail and
     // WARN-class spam (WindowExec bounded-frame notes, Column equality

@@ -33,8 +33,21 @@ object GraftSession {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.ui.enabled", "false")
 
+  /** A positive-integer env knob: `default` when `name` is unset, and
+    * anything else that is not a positive integer fails naming both the
+    * variable and the value. */
+  private[graft] def positiveIntEnv(name: String, default: Int,
+      env: Map[String, String] = sys.env): Int =
+    env.get(name).fold(default) { v =>
+      scala.util.Try(v.trim.toInt).toOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$v'"))
+    }
+
+  /** The local master's core count, `SPARK_GRAFT_CPUS` (default 32). */
+  def cpus: String = positiveIntEnv("SPARK_GRAFT_CPUS", 32).toString
+
   def get(appName: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = builder(appName, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

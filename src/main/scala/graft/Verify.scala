@@ -28,8 +28,7 @@ object Verify {
     // generation manifests and tax every catalog listing
     val wh = Files.createTempDirectory("graft-verify-wh").toString
     TmpDirs.deleteOnExit(wh)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-verify", cpus)
+    val spark = GraftSession.builder("graft-verify", GraftSession.cpus)
       .config("spark.sql.warehouse.dir", wh).getOrCreate()
     // ERROR, not WARN: the driver keeps only a bounded stdout/stderr
     // tail, and WARN-class spam (WindowExec, Column) has flooded it
@@ -61,8 +60,7 @@ object Verify {
     // 8 measured best on the local[32] box: 206 queries in 854 s
     // uncontended (2142 s when fighting a concurrent build) vs a
     // multi-hour sequential sweep — SCALING.md's verify-parallel note
-    val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt
-      .max(1)
+    val threads = GraftSession.positiveIntEnv("SPARK_GRAFT_VERIFY_THREADS", 8)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()

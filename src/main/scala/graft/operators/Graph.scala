@@ -105,114 +105,97 @@ object Graph {
     * vertex production graph (≈256k rows / a few MB per partition).
     * Narrow coalesce only merges partitions, so results are bit-equal
     * and at scale (parts ≥ splits) it is the identity. */
-  private[graft] val StateRowsPerPart: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_STATE_ROWS_PER_PART").flatMap { v =>
-      // same static-initializer guard as [[BcastMaxN]]; 0 disables the
-      // squeeze outright (the A/B arm and the production safety valve)
-      val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ >= 0)
-      if (parsed.isEmpty)
-        System.err.println("[graph] WARNING: ignoring malformed " +
-          s"SPARK_GRAFT_GRAPH_STATE_ROWS_PER_PART='$v' (not a " +
-          "non-negative long); using the 262144 default")
-      parsed
-    }.getOrElse(262144L)
+  private[graft] val StateRowsPerPart: Long = 262144L
 
   private def statePartsFor(n: Long, rowsPerPart: Long): Int =
     math.min(Int.MaxValue.toLong,
       math.max(1L, (n + rowsPerPart - 1L) / rowsPerPart)).toInt
 
-  /** r22 session 3: carry the dangling flag IN the rank state instead
-    * of re-deriving it per round. The dangling vertex set is loop-
-    * invariant (it depends only on the edge table), yet the r21 shape
-    * re-joined the state against the persisted `dangNodes` frame every
-    * round — one broadcast build + one semi-join stage per round whose
-    * answer never changes. With one boolean `nd` column attached to
-    * the seed (computed once from `outw`), the dangling mass is a
-    * plain filter+sum over the state frame (1 partition at sf0.1
-    * after the squeeze — no join, no broadcast build), and the carry
-    * join reads the state instead of `nodesP` (whose per-round
-    * Exchange+Sort it also retires: the state frame carries exactly
-    * the full vertex set every round by construction). Bit-equal by
-    * construction — same integer sums over the same sets; GraphSpec
-    * pins on/off equality. Env knob is the A/B arm and safety valve. */
-  private[graft] val DangInState: Boolean =
-    !sys.env.get("SPARK_GRAFT_GRAPH_DANG_IN_STATE").contains("0")
+  /** The partition layout [[PrLoop]] and [[LpLoop]] share, decided from
+    * the loop's vertex count `n`: the per-round join strategy (see
+    * [[BcastMaxN]]), the n-derived state width (see
+    * [[StateRowsPerPart]]) and the persisted edge frame's layout. */
+  private class LoopLayout(n: Long, bcastMaxN: Long,
+                           stateRowsPerPart: Long) {
+    require(stateRowsPerPart > 0,
+      s"stateRowsPerPart must be positive, got $stateRowsPerPart")
+    val bcast: Boolean = n <= bcastMaxN
 
-  /** @param nodes one column `node` (string), the full vertex set
-    * @param edges  columns `src`, `dst`, `w` (long weight > 0)
-    * @return (node, rank) — rank in integer micro-mass units
-    */
+    /** State frames materialize at n-derived width. */
+    def squeeze(df: DataFrame): DataFrame =
+      df.coalesce(statePartsFor(n, stateRowsPerPart))
+
+    /** Persist the loop-invariant edge frame and return the frame every
+      * round scans.
+      *
+      * ABOVE the broadcast gate the per-round state join is a sort-merge
+      * join — persist the edge frame ALREADY hash-partitioned AND sorted
+      * by `src` (r22): the cached partitioning/ordering satisfy the
+      * join's requirement every round, so the SMJ's edge side pays its
+      * exchange and sort ONCE at setup instead of once per round (the
+      * state side, one row per vertex, still exchanges per round — it
+      * changes every round by construction). The explicit partition
+      * count pins a REPARTITION_BY_NUM shuffle AQE will not coalesce —
+      * a coalesced cache partitioning would no longer match the state
+      * side's and the per-round exchange would sneak back.
+      *
+      * BELOW the gate the state side broadcasts and the edge side
+      * streams unsorted — the setup sort would be pure cost there. The
+      * persisted edge frame then inherits ~3× the session's shuffle
+      * width from the union+join that built it (~99 near-empty
+      * partitions for ~480k rows at sf0.1), and EVERY round scans it —
+      * both the contribution map stage and the AQE broadcast build pay
+      * ~99 task launches per round for ~0.1 s of CPU. So the scan is
+      * narrow-coalesced to an m-derived width (one bounded count at
+      * setup, which just materializes the cache round 1 would have
+      * materialized anyway). The shuffle arm never coalesces: a
+      * CoalesceExec reports unknown partitioning and would erase the
+      * hash partitioning the per-round SMJ relies on. */
+    def edgeScan(edges: DataFrame): DataFrame =
+      if (bcast) {
+        val e = Caches.persistTracked(edges)
+        e.coalesce(statePartsFor(e.count(), stateRowsPerPart))
+      } else Caches.persistTracked(
+        edges.repartition(col("src")).sortWithinPartitions("src"))
+  }
+
   /** The loop-invariant frames + one power-iteration step, shared by
     * the fixed-round [[pageRank]] and the converging
-    * [[pageRankFixedPoint]]: out-weights and the dangling vertex set
-    * are persisted ONCE — referenced from inside every iteration, they
-    * would otherwise recompute the full edge derivation per round (the
-    * first formulation paid the source joins 10×). */
+    * [[pageRankFixedPoint]]: out-weights are persisted ONCE — referenced
+    * from inside every iteration, they would otherwise recompute the
+    * full edge derivation per round (the first formulation paid the
+    * source joins 10×).
+    *
+    * The dangling flag rides IN the rank state. The dangling vertex set
+    * is loop-invariant (it depends only on the edge table), so one
+    * boolean `nd` column is attached to the seed (computed once from
+    * `outw`) and carried through every round: the dangling mass is a
+    * plain filter+sum over the state frame (1 partition at sf0.1 after
+    * the squeeze — no join, no broadcast build), and the carry join
+    * reads the state frame, which holds exactly the full vertex set
+    * every round by construction. Re-deriving the set per round would
+    * produce the same integer sums over the same sets, so the carried
+    * flag is bit-equal by construction; GraphSpec pins hand-computed
+    * ranks on a graph with dangling vertices on both join arms. */
   private class PrLoop(nodes: DataFrame, edges: DataFrame,
                        dampNum: Long, dampDen: Long, scale: Long,
                        bcastMaxN: Long = BcastMaxN,
-                       stateRowsPerPart: Long = StateRowsPerPart,
-                       dangInState: Boolean = DangInState) {
+                       stateRowsPerPart: Long = StateRowsPerPart) {
     // bounded driver scalar: the vertex COUNT (one long), needed to
     // fix the integer base share — same posture as langid's minLang
     val n: Long = nodes.count()
     require(n > 0, "pageRank needs a non-empty vertex set")
-    private val bcast = n <= bcastMaxN
+    val layout = new LoopLayout(n, bcastMaxN, stateRowsPerPart)
     private val base = ((scale * (dampDen - dampNum)) / dampDen) / n
     private val outw = Caches.persistTracked(
       edges.groupBy("src").agg(sum(col("w")).as("ow")))
-    // ABOVE the broadcast gate the per-round state join is a sort-merge
-    // join — persist the edge frame ALREADY hash-partitioned AND sorted
-    // by `src` (r22): the cached partitioning/ordering satisfy the
-    // join's requirement every round, so the SMJ's edge side pays its
-    // exchange and sort ONCE at setup instead of once per round (the
-    // state side, one row per vertex, still exchanges per round — it
-    // changes every round by construction). The explicit partition
-    // count pins a REPARTITION_BY_NUM shuffle AQE will not coalesce —
-    // a coalesced cache partitioning would no longer match the state
-    // side's and the per-round exchange would sneak back. Below the
-    // gate the state side broadcasts and the edge side streams
-    // unsorted — the setup sort would be pure cost there.
-    private val e = Caches.persistTracked {
-      val joined = edges.join(outw, Seq("src"))
-      if (bcast) joined
-      else joined.repartition(col("src")).sortWithinPartitions("src")
-    }
+    private val eScan = layout.edgeScan(edges.join(outw, Seq("src")))
     val nodesP: DataFrame = Caches.persistTracked(nodes)
-    // legacy arm (dangInState = false) only: the per-round semi-join's
-    // build frame — lazy so the default arm never materializes it
-    private lazy val dangNodes = Caches.persistTracked(
-      nodesP.join(outw.withColumnRenamed("src", "node"),
-        Seq("node"), "left_anti"))
-    // dangling flag, computed ONCE for the seed (see [[DangInState]]):
-    // a node is dangling iff it has no out-weight row
-    private def withNd(df: DataFrame): DataFrame =
-      df.join(outw.select(col("src").as("node"), lit(1).as("__ho")),
-          Seq("node"), "left")
-        .withColumn("nd", col("__ho").isNull).drop("__ho")
-    // state frames materialize at n-derived width (see StateRowsPerPart)
-    def squeeze(df: DataFrame): DataFrame =
-      if (stateRowsPerPart <= 0) df
-      else df.coalesce(statePartsFor(n, stateRowsPerPart))
-    // BCAST arm only: the persisted edge frame inherits ~3× the
-    // session's shuffle width from the union+join that built it (~99
-    // near-empty partitions for ~480k rows at sf0.1), and EVERY round
-    // scans it — both the contribution map stage and the AQE broadcast
-    // build pay ~99 task launches per round for ~0.1 s of CPU. Narrow-
-    // coalesce the scans to an m-derived width (one bounded count at
-    // setup, which just materializes the cache round 1 would have
-    // materialized anyway). The SHUFFLE arm keeps `e` untouched: its
-    // repartition(src)+sort layout IS the r22 optimization, and a
-    // coalesce would erase the hash partitioning the per-round SMJ
-    // relies on (CoalesceExec reports unknown partitioning).
-    private val eScan =
-      if (!bcast || stateRowsPerPart <= 0) e
-      else e.coalesce(statePartsFor(e.count(), stateRowsPerPart))
 
-    /** The loop's seed state: `None` = uniform share, `Some` = warm-
-      * start from a previous generation's ranks (carried-over nodes
-      * keep their rank, new nodes seed uniform). Under [[DangInState]]
-      * the seed also carries the loop-invariant `nd` flag. */
+    /** The loop's seed state (node, rank, nd): `None` = uniform share,
+      * `Some` = warm-start from a previous generation's ranks (carried-
+      * over nodes keep their rank, new nodes seed uniform). A node is
+      * dangling (`nd`) iff it has no out-weight row. */
     def seedFrom(init: Option[DataFrame]): DataFrame = {
       val ranked = init match {
         case None => nodesP.withColumn("rank", lit(scale / n))
@@ -223,14 +206,13 @@ object Graph {
             .select(col("node"),
               coalesce(col("prev_rank"), lit(scale / n)).as("rank"))
       }
-      if (dangInState) withNd(ranked).select("node", "rank", "nd")
-      else ranked
+      ranked.join(outw.select(col("src").as("node"), lit(1).as("__ho")),
+          Seq("node"), "left")
+        .select(col("node"), col("rank"), col("__ho").isNull.as("nd"))
     }
 
-    /** Project the loop's state back to the (node, rank) contract —
-      * drops the `nd` carry column under [[DangInState]]. */
-    def finish(rank: DataFrame): DataFrame =
-      if (dangInState) rank.select("node", "rank") else rank
+    /** Project the loop's state back to the (node, rank) contract. */
+    def finish(rank: DataFrame): DataFrame = rank.select("node", "rank")
 
     def step(prev: DataFrame): DataFrame = {
       // state side broadcast under the [[BcastMaxN]] gate: the edge
@@ -238,7 +220,7 @@ object Graph {
       // round; above the gate the original exchange plan stands
       val in = eScan.join(
           maybeBcast(prev.select(col("node").as("src"), col("rank")),
-            bcast),
+            layout.bcast),
           Seq("src"))
         .select(col("dst").as("node"),
           expr("(rank * w) div ow").as("c"))
@@ -246,47 +228,40 @@ object Graph {
       // dangling mass: rank parked on vertices with no out-edge — a
       // SINGLE-ROW aggregate crossJoined back under an explicit
       // broadcast (the q73 posture: the nested-loop's build side is
-      // exactly one row, so the "loop" is a constant lookup). Under
-      // [[DangInState]] it is a plain filter+sum over the state frame;
-      // the legacy arm re-joins the persisted dangNodes per round.
-      val dang = (if (dangInState) prev.filter(col("nd"))
-        else prev.join(maybeBcast(dangNodes, bcast),
-          Seq("node"), "left_semi"))
+      // exactly one row, so the "loop" is a constant lookup)
+      val dang = prev.filter(col("nd"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dang"))
         .select(expr(s"dang div $n").as("dshare"))
       // `in` stays on the shuffle path even under the gate: it is the
       // output of the contribution aggregate, and broadcasting it
       // would serialize that whole aggregate through a driver collect
       // before the carry join can start (measured: +0.9 s/10 rounds
-      // at sf0.1 vs letting it stream — graph-ab probe, r21). The
-      // carry side reads the state frame (full vertex set every round
-      // by construction) under [[DangInState]], nodesP on the legacy
-      // arm.
-      val carry =
-        if (dangInState) prev.select("node", "nd") else nodesP
-      val next = carry.join(in, Seq("node"), "left")
-        .crossJoin(broadcast(dang))
+      // at sf0.1 vs letting it stream — graph-ab probe, r21)
       val rank = (lit(base) + expr(
         s"($dampNum * (coalesce(inr, 0L) + dshare)) div $dampDen"))
         .as("rank")
-      if (dangInState) next.select(col("node"), rank, col("nd"))
-      else next.select(col("node"), rank)
+      prev.select("node", "nd").join(in, Seq("node"), "left")
+        .crossJoin(broadcast(dang))
+        .select(col("node"), rank, col("nd"))
     }
   }
 
+  /** @param nodes one column `node` (string), the full vertex set
+    * @param edges  columns `src`, `dst`, `w` (long weight > 0)
+    * @return (node, rank) — rank in integer micro-mass units
+    */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 10,
                dampNum: Long = 85, dampDen: Long = 100,
                scale: Long = 1000000000000L,
                bcastMaxN: Long = BcastMaxN,
-               stateRowsPerPart: Long = StateRowsPerPart,
-               dangInState: Boolean = DangInState): DataFrame = {
+               stateRowsPerPart: Long = StateRowsPerPart): DataFrame = {
     val loop = new PrLoop(nodes, edges, dampNum, dampDen, scale,
-      bcastMaxN, stateRowsPerPart, dangInState)
+      bcastMaxN, stateRowsPerPart)
     var rank = loop.seedFrom(None)
     var last: DataFrame = null
     for (_ <- 1 to iters) {
       // eager: materializes off `last`; squeezed to n-derived width
-      val prev = loop.squeeze(rank).localCheckpoint()
+      val prev = loop.layout.squeeze(rank).localCheckpoint()
       if (last != null) freeCheckpoint(last)
       last = prev
       rank = loop.step(prev)
@@ -336,11 +311,11 @@ object Graph {
     val loop = new PrLoop(nodes, edges, dampNum, dampDen, scale)
     val seed = loop.seedFrom(init)
     var prev2: DataFrame = null
-    var rank = loop.squeeze(seed).localCheckpoint()
+    var rank = loop.layout.squeeze(seed).localCheckpoint()
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxIters) {
-      val next = loop.squeeze(loop.step(rank)).localCheckpoint()
+      val next = loop.layout.squeeze(loop.step(rank)).localCheckpoint()
       rounds += 1
       // two-step frame equality = period ≤ 2 limit cycle reached
       converged = prev2 != null && next
@@ -410,25 +385,13 @@ object Graph {
     // join strategy (see [[BcastMaxN]]); label frames are one row per
     // vertex like rank frames, so the same gate applies
     private val n: Long = nodesP.count()
-    private val bcast = n <= bcastMaxN
-    // state frames materialize at n-derived width (see StateRowsPerPart)
-    def squeeze(df: DataFrame): DataFrame =
-      if (stateRowsPerPart <= 0) df
-      else df.coalesce(statePartsFor(n, stateRowsPerPart))
-    // above the gate: pre-partition + pre-sort the persisted edge frame
-    // by `src` once at setup — the PrLoop rationale verbatim (the SMJ
-    // edge side otherwise re-sorts per round)
-    private val e = Caches.persistTracked(
-      if (bcast) edges
-      else edges.repartition(col("src")).sortWithinPartitions("src"))
-    // bcast-arm edge-scan coalesce — the PrLoop eScan rationale verbatim
-    private val eScan =
-      if (!bcast || stateRowsPerPart <= 0) e
-      else e.coalesce(statePartsFor(e.count(), stateRowsPerPart))
+    val layout = new LoopLayout(n, bcastMaxN, stateRowsPerPart)
+    private val eScan = layout.edgeScan(edges)
     val selfLabels: DataFrame = nodesP.withColumn("label", col("node"))
     def step(prev: DataFrame): DataFrame = {
       val contrib = eScan
-        .join(maybeBcast(prev.withColumnRenamed("node", "src"), bcast),
+        .join(maybeBcast(prev.withColumnRenamed("node", "src"),
+          layout.bcast),
           Seq("src"))
         .groupBy(col("dst").as("node"), col("label"))
         .agg(sum(col("w")).as("cw"))
@@ -452,7 +415,7 @@ object Graph {
     var last: DataFrame = null
     for (_ <- 1 to iters) {
       // eager: materializes off `last`; squeezed to n-derived width
-      val prev = loop.squeeze(lab).localCheckpoint()
+      val prev = loop.layout.squeeze(lab).localCheckpoint()
       if (last != null) freeCheckpoint(last)
       last = prev
       lab = loop.step(prev)
@@ -497,11 +460,11 @@ object Graph {
             coalesce(col("prev_label"), col("node")).as("label"))
     }
     var prev2: DataFrame = null
-    var lab = loop.squeeze(seed).localCheckpoint()
+    var lab = loop.layout.squeeze(seed).localCheckpoint()
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxIters) {
-      val next = loop.squeeze(loop.step(lab)).localCheckpoint()
+      val next = loop.layout.squeeze(loop.step(lab)).localCheckpoint()
       rounds += 1
       converged = prev2 != null && next
         .join(prev2.withColumnRenamed("label", "plabel"), Seq("node"))

@@ -683,8 +683,8 @@ object TextOps {
     componentsIters(adj, maxIters)._1
 
   /** [[components]] plus the number of rounds the loop ran — the hook
-    * ComponentsSpec and ScaleProbes use to pin O(log diameter)
-    * convergence as an assertion, not a comment.
+    * ComponentsSpec uses to pin O(log diameter) convergence as an
+    * assertion, not a comment.
     *
     * AUTO-FALLBACK (r18): exhausting `maxIters` no longer throws —
     * non-convergence at the round bound IS the operational signal the
@@ -814,7 +814,7 @@ object TextOps {
     componentsStarsIters(adj, maxIters)._1
 
   /** [[componentsStars]] plus rounds run (one round = LS + SS) — the
-    * ComponentsSpec/ScaleProbes hook, mirroring [[componentsIters]]. */
+    * ComponentsSpec hook, mirroring [[componentsIters]]. */
   private[graft] def componentsStarsIters(adj: DataFrame, maxIters: Int)
       : (DataFrame, Int) = {
     // state: the CANONICAL undirected edge set (a < b, deduped), one

@@ -36,8 +36,8 @@ class ComponentsSpec extends AnyFunSuite {
     // near-dup component. 3000-spoke star centered on 0 with a
     // 1024-edge path hanging off spoke 3000 → 4025 vertices, diameter
     // 1026. log2(1026) ≈ 10; the pointer jump must land within +3 of
-    // that, where plain propagation would need ~1000 rounds. ScaleProbes
-    // measures the same shape at 200k+ vertices for SCALING.md.
+    // that, where plain propagation would need ~1000 rounds. SCALING.md
+    // records the same shape measured at 200k+ vertices.
     val star = (1L to 3000L).map(i => (0L, i))
     val path = (3000L until 4024L).map(i => (i, i + 1))
     val (labelsDf, rounds) =

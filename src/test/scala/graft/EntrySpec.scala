@@ -271,6 +271,21 @@ class EntrySpec extends AnyFunSuite {
       s"query numbering has gaps: missing ${(1 to nums.max).toSet -- nums}")
   }
 
+  test("positive-integer env knobs: unset takes the default, junk and " +
+    "non-positive values fail naming the variable and the value") {
+    def read(env: Map[String, String]) =
+      GraftSession.positiveIntEnv("SPARK_GRAFT_CPUS", 32, env)
+    assert(read(Map.empty) == 32)
+    assert(read(Map("SPARK_GRAFT_CPUS" -> "8")) == 8)
+    for (bad <- Seq("0", "abc")) {
+      val e = intercept[IllegalArgumentException] {
+        read(Map("SPARK_GRAFT_CPUS" -> bad))
+      }
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("entry returns non-empty summary") {
     val rows = SparkEntry.entry(SparkTestSession.spark).collect()
     assert(rows.nonEmpty)

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-round checkpoints, so the inventory-wide sweep skips them and
   * this spec owns their plan posture).
   */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -26,19 +29,49 @@ class GraphSpec extends AnyFunSuite {
     assert(out("a") == S / 2 && out("b") == S / 2)
   }
 
-  test("dangling redistribution: one-iteration hand computation") {
-    // a -> b, b dangling. dang = S/2, dshare = S/4, base = 0.15*S/2
-    val nodes = Seq("a", "b").toDF("node")
-    val edges = Seq(("a", "b", 1L)).toDF("src", "dst", "w")
-    val out = Graph.pageRank(nodes, edges, iters = 1)
+  /** Both per-round join strategies: broadcast state and shuffle state
+    * (the [[Graph.BcastMaxN]] gate's two arms). */
+  private val bothArms = Seq(Long.MaxValue, 0L)
+
+  private def ranks(nodes: Seq[String], edges: Seq[(String, String, Long)],
+                    iters: Int, maxN: Long): Map[String, Long] = {
+    val out = Graph.pageRank(nodes.toDF("node"),
+        edges.toDF("src", "dst", "w"), iters = iters, bcastMaxN = maxN)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     Caches.clear()
+    out
+  }
+
+  test("dangling redistribution: one-iteration hand computation") {
+    // a -> b, b dangling. dang = S/2, dshare = S/4, base = 0.15*S/2
     val base = ((S * 15) / 100) / 2
-    assert(out("a") == base + (85L * (S / 4)) / 100)
-    assert(out("b") == base + (85L * (S / 2 + S / 4)) / 100)
-    // no mass created: floors only ever lose
-    assert(out("a") + out("b") <= S)
-    assert(out("a") + out("b") >= S - 10)
+    for (maxN <- bothArms) {
+      val out = ranks(Seq("a", "b"), Seq(("a", "b", 1L)), 1, maxN)
+      assert(out("a") == base + (85L * (S / 4)) / 100, s"maxN=$maxN")
+      assert(out("b") == base + (85L * (S / 2 + S / 4)) / 100,
+        s"maxN=$maxN")
+      // no mass created: floors only ever lose
+      assert(out("a") + out("b") <= S)
+      assert(out("a") + out("b") >= S - 10)
+    }
+  }
+
+  test("dangling known answers: hand-derived integer ranks for 1 and 2 " +
+    "rounds on both arms") {
+    // a -> b (w=3), a -> c (w=1); b and c dangling. n = 3, base =
+    // (0.15*S)/3 = 5e10, r0 = S/3 = 333,333,333,333 each. Round 1:
+    // in(b) = (r0*3) div 4, in(c) = r0 div 4, dshare = (r0+r0) div 3,
+    // rank = base + (85 * (in + dshare)) div 100 — every floor matters
+    val nodes = Seq("a", "b", "c")
+    val edges = Seq(("a", "b", 3L), ("a", "c", 1L))
+    val expected = Map(
+      1 -> Map("a" -> 238888888888L, "b" -> 451388888887L,
+        "c" -> 309722222221L),
+      2 -> Map("a" -> 265648148146L, "b" -> 417939814812L,
+        "c" -> 316412037035L))
+    for (maxN <- bothArms; (iters, want) <- expected)
+      assert(ranks(nodes, edges, iters, maxN) == want,
+        s"iters=$iters maxN=$maxN")
   }
 
   test("weights shift mass: heavier edge's target outranks, and total " +
@@ -176,58 +209,34 @@ class GraphSpec extends AnyFunSuite {
     assert(lpB.sameElements(lpS))
   }
 
-  test("state squeeze on/off is bit-equal on both arms (r22: the " +
-    "n/m-derived narrow coalesce of checkpoints and bcast-arm edge " +
-    "scans only merges partitions — the graph-squeeze-ab probe's " +
-    "correctness pin)") {
+  test("state squeeze width is bit-equal on both arms: default vs one " +
+    "row per partition") {
+    // the n/m-derived narrow coalesce of checkpoints and bcast-arm edge
+    // scans only merges partitions
     val nodes = (1 to 40).map(i => s"n$i").toDF("node")
     val edges = (1 to 40).flatMap { i =>
       Seq((s"n$i", s"n${i % 40 + 1}", 1L + i % 3),
         (s"n$i", s"n${(i * 7) % 40 + 1}", 1L))
     }.toDF("src", "dst", "w")
-    for (maxN <- Seq(Long.MaxValue, 0L)) {
-      val prOn = Graph.pageRank(nodes, edges, iters = 5,
+    for (maxN <- bothArms) {
+      val prDefault = Graph.pageRank(nodes, edges, iters = 5,
         bcastMaxN = maxN, stateRowsPerPart = Graph.StateRowsPerPart)
         .collect().map(r => (r.getString(0), r.getLong(1)))
       Caches.clear()
-      val prOff = Graph.pageRank(nodes, edges, iters = 5,
-        bcastMaxN = maxN, stateRowsPerPart = 0L)
+      val prWide = Graph.pageRank(nodes, edges, iters = 5,
+        bcastMaxN = maxN, stateRowsPerPart = 1L)
         .collect().map(r => (r.getString(0), r.getLong(1)))
       Caches.clear()
-      assert(prOn.sameElements(prOff), s"pageRank maxN=$maxN")
-      val lpOn = Graph.labelProp(nodes, edges, iters = 5,
+      assert(prDefault.sameElements(prWide), s"pageRank maxN=$maxN")
+      val lpDefault = Graph.labelProp(nodes, edges, iters = 5,
         bcastMaxN = maxN, stateRowsPerPart = Graph.StateRowsPerPart)
         .collect().map(r => (r.getString(0), r.getString(1)))
       Caches.clear()
-      val lpOff = Graph.labelProp(nodes, edges, iters = 5,
-        bcastMaxN = maxN, stateRowsPerPart = 0L)
+      val lpWide = Graph.labelProp(nodes, edges, iters = 5,
+        bcastMaxN = maxN, stateRowsPerPart = 1L)
         .collect().map(r => (r.getString(0), r.getString(1)))
       Caches.clear()
-      assert(lpOn.sameElements(lpOff), s"labelProp maxN=$maxN")
-    }
-  }
-
-  test("dangling-flag-in-state on/off is bit-equal on both arms (r22 " +
-    "session 3: the nd carry column replaces the per-round dangNodes " +
-    "semi-join — same integer sums over the same sets; the " +
-    "graph-dang-ab probe's correctness pin)") {
-    // dangling vertices REQUIRED: nodes 31..40 have no out-edges, so
-    // the nd=true path carries real mass every round
-    val nodes = (1 to 40).map(i => s"n$i").toDF("node")
-    val edges = (1 to 30).flatMap { i =>
-      Seq((s"n$i", s"n${i % 40 + 1}", 1L + i % 3),
-        (s"n$i", s"n${(i * 7) % 40 + 1}", 1L))
-    }.toDF("src", "dst", "w")
-    for (maxN <- Seq(Long.MaxValue, 0L)) {
-      val on = Graph.pageRank(nodes, edges, iters = 5, bcastMaxN = maxN,
-        dangInState = true)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      Caches.clear()
-      val off = Graph.pageRank(nodes, edges, iters = 5, bcastMaxN = maxN,
-        dangInState = false)
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-      Caches.clear()
-      assert(on.sameElements(off), s"pageRank maxN=$maxN")
+      assert(lpDefault.sameElements(lpWide), s"labelProp maxN=$maxN")
     }
   }
 
@@ -244,15 +253,16 @@ class GraphSpec extends AnyFunSuite {
     // real corpus), which only the explicit hint guarantees
     val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(thresholdKey)
-    // squeeze OFF for the pin: this test isolates the BcastMaxN join-
-    // strategy contract, and the r22 state squeeze independently
-    // removes the shuffle arm's state-side exchange on a fixture this
-    // small (coalesce(1) → SinglePartition survives the checkpoint),
-    // which would equalize the raw exchange counts
-    def planOf(maxN: Long): String = {
+    // one state row per partition for the pin: this test isolates the
+    // BcastMaxN join-strategy contract, and at the default width the
+    // state squeeze independently removes the shuffle arm's state-side
+    // exchange on a fixture this small (coalesce(1) → SinglePartition
+    // survives the checkpoint), which would equalize the raw exchange
+    // counts; at two partitions the state keeps unknown partitioning
+    def planOf(maxN: Long): SparkPlan = {
       val p = Graph.pageRank(nodes, edges, iters = 1, bcastMaxN = maxN,
-          stateRowsPerPart = 0L)
-        .queryExecution.executedPlan.toString
+          stateRowsPerPart = 1L)
+        .queryExecution.executedPlan
       Caches.clear()
       p
     }
@@ -261,13 +271,18 @@ class GraphSpec extends AnyFunSuite {
         spark.conf.set(thresholdKey, "-1")
         (planOf(Long.MaxValue), planOf(0L))
       } finally spark.conf.set(thresholdKey, saved)
-    def exchanges(p: String): Int =
-      "(?<!Broadcast)Exchange".r.findAllIn(p).length
+    // the round's own shuffle operators, walked through the adaptive
+    // wrapper but not into cached relations: a persisted frame's plan
+    // runs once at setup, and once materialized (the broadcast arm
+    // counts its edge frame) its text prints both the initial and the
+    // final adaptive plan, so a text count would weigh setup, not rounds
+    def exchanges(p: SparkPlan): Int =
+      collect(p) { case x: ShuffleExchangeLike => x }.size
     // the contribution join goes broadcast-hash (edge side streams,
     // no exchange, no sort); the in-carry join deliberately stays on
     // the shuffle path (broadcasting the aggregate output serializes
     // it through a driver collect — the graph-ab measurement)
-    assert(planB.contains("BroadcastHashJoin"))
+    assert(planB.toString.contains("BroadcastHashJoin"))
     assert(exchanges(planB) < exchanges(planS),
       s"broadcast arm must shuffle strictly less:\n$planB\n----\n$planS")
   }
