@@ -154,8 +154,8 @@ object Bench {
       "q121_vocab_encode",
       // the production standing-index screens: each run times the full
       // registered lifecycle (bootstrap write + append + screen) — the
-      // steady-state screen-only cost is the index-ab ScaleProbe's
-      // subject; benching the registered form here makes the flagship
+      // steady-state screen-only cost is SCALING.md's index-ab probe
+      // row; benching the registered form here makes the flagship
       // driver-visible instead of probe-only
       "q98_neardup_indexed", "q99_exact_indexed",
       // round-14: the full delete/compact lifecycle (bootstrap + append

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with the scale-aware defaults every entry point shares.
   *
-  * Local testing runs `local[32]`, but every knob is chosen as if the same
-  * plan ran on a 1000-executor cluster: AQE on (runtime coalesce + skew-join
-  * splitting), shuffle partitions sized to the parallelism rather than the
-  * 200 default, and UTC so date bucketing is deterministic.
+  * The specs run `local[2]`, the benchmark `local[nproc]`, and the mains
+  * `local[SPARK_GRAFT_CPUS]` (default 32), but every knob is chosen as if
+  * the same plan ran on a 1000-executor cluster: AQE on (runtime coalesce +
+  * skew-join splitting), shuffle partitions sized to the parallelism rather
+  * than the 200 default, and UTC so date bucketing is deterministic.
   */
 object GraftSession {
   def builder(appName: String, cpus: String): SparkSession.Builder =
@@ -19,6 +20,12 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // Spark's generated-class cache holds 100 entries by default, but one
+      // listing cycle compiles more than 100 distinct classes and one index
+      // maintenance round about 230, so every call recompiled its plan.
+      // The cache is JVM-global and sized once, from the conf of the first
+      // query to generate code, so this is fixed here for every entry point.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // events.parquet has shipped as TIMESTAMP(NANOS), which vanilla
       // Spark rejects outright; this flag reads that layout as Long ns
       // so Tables.normalizeTs can convert it (exactly DuckDB's

@@ -454,8 +454,9 @@ object CorpusQueries {
 
   /** The inline synthesis bodies behind [[stagedFixture]] — one
     * dispatcher shared by the registered queries (which stage the
-    * result) and the img-synth ScaleProbe (which times the synthesis
-    * itself, since the staged queries no longer pay it). */
+    * result) and the former img-synth probe (which timed the synthesis
+    * itself, since the staged queries no longer pay it; restore it with
+    * `git show a5d0ed7:src/main/scala/graft/ScaleProbes.scala`). */
   private[graft] def imageFixture(s: SparkSession, d: String,
                                   name: String): DataFrame = {
     val g = expr("doc_id div 4")
@@ -861,7 +862,7 @@ object CorpusQueries {
     * timed body is read → decode → dedup, the deployment shape: a
     * real corpus STORES its image bytes, it does not re-derive them
     * per scan. Synthesis cost is measured separately (the img-synth
-    * ScaleProbe). */
+    * probe in `git show a5d0ed7:src/main/scala/graft/ScaleProbes.scala`). */
   private def stagedFixture(s: SparkSession, d: String, name: String)(
       build: => DataFrame): DataFrame = {
     val path = fixturesStaged.computeIfAbsent(s"$d/$name", _ => {

@@ -338,7 +338,7 @@ object LlmQueries {
     * true-overlap density instead of C(block, 2). The block self-join
     * ([[TextOps.ngramJaccardBest]]) remains the named pedagogical
     * variant for dense/small vocabularies; NgramVariantSpec pins the
-    * two bit-equal and the `ngram-ab` ScaleProbe measures them.
+    * two bit-equal and SCALING.md's `ngram-ab` probe row measures them.
     */
   def q37NgramJaccard(s: SparkSession, d: String): DataFrame =
     TextOps.ngramJaccardBestInverted(Tables.documents(s, d), "doc_id",

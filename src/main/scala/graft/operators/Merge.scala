@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * shuffles both sides once on `url` — or neither side at all when both
   * are written through [[graft.sources.Sinks.writeBucketed]] on `url`,
   * the documented canonical-table layout: the full-outer SMJ then plans
-  * ZERO Exchange (BucketingSpec pins the merge plan; the bucketed-merge
-  * ScaleProbe measures the saving). Everything else is row-local
-  * expression work.
+  * ZERO Exchange (BucketingSpec pins the merge plan; SCALING.md's
+  * bucketed-merge probe row measures the saving). Everything else is
+  * row-local expression work.
   *
   * Faithful semantics worth naming (all from models/listing.py:103-167):
   *  - Python truthiness gates fill/overwrite: 0, "" and null all count as
@@ -79,7 +79,7 @@ object Merge {
     *    code) partition, continuing after the current table's max index;
     *  - current-only url → unchanged passthrough.
     *
-    * SKEW POSTURE (measured by the merge-skew ScaleProbe): AQE's
+    * SKEW POSTURE (SCALING.md's merge-skew probe row): AQE's
     * skew-join split does NOT apply here — Spark's OptimizeSkewedJoin
     * can split inner/semi/anti joins and the non-preserved side of
     * one-sided outers, but a FULL OUTER join preserves both sides, so
@@ -162,7 +162,6 @@ object Merge {
             newC.cast("string").as("new")))
       }: _*),
       _.isNotNull)
-    val changed = isMatch && size(changesArr) > 0
 
     // sequential reid_id for new urls: previous-month bucket of asOf
     // (models/listing.py:68-71 pins the bucket; we parameterize on asOf)
@@ -187,15 +186,11 @@ object Merge {
     val withMax = joined.join(broadcast(maxPerSource),
       col("i.source") === col("m_source"), "left_outer")
 
-    val mergedVals: Map[String, Column] = rules.map { case (f, v, _, _, _) =>
-      f -> when(isMatch, v).when(isNew, n(f)).otherwise(o(f))
-    }.toMap
-
-    val price = mergedVals("price")
-    val currency = mergedVals("currency")
-    val ptype = mergedVals("property_type")
-
-    val outCols: Seq[Column] =
+    // Stage 1 evaluates every merged value and the change log once per
+    // row; stage 2 reads `changes` twice (output and `changed`), so
+    // CollapseProject keeps the stages apart and the 19-field array is
+    // not re-evaluated for updated_at, tab and changed.
+    val stage1: Seq[Column] =
       Seq(
         coalesce(col("c.url"), col("i.url")).as("url"),
         coalesce(col("c.source"), col("i.source")).as("source"),
@@ -207,15 +202,29 @@ object Merge {
         when(isNew, n("region")).otherwise(o("region")).as("region"),
         when(isNew, n("scraped_at")).otherwise(o("scraped_at")).as("scraped_at"),
         when(isNew, asOfTs).otherwise(o("created_at")).as("created_at"),
-        when(changed, asOfTs)
-          .when(isNew, asOfTs)
-          .otherwise(o("updated_at")).as("updated_at"),
-        when(changed || isNew, classifyTab(price, currency, ptype))
-          .otherwise(o("tab")).as("tab")) ++
-        compareFields.map(f => mergedVals(f).as(f)) ++
-        Seq(changesArr.as("changes"), isNew.as("is_new"), changed.as("changed"))
+        o("updated_at").as("_old_updated_at"),
+        o("tab").as("_old_tab")) ++
+        rules.map { case (f, v, _, _, _) =>
+          when(isMatch, v).when(isNew, n(f)).otherwise(o(f)).as(f)
+        } ++
+        Seq(changesArr.as("changes"), isNew.as("is_new"), isMatch.as("_match"))
 
-    withMax.select(outCols: _*)
+    val changed = col("_match") && size(col("changes")) > 0
+    val isNewCol = col("is_new")
+    val outCols: Seq[Column] =
+      Seq("url", "source", "reid_id", "title", "region", "scraped_at",
+        "created_at").map(col) ++
+        Seq(
+          when(changed, asOfTs)
+            .when(isNewCol, asOfTs)
+            .otherwise(col("_old_updated_at")).as("updated_at"),
+          when(changed || isNewCol,
+            classifyTab(col("price"), col("currency"), col("property_type")))
+            .otherwise(col("_old_tab")).as("tab")) ++
+        compareFields.map(col) ++
+        Seq(col("changes"), isNewCol, changed.as("changed"))
+
+    withMax.select(stage1: _*).select(outCols: _*)
   }
 
   /** Delist-on-missing (reference reid/spiders/base.py:14-30 redirect/404

@@ -446,8 +446,8 @@ object TextOps {
   /** [[incrementalNearDup]] over pre-built (doc_id, shset) frames — the
     * steady-state entry point: in production `oldSh` IS the standing
     * corpus index (persisted/bucketed), so an increment pays only its
-    * own hashing plus the asymmetric probe. The `incremental-ab`
-    * ScaleProbe measures exactly this arm.
+    * own hashing plus the asymmetric probe. SCALING.md's
+    * `incremental-ab` probe row measures exactly this arm.
     */
   private[graft] def incrementalNearDupFrom(oldSh: DataFrame,
                                             newSh: DataFrame,
@@ -1253,8 +1253,8 @@ object TextOps {
     * OVERLAP, so its pair count tracks true-overlap density instead of
     * C(block, 2); on dense/small vocabularies the per-shingle buckets
     * blow up quadratically and this block self-join with the native
-    * intersect wins. NgramVariantSpec pins the two bit-equal; the
-    * `ngram-ab` ScaleProbe measures them (a wash at sf0.1 on the
+    * intersect wins. NgramVariantSpec pins the two bit-equal; SCALING.md's
+    * `ngram-ab` probe row measures them (a wash at sf0.1 on the
     * synthetic corpus — 1.02 vs 1.03 s — because its blocks are small
     * and overlap moderate; the trade only opens up with block size and
     * vocabulary). At 100 TB you'd pick per-dataset; blocks there come

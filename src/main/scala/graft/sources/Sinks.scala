@@ -83,7 +83,7 @@ object Sinks {
     *    url"): current and incoming tables written through this on
     *    `url` make [[graft.Merge.merge]]'s full-outer SMJ plan ZERO
     *    Exchange on either side (BucketingSpec pins the merge plan;
-    *    the bucketed-merge ScaleProbe measures the saving). The
+    *    SCALING.md's bucketed-merge probe row measures the saving). The
     *    canonical table is re-written through this writer each merge
     *    cycle (`overwrite`), so the one-time layout cost amortizes
     *    across every later merge;
@@ -387,7 +387,7 @@ object Sinks {
     * dimension and useless ones on the other; z-order trades a little
     * of each for pruning on both — the standard layout for a 100 TB
     * fact table queried by (tenant, time), (user, time), (geo, time).
-    * The zorder-ab ScaleProbe measures the pruning win; ZOrderSpec
+    * SCALING.md's zorder-ab probe row measures the pruning win; ZOrderSpec
     * pins the interleave math and the locality property.
     *
     * `numFiles` is the pruning granularity knob: files ≈ row-groups

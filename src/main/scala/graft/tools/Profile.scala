@@ -4,7 +4,10 @@ import graft.{Caches, GraftSession, SparkEntry}
 
 /** Timing helper for one query: repeated noop-sink materializations
   * (same methodology as Bench) so a change's effect on a single query
-  * is measurable without the full bench loop. Usage:
+  * is measurable without the full bench loop. Each iteration prints its
+  * wall time and how many classes it compiled; a query whose later
+  * iterations still compile is recompiling its plan on every call.
+  * Usage:
   *   runMain graft.tools.Profile <sfDir> <query> [iters]
   */
 object Profile {
@@ -43,13 +46,19 @@ object Profile {
     val fn = SparkEntry.queries(name)
     for (i <- 1 to iters) {
       val t0 = System.nanoTime()
+      val c0 = compiles()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       Caches.clear()
-      println(f"[profile] $name iter $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      val secs = (System.nanoTime() - t0) / 1e9
+      println(f"[profile] $name iter $i: $secs%.3f s, ${compiles() - c0} compiles")
       if (!rows.isEmpty) {
         rows.forEach(r => println(r)); rows.clear()
       }
     }
     spark.stop()
   }
+
+  /** Generated classes compiled so far in this JVM, local-mode tasks included. */
+  private[graft] def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -152,4 +152,15 @@ class MergeSpec extends AnyFunSuite {
       .filter(col("url") === "x").collect().head
     assert(out.getAs[String]("reid_id") == "REID_26_07_S9_001")
   }
+
+  test("the change log is built once: one ArrayFilter in the optimized plan") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    // walk the expression trees, not the plan text: wide projections
+    // truncate in toString
+    val plan = Merge.merge(df(row("u")), df(row("u")), asOf)
+      .queryExecution.optimizedPlan
+    val builds = plan.flatMap(_.expressions)
+      .map(_.collect { case f: ArrayFilter => f }.size).sum
+    assert(builds == 1, s"the change log is built $builds times")
+  }
 }
