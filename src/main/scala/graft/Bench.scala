@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * emits ONE JSON line {"metric":...,"queries":{...}} for the driver —
-  * both on stdout and to bench_out.json (sbt log noise buried the stdout
-  * line in round 1; the file is the reliable channel).
+/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR as one
+  * fixed sweep — every row [[Draws]] timed draws, publishing the min and
+  * the spread — writes bench_out.json with the run's [[conditions]], and
+  * prints the one-line metric JSON as the LAST stdout line (consumers
+  * keep only a bounded output tail, and Spark/sbt noise printed after
+  * the line would push it out).
   *
   * Timing = full materialization via the noop sink (every row produced on
   * the executors, nothing collected). count() would let column pruning
@@ -14,31 +16,17 @@ import java.nio.file.{Files, Paths}
   * A query that throws is reported as -1 in "queries" and listed in
   * "errors" — never as a fake-fast timing.
   *
-  * r19 budget posture: the 142-row headline at unconditional min-of-3
-  * outgrew the driver's wall-clock cap (BENCH_r18 rc=124 — the first
-  * round with no driver-verified perf artifact). Four levers:
-  * (a) per-row iteration scheduling keyed on the committed history
-  * ([[scheduledIters]]), (b) a FRESH per-run warehouse (a long
-  * session had accreted 242 standing tables, taxing every lifecycle
-  * gate's bootstrap ~20% in catalog/listing overhead — harness
-  * artifact, not plan cost; SCALING.md), (c) a split-run mode
-  * (SPARK_GRAFT_BENCH_PART=i/n) that lets the driver bench the headline
-  * in two bounded invocations and still get one merged bench_out.json,
-  * and (d) — measured to be the BIGGEST term — a family warmup
-  * instead of the all-rows warmup (see the warmup comment in main:
-  * warming all 145 rows cost ~1700 s of a 2533 s wall; the family set
-  * warms the shared state at ~5% of that).
-  *
-  * r20, after a SECOND consecutive rc=124: every row with committed
-  * history runs ONE draw (~150 draws total), the history floor is the
-  * min over the last six committed snapshots (the one-draw ratchet
-  * fix), and a post-pass retries only the rows whose draw exceeds
-  * 1.4× the run's own median-drift-adjusted floor — see
-  * [[scheduledIters]] and the retry-pass comment in [[main]]. Every
-  * run publishes its "box_drift" so BenchDiff can normalize uniform
-  * box-era movement out of the round-over-round flags.
+  * Compare two runs with `graft.tools.BenchDiff prev.json curr.json`,
+  * which refuses runs taken under different conditions.
   */
 object Bench {
+
+  /** Timed draws per row, fixed so every commit runs the same benchmark.
+    * Sized from a measured one-draw sweep at sf0.1 on a 4-core host:
+    * warmup 63 s, one timed sweep 875 s, so warmup plus [[Draws]] sweeps
+    * must fit the 2,670 s wall budget — three (2,689 s) do not, two
+    * (1,813 s) do. */
+  val Draws = 2
 
   /** BENCH-ONLY production-hash twins of the two heaviest shingle
     * scans: the registered q36/q76 stay on md5 (DuckDB reproduces it —
@@ -65,19 +53,14 @@ object Bench {
     "q125x_langid_capped" -> ((s, d) =>
       graft.CorpusOps.langIdTrigram(Tables.documents(s, d), "doc_id",
         "text", "lang", minDocGramCount = 2)),
-    // r21 (VERDICT item 2): the CODE-INDEPENDENT drift control. The
-    // published box_drift (median draw/anchored-floor over the fleet)
-    // disagreed with the matched-query median by ~50% in r20, and the
-    // r20 ADVICE's deeper point stands: any fleet-derived estimate is
-    // contaminated by a uniform plan regression, because the fleet IS
-    // the code under test. This row is pure Spark built-ins over
+    // The CODE-INDEPENDENT drift control: pure Spark built-ins over
     // spark.range — no graft operator code, no input data — so its
-    // round-over-round ratio moves ONLY with the box/JVM era. It is a
-    // shuffle-shaped probe by design (64M rows hashed, partial-agg'd
-    // and exchanged to 1M groups: the median headline row's shape).
-    // BenchDiff normalizes by the MIN of this row's ratio and
-    // box_drift — see BenchDiff.flag — so box drift can be divided out
-    // without a uniform code regression forgiving itself.
+    // run-over-run ratio moves only with the host/JVM, never with the
+    // code under test (any estimate derived from the other rows is
+    // contaminated by a uniform plan regression). Shuffle-shaped by
+    // design (64M rows hashed, partial-agg'd and exchanged to 1M
+    // groups: the median headline row's shape). BenchDiff normalizes
+    // by the MIN of its drift bases — see BenchDiff.flag.
     "q00x_drift_probe" -> ((s, _) => {
       import org.apache.spark.sql.functions._
       s.range(0, 64000000L, 1, 64)
@@ -88,16 +71,12 @@ object Bench {
         .groupBy("k")
         .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
     }),
-    // r22 (VERDICT item 7): the SECOND probe leg — CPU-bound, NO
-    // shuffle (the only exchange is the single final-aggregate row).
-    // q00x is shuffle-shaped by design, so when it diverges from the
-    // matched fleet the diff cannot say WHICH resource drifted (r21's
-    // driver run: probe 1.56× while CPU-bound rows matched — shuffle
-    // I/O, but only inferable by hand). With both legs published,
-    // BenchDiff attributes: probe_cpu moved too → box/JVM era;
-    // probe alone → shuffle path; neither but the fleet did → suspect
-    // the code. Same pure-built-ins posture: md5 over short strings is
-    // the row-local kernel shape (hashing, codecs, text ops).
+    // The second probe leg — CPU-bound, NO shuffle (the only exchange
+    // is the single final-aggregate row). With both legs published,
+    // BenchDiff attributes a divergence: probe_cpu moved too → host/JVM
+    // drift; the shuffle probe alone → the shuffle path; neither while
+    // the fleet moved → suspect the code. md5 over short strings is the
+    // row-local kernel shape (hashing, codecs, text ops).
     "q00y_drift_probe_cpu" -> ((s, _) => {
       import org.apache.spark.sql.functions._
       // sized to land WELL over the sub-second noise floor (a drift
@@ -122,9 +101,7 @@ object Bench {
   /** [[headline]] with the subset request injectable (spec hook). */
   private[graft] def headline(subsetEnv: Option[String]): Seq[String] = {
     val preferred = Seq(
-      // first row: the code-independent drift control (benchOnly; r21).
-      // Exempt from rotation like q02 — a drift basis that sits rounds
-      // out is no basis
+      // first rows: the code-independent drift controls (benchOnly)
       "q00x_drift_probe", "q00y_drift_probe_cpu",
       "q02_pricing_summary", "q05_latest_per_group", "q10_join_agg",
       "q11_join_5way", "q14_self_join_dup", "q16_window_seq_id",
@@ -283,156 +260,16 @@ object Bench {
     }
   }
 
-  /** Newest committed full-run snapshot (BENCH_OUT_r{N}.json) in `dir`
-    * — the autodiff baseline. */
-  private[graft] def newestSnapshot(
-      dir: java.io.File = new java.io.File(".")): Option[(Int, String)] =
-    committedSnapshots(dir, 1).headOption
-
-  /** The newest `k` committed snapshots, newest first. */
-  private[graft] def committedSnapshots(
-      dir: java.io.File = new java.io.File("."),
-      k: Int = 4): Seq[(Int, String)] = {
-    val rx = "BENCH_OUT_r(\\d+)\\.json".r
-    Option(dir.listFiles()).toSeq.flatten.flatMap(f => f.getName match {
-      case rx(n) => Some((n.toInt, f.getName))
-      case _ => None
-    }).sortBy(-(_: (Int, String))._1).take(k)
-  }
-
-  /** Per-row anchored floor: the MIN over the last `k` committed
-    * snapshots, not just the newest (r20 — ADVICE item 1 / VERDICT
-    * item 3). The one-draw schedule made the newest snapshot an
-    * upward-biased single cold draw; anchoring the deviation gate and
-    * the diff prior to it let a 22.55 s q143 draw (ABA floor ~13 s)
-    * ratchet itself in as next round's baseline. SIX snapshots, not
-    * four: a single round can commit several full runs (r20 committed
-    * three), so a 4-window can fill entirely with one box era — q143's
-    * warm 13.07 s floor (r18) fell out of the 4-window the moment the
-    * r21/r22 drifted-era snapshots landed; the 6-window spans at least
-    * two eras.
-    */
-  private[graft] def anchoredMin(
-      dir: java.io.File = new java.io.File("."),
-      k: Int = 6): Map[String, Double] =
-    committedSnapshots(dir, k).map { case (_, f) =>
-      graft.tools.BenchDiff.mapOf(
-        Files.readString(dir.toPath.resolve(f)), "queries")
-        .filter(_._2 > 0)
-    }.foldLeft(Map.empty[String, Double]) { (acc, m) =>
-      m.foldLeft(acc) { case (a, (q, v)) =>
-        a.updated(q, math.min(a.getOrElse(q, Double.MaxValue), v)) }
-    }
-
-  /** Per-row timed-iteration schedule (r19, rewritten r20 — VERDICT
-    * item 1). r19's schedule (one draw only for tight-history rows
-    * >= 0.5 s, min-of-2/3 elsewhere) still ran 338 draws / 1465 s of
-    * timed wall and the driver invocation hit rc=124 for the second
-    * consecutive round. r20: ANY row with a committed anchored floor
-    * runs ONE draw — including the ~39 sub-half-second rows, whose
-    * min-of-3 cost far more wall in 2.55×-min cold draws than their
-    * ~14 s of mins suggested — for ~145 draws total. Only genuinely
-    * NEW rows (no committed history) keep min-of-`iterations`. The
-    * safety net is the drift-aware retry pass in [[main]]: after all
-    * first draws, the run's box-drift factor is estimated as the
-    * median draw/floor ratio, and rows whose draw exceeds 1.4× the
-    * drift-adjusted floor re-time once (bounded set), publishing the
-    * min — a session-context outlier recovers its level while a real
-    * regression still publishes high and trips BenchDiff.
-    *
-    * Explicit overrides bypass the schedule entirely (r19 ADVICE): a
-    * SPARK_GRAFT_BENCH_ITERS setting or a subset run
-    * (SPARK_GRAFT_BENCH_QUERIES) is the adjudication re-measure case
-    * where min-of-N is exactly what was asked for.
-    */
-  private[graft] def scheduledIters(name: String, iterations: Int,
-      anchor: Map[String, Double], bypass: Boolean): Int =
-    if (bypass || !anchor.contains(name)) iterations else 1
-
-  /** Interleaved 1-based part slice for SPARK_GRAFT_BENCH_PART=i/n:
-    * part i takes headline indexes i-1, i-1+n, i-1+2n, … Interleaving
-    * spreads the heavy lifecycle rows across parts far more evenly
-    * than a contiguous cut of the (roughly cost-sorted-by-accretion)
-    * headline list, so each part fits the same per-invocation budget.
-    */
-  private[graft] def partSlice(names: Seq[String], part: Int,
-      of: Int): Seq[String] = {
-    require(of >= 1 && part >= 1 && part <= of,
-      s"SPARK_GRAFT_BENCH_PART must be i/n with 1 <= i <= n, got $part/$of")
-    names.zipWithIndex.collect { case (n, i) if i % of == part - 1 => n }
-  }
-
-  /** Every-other-round rotation for STABLE rows (r20 — the VERDICT's
-    * remaining budget lever after the one-draw schedule still drew
-    * 185 cold draws / 1686 s on a 2.4×-drifted box): a row whose
-    * committed history is flat gets re-measured every OTHER round —
-    * its cross-round estimator is the history, and BenchDiff still
-    * sees it on the rounds it runs. Stability is judged on
-    * DRIFT-NORMALIZED values (each snapshot value divided by its
-    * snapshot's median — raw values move 2-3× with box era, together):
-    * ≥ 2 appearances in the window whose normalized series stays
-    * within 2× (cold one-draw snapshots inflate rows
-    * HETEROGENEOUSLY — sub-second rows more than lifecycle gates — so
-    * a tighter band mistakes cold-draw noise for instability: 1.5×
-    * rotated only 38/145 on the r21 snapshot, 2× rotates 61).
-    * Unstable rows, new rows, and the q02 drift control
-    * always bench; explicit ITERS/subset runs bypass rotation like
-    * the rest of the schedule, and SPARK_GRAFT_BENCH_ALL=1 forces a
-    * full sweep. Halves alternate by name-hash parity against the
-    * round index the run will snapshot as, so consecutive rounds
-    * cover everything.
-    */
-  private[graft] def rotationSkips(
-      dir: java.io.File = new java.io.File("."),
-      k: Int = 4): Set[String] = {
-    val snaps = committedSnapshots(dir, k)
-    if (snaps.size < 3) return Set.empty
-    val nextRound = snaps.head._1 + 1
-    val maps = snaps.map { case (_, f) =>
-      graft.tools.BenchDiff.mapOf(
-        Files.readString(dir.toPath.resolve(f)), "queries")
-        .filter(_._2 > 0)
-    }.filter(_.nonEmpty)
-    val norm = maps.map { m =>
-      val vs = m.values.toSeq.sorted
-      val med = vs(vs.size / 2)
-      m.map { case (q, v) => q -> v / med }
-    }
-    norm.flatMap(_.keys).distinct.filter { q =>
-      val series = norm.flatMap(_.get(q))
-      q != "q02_pricing_summary" && q != "q00x_drift_probe" &&
-        q != "q00y_drift_probe_cpu" &&
-        series.size >= 2 &&
-        series.max / series.min <= 2.0 &&
-        (q.## & 1) == (nextRound & 1)
-    }.toSet
-  }
-
-  /** Box boot epoch (btime from /proc/stat) — the default part-run
-    * session token: stable across invocations of one driver session on
-    * one box, different across reboots and boxes. Empty when /proc is
-    * unavailable (token check then degrades to the age guard). */
-  private[graft] def bootToken: String =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try src.getLines().find(_.startsWith("btime "))
-        .map(_.split("\\s+")(1)).getOrElse("")
-      finally src.close()
-    } catch { case _: Throwable => "" }
-
-  /** Short git HEAD of the working tree, "" outside a repo — joined
-    * into the default run token (r21, r20 ADVICE): a boot-epoch-only
-    * token let part files produced by DIFFERENT CODE REVISIONS on the
-    * same boot merge silently as one published run. Read from .git
+  /** Short git HEAD of the working tree, "" outside a repo — recorded in
+    * [[conditions]] so a run names the code it measured. Read from .git
     * directly (no subprocess — the bench must not depend on a git
     * binary). */
   private[graft] def gitHeadToken(dir: java.io.File =
       new java.io.File(".")): String =
     try {
       // .git may be a DIRECTORY (normal clone) or a gitdir-pointer
-      // FILE (git worktree — the repo's own adjudication protocol
-      // runs bench from worktrees, r21 review fix); worktree gitdirs
-      // additionally keep refs in the commondir
+      // FILE (git worktree); worktree gitdirs additionally keep refs
+      // in the commondir
       val dotGit = dir.toPath.resolve(".git")
       val gitDir =
         if (Files.isDirectory(dotGit)) dotGit
@@ -462,207 +299,96 @@ object Bench {
                 .map(_.split("\\s+")(0)).getOrElse("")
             }
         } else head
-      if (sha.isEmpty)
-        System.err.println("[bench] WARNING: could not resolve the git " +
-          "HEAD — the run token degrades to the boot epoch and the " +
-          "cross-revision part-merge guard is OFF for this run")
       sha.take(12)
-    } catch {
-      case _: Throwable =>
-        System.err.println("[bench] WARNING: could not resolve the git " +
-          "HEAD — the run token degrades to the boot epoch and the " +
-          "cross-revision part-merge guard is OFF for this run")
-        ""
-    }
+    } catch { case _: Throwable => "" }
 
-  /** Extract a JSON string field ("sf":"/root/...") — minimal sibling
-    * of BenchDiff.mapOf. */
-  private[graft] def strOf(json: String, key: String): Option[String] =
-    ("\"" + key + "\"\\s*:\\s*\"([^\"]*)\"").r
-      .findFirstMatchIn(json).map(_.group(1))
+  /** The conditions a run was taken under, as rendered JSON values.
+    * BenchDiff refuses to compare runs whose conditions differ;
+    * `git_head` is recorded but is not a condition. `cpus` is the
+    * session's `local[N]`, which need not match the host's cores. */
+  private[graft] def conditions(cpus: Int, sfDir: String,
+      sparkVersion: String, gitHead: String): Seq[(String, String)] = Seq(
+    "cpus" -> cpus.toString,
+    "host_cpus" -> Runtime.getRuntime.availableProcessors.toString,
+    "sf" -> quote(sfDir),
+    "java.version" -> quote(System.getProperty("java.version")),
+    "spark.version" -> quote(sparkVersion),
+    "iters" -> Draws.toString,
+    "git_head" -> quote(gitHead))
 
-  /** Extract a JSON string array ("errors":["a","b"]) — sibling of
-    * BenchDiff.mapOf, same deliberately-minimal posture. */
-  private[graft] def listOf(json: String, key: String): Seq[String] =
-    ("\"" + key + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
-      .findFirstMatchIn(json).toSeq.flatMap(m =>
-        "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
+  private def quote(s: String): String = "\"" + s + "\""
 
-  private def fmtMap(m: Seq[(String, String)]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+  private def obj(m: Seq[(String, String)]): String =
+    m.map { case (k, v) => quote(k) + ":" + v }.mkString("{", ",", "}")
 
-  /** Run BenchDiff against the newest committed snapshot and roll this
-    * run's complete map forward as the next snapshot — the autodiff
-    * tail shared by full runs and completed part merges. Skipped when
-    * the run had errors (a failed run must never become the baseline).
-    */
-  private def diffAndSnapshot(outFile: String): Unit =
-    newestSnapshot().foreach { case (n, prev) =>
-      graft.tools.BenchDiff.main(Array(prev, outFile,
-        s"BENCH_DIFF_r${n + 1}.json"))
-      Files.copy(Paths.get(outFile),
-        Paths.get(s"BENCH_OUT_r${n + 1}.json"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** The published JSON for timed `draws` per row (-1 marks a failed
+    * row): (the stdout line, the bench_out.json body). The stdout line
+    * lists only spreads >= 25% to stay short; the file carries every
+    * spread and the conditions. `spread_min_pct` says which map a
+    * consumer holds. */
+  private[graft] def report(draws: Seq[(String, Seq[Double])],
+      errors: Seq[String], sfDir: String,
+      conds: Seq[(String, String)]): (String, String) = {
+    val mins = draws.map { case (k, t) =>
+      k -> (if (t.exists(_ < 0)) -1.0 else t.min) }
+    val total = mins.map(_._2).filter(_ >= 0).sum
+    // per-query spread (max/min − 1, %) across the timed draws: the
+    // published noise band — a run-over-run delta smaller than the
+    // spread is measurement, not engineering
+    def spreads(minPct: Double) = draws.collect {
+      case (k, t) if t.min > 0 && (t.max / t.min - 1) * 100 >= minPct =>
+        k -> f"${(t.max / t.min - 1) * 100}%.1f"
     }
+    def line(minPct: Int, extra: Seq[(String, String)]) = obj(Seq(
+      "metric" -> quote("total"), "value" -> f"$total%.3f",
+      "unit" -> quote("sec"),
+      "queries" -> obj(mins.map { case (k, v) => k -> f"$v%.3f" }),
+      "spread_pct" -> obj(spreads(minPct)),
+      "spread_min_pct" -> minPct.toString, "iters" -> Draws.toString,
+      "errors" -> errors.map(quote).mkString("[", ",", "]"),
+      "sf" -> quote(sfDir)) ++ extra)
+    (line(25, Nil), line(0, Seq("conditions" -> obj(conds))))
+  }
 
-  /** Merge completed part files into bench_out.json. Returns true only
-    * when all `of` parts were present AND their union covers exactly
-    * the full default headline — a stale part file from an older
-    * headline shape refuses to merge rather than publishing a
-    * silently-partial total. Part files are deleted after a successful
-    * merge so they can never go stale for the next session.
-    */
-  private[graft] def mergeParts(of: Int): Boolean = {
-    import graft.tools.BenchDiff.mapOf
-    val paths = (1 to of).map(i => Paths.get(s"bench_out_part${i}of$of.json"))
-    val present = paths.filter(Files.exists(_))
-    if (present.size < of) {
-      println(s"[bench] ${present.size}/$of part files present — " +
-        "merge deferred to the final part's run")
-      return false
-    }
-    val parts = paths.map(Files.readString(_))
-    val queries = parts.map(mapOf(_, "queries")).reduce(_ ++ _)
-    // the expected keyset must be derived the same way the part runs
-    // derived theirs: SPARK_GRAFT_BENCH_ALL=1 / SPARK_GRAFT_BENCH_ITERS
-    // part runs bench the FULL headline, so merging under those flags
-    // must expect it too (review fix — the rotated keyset would refuse
-    // their parts and silently discard the draws)
-    val mergeSkipsRotation =
-      sys.env.contains("SPARK_GRAFT_BENCH_ITERS") ||
-        sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    val full =
-      if (mergeSkipsRotation) headline(None)
-      else headline(None).filterNot(rotationSkips())
-    if (queries.keySet != full.toSet) {
-      System.err.println("[bench] part files do not union to the " +
-        "current headline (stale parts from an older round?) — " +
-        "refusing to merge")
-      return false
-    }
-    // r20 (r19 ADVICE): parts must agree on the dataset AND the
-    // session — draws from different SF dirs or different box
-    // sessions must never blend into one published "run"
-    val sfs = parts.map(strOf(_, "sf").getOrElse("?")).distinct
-    if (sfs.size > 1) {
-      System.err.println("[bench] part files ran against different " +
-        s"sf dirs (${sfs.mkString(" vs ")}) — refusing to merge")
-      return false
-    }
-    val tokens = parts.map(strOf(_, "run_token").getOrElse("")).distinct
-    if (tokens.size > 1) {
-      System.err.println("[bench] part files carry different session " +
-        s"tokens (${tokens.mkString(" vs ")}: a leftover part from an " +
-        "earlier session?) — refusing to merge")
-      return false
-    }
-    val ageMs = paths.map(p =>
-      System.currentTimeMillis() - Files.getLastModifiedTime(p).toMillis)
-    if (ageMs.exists(_ > 6L * 3600 * 1000)) {
-      System.err.println("[bench] a part file is older than 6 h — " +
-        "refusing to merge across box-days; delete stale parts and rerun")
-      return false
-    }
-    val spreads = parts.map(mapOf(_, "spread_pct")).reduce(_ ++ _)
-    val draws = parts.map(mapOf(_, "draws")).reduce(_ ++ _)
-    val errors = parts.flatMap(listOf(_, "errors")).distinct
-    val iters = parts.flatMap("\"iters\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(_).map(_.group(1).toInt))
-      .reduceOption(_ max _).getOrElse(3)
-    val sf = sfs.head
-    // merged drift = the max over parts: the retry gate already
-    // normalized within each part; the consumer wants the worst case
-    val mergedDrift = parts.flatMap(
-      "\"box_drift\"\\s*:\\s*(-?[0-9.]+)".r.findFirstMatchIn(_)
-        .map(_.group(1).toDouble)).reduceOption(_ max _).getOrElse(1.0)
-    val total = queries.values.filter(_ >= 0).sum
-    def ordered[A](m: Map[String, A], fmt: A => String) =
-      fmtMap(full.filter(m.contains).map(k => k -> fmt(m(k))))
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${
-        ordered[Double](queries, v => f"$v%.3f")},"spread_pct":${
-        ordered[Double](spreads, v => f"$v%.1f")},"spread_min_pct":0,"iters":$iters,"box_drift":$mergedDrift%.2f,"draws":${
-        ordered[Double](draws, v => f"${v.toInt}%d")},"merged_parts":$of,"errors":$errJson,"sf":"$sf"}"""
-    Files.writeString(Paths.get("bench_out.json"), json + "\n")
-    println(json)
-    println(s"[bench] merged $of parts -> bench_out.json " +
-      f"(total $total%.1f s, ${queries.size} rows, ${errors.size} errors)")
-    if (errors.isEmpty) diffAndSnapshot("bench_out.json")
-    paths.foreach(Files.deleteIfExists(_))
-    true
+  /** SPARK_GRAFT_SF_DIR, checked before any work: a missing directory
+    * would otherwise fail every row only after the full warmup. */
+  private[graft] def checkSfDir(dir: String): String = {
+    require(new java.io.File(dir).isDirectory,
+      s"SPARK_GRAFT_SF_DIR='$dir' is not a directory")
+    dir
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // r19 (VERDICT item 1b): fresh per-run warehouse. A long session
-    // accretes standing-index tables (242 at the r18 tail) and every
-    // lifecycle gate's bootstrap then pays ~20% catalog/listing
-    // overhead (SCALING.md's q154 worktree measurement) — a harness
-    // artifact a deployment never pays, since nothing re-bootstraps
-    // per query there. The bench must measure the plan, not the
-    // accretion.
+    checkSfDir(sfDir)
+    val names = headline
+    // Fresh per-run warehouse: a long session accretes standing-index
+    // tables and every lifecycle gate's bootstrap then pays ~20% extra
+    // catalog/listing overhead (SCALING.md's q154 measurement) — a
+    // harness artifact a deployment never pays. The bench must measure
+    // the plan, not the accretion.
     val wh = Files.createTempDirectory("graft-bench-wh").toString
     TmpDirs.deleteOnExit(wh)
-    val spark = GraftSession.builder("graft-bench", GraftSession.cpus)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder("graft-bench", cpus)
       .config("spark.sql.warehouse.dir", wh).getOrCreate()
-    // ERROR, not WARN: the driver keeps only a bounded output tail and
-    // WARN-class spam (WindowExec bounded-frame notes, Column equality
-    // heuristics) has pushed the one metric JSON line out of the
-    // capture window in EVERY round to date (BENCH_r19's entire tail
-    // is Column WARNs) — parsed:null even on rc=0 rounds
+    // ERROR, not WARN: WARN-class spam (WindowExec bounded-frame notes,
+    // Column equality heuristics) pushes the metric line out of a
+    // bounded output tail
     spark.sparkContext.setLogLevel("ERROR")
 
-    // SPARK_GRAFT_BENCH_PART=i/n (r19, VERDICT item 1c): bench the i-th
-    // interleaved slice of the full headline, write a part file, and
-    // auto-merge once all parts exist. Orthogonal to the subset hook —
-    // combining them has no coherent merge semantics, so refuse.
-    val partSpec = sys.env.get("SPARK_GRAFT_BENCH_PART").map { s =>
-      val m = "(\\d+)\\s*/\\s*(\\d+)".r.findFirstMatchIn(s.trim).getOrElse(
-        sys.error(s"SPARK_GRAFT_BENCH_PART must look like 1/2, got '$s'"))
-      (m.group(1).toInt, m.group(2).toInt)
-    }
-    require(partSpec.isEmpty ||
-        sys.env.get("SPARK_GRAFT_BENCH_QUERIES").isEmpty,
-      "SPARK_GRAFT_BENCH_PART and SPARK_GRAFT_BENCH_QUERIES are exclusive")
-    // rotation applies BEFORE part slicing so parts stay consistent
-    // with mergeParts' keyset guard (both derive from the committed
-    // snapshots, which don't change between part invocations)
-    val skipRotation = sys.env.contains("SPARK_GRAFT_BENCH_ITERS") ||
-      sys.env.contains("SPARK_GRAFT_BENCH_QUERIES") ||
-      sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
-    val rotatedOut = if (skipRotation) Set.empty[String] else rotationSkips()
-    if (rotatedOut.nonEmpty)
-      println(s"[bench] rotation: ${rotatedOut.size} stable rows sit " +
-        "this round out (their cross-round estimator is the committed " +
-        "history; SPARK_GRAFT_BENCH_ALL=1 forces a full sweep)")
-    val benched = headline.filterNot(rotatedOut)
-    val names = partSpec match {
-      case Some((i, n)) => partSlice(benched, i, n)
-      case None => benched
-    }
-
-    // committed history → per-row anchored floor (min over the last 6
-    // committed snapshots — see anchoredMin's ratchet rationale) for
-    // the iteration schedule and the drift-aware retry gate
-    val anchor = anchoredMin()
-
-    // Untimed warmup at the smallest scale. r19 finding: warming EVERY
-    // headline row cost ~1700 s of the 2533 s wall (each lifecycle
-    // gate pays its fixed bootstrap/manifest cost nearly in full even
-    // at sf0.001) while the timed phase was ~800 s — the warmup, not
-    // the iterations, was the driver-cap killer. What warmup actually
-    // buys is SHARED state (JIT tiers, codegen infra, parquet reader,
-    // session machinery), so a ~12-row FAMILY set covering the
-    // distinct code paths warms it at ~5% of the cost. Per-query
-    // residual cold cost (plan codegen, first index bootstrap) lands
-    // in the timed draws, where min-of-N absorbs it and one-draw rows
-    // have the 1.4x deviation gate: a cold-inflated draw re-times
-    // once and publishes the warm minimum. Subset runs keep the warm-
-    // what-you-bench behavior (they are small by construction).
+    // Untimed warmup at the smallest scale, by FAMILY: warming every
+    // headline row was measured at ~1700 s of a 2533 s wall (each
+    // lifecycle gate pays its fixed bootstrap/manifest cost nearly in
+    // full even at sf0.001), while what warmup buys is SHARED state
+    // (JIT tiers, codegen infra, parquet reader, session machinery) —
+    // a ~14-row set covering the distinct code paths warms it at ~5%
+    // of the cost. Per-query residual cold cost lands in the first
+    // timed draw, which the min over [[Draws]] absorbs. Subset runs
+    // warm what they bench (they are small by construction).
     val warmFamilies = Seq(
-      "q00x_drift_probe",      // the drift control must measure WARM
-      "q00y_drift_probe_cpu",  // both probe legs (r22)
+      "q00x_drift_probe",      // the drift controls must measure WARM
+      "q00y_drift_probe_cpu",
       "q02_pricing_summary",   // scan + agg + parse expressions
       "q11_join_5way",         // broadcast/shuffle joins
       "q16_window_seq_id",     // window functions
@@ -692,17 +418,6 @@ object Bench {
     }
     val timedT0 = System.nanoTime()
     var errors = List.empty[String]
-    // Min of N timed iterations: single-run timings swing ±15% (and
-    // occasionally 2-3×) with system noise on this box — see SCALING.md's
-    // noise characterization; the min is the stable estimate of what the
-    // plan actually costs (same methodology as JMH's min-time mode).
-    // N is scheduled per row (scheduledIters) from the committed history.
-    val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // explicit overrides bypass the history schedule (r19 ADVICE): an
-    // ITERS setting or a subset run is the adjudication re-measure
-    // case where min-of-N is exactly what was asked for
-    val bypass = sys.env.contains("SPARK_GRAFT_BENCH_ITERS") ||
-      sys.env.contains("SPARK_GRAFT_BENCH_QUERIES")
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       try {
@@ -716,156 +431,17 @@ object Bench {
           -1.0
       } finally Caches.clear() // don't carry cached blocks across queries
     }
-    // Spread-gated re-run (r15, gate tightened r17: 150% → 80%; r19:
-    // ONE extra draw — on a drifted box more extras re-measure the
-    // same jitter): a multi-draw row whose best-N spread exceeds the
-    // gate re-times once and records only the N fastest samples, so a
-    // one-off system-noise outlier (GC pause, page-cache eviction)
-    // drops out instead of poisoning the published spread. The min is
-    // unchanged by trimming. Methodology in SCALING.md's noise section.
-    def trimmedSpread(ts: Seq[Double]): Double = {
-      val b = ts.sorted.take(iterations)
-      (b.max / b.min - 1) * 100
-    }
-    var results = names.map { name =>
-      val sched = scheduledIters(name, iterations, anchor, bypass)
-      var times = (1 to sched).map(_ => once(name))
-      var extra = 0
-      while (times.length > 1 && times.forall(_ >= 0) && extra < 1 &&
-          trimmedSpread(times) > 80.0) {
-        times = times :+ once(name)
-        extra += 1
-      }
-      (name, times.length, times)
-    }
-    // Drift-aware retry pass (r20): estimate the run's box-drift
-    // factor as the MEDIAN draw/floor ratio over anchored rows, then
-    // re-time once the rows whose draw exceeds 1.4× the drift-adjusted
-    // floor. The retry set is HYBRID (review fix): every over-gate row
-    // with a sub-second floor retries (each retry costs ~a second, and
-    // an unretried 5× draw on a small row would later trip BenchDiff's
-    // 1.6× one-draw gate as a false regression), while expensive rows
-    // are capped at 16 ordered by ABSOLUTE excess seconds over the
-    // adjusted floor — a 23-s-over q143 distorts the published map
-    // more than ten 0.3 s rows at 5×, and the cap keeps a pathological
-    // box-day from inflating the wall. A uniform-drift box retries
-    // almost nothing (the median soaks it up); a session-context
-    // outlier like r19's q143 22.55 s-vs-13 s floor retries and
-    // publishes its real level; a genuine regression re-times high
-    // and still trips BenchDiff.
-    val ratios = results.flatMap { case (k, _, t) =>
-      if (t.forall(_ >= 0)) anchor.get(k).map(t.min / _) else None }
-    val drift = if (ratios.isEmpty) 1.0
-      else ratios.sorted.apply(ratios.size / 2)
-    if (!bypass) {
-      val gate = 1.4 * math.max(1.0, math.min(drift, 2.0))
-      val overGate = results.collect {
-        case (k, _, t) if t.forall(_ >= 0) &&
-            anchor.get(k).exists(a => t.min > a * gate) =>
-          (k, anchor(k), t.min - anchor(k) * gate)
-      }
-      val retry = (overGate.collect { case (k, a, _) if a < 1.0 => k } ++
-        overGate.filter(_._2 >= 1.0).sortBy(-_._3).take(16).map(_._1))
-        .toSet
-      if (retry.nonEmpty) {
-        println(f"[bench] drift ${drift}%.2fx; retrying ${retry.size} " +
-          s"rows over ${math.round(gate * 100) / 100.0}x their floor")
-        results = results.map {
-          case (k, n, t) if retry.contains(k) =>
-            val r = once(k)
-            // a retry failure on a row whose first draw succeeded is
-            // timing noise, not a correctness error — keep the draw
-            if (r < 0) { errors = errors.filterNot(_ == k); (k, n + 1, t) }
-            else (k, n + 1, t :+ r)
-          case r => r
-        }
-      }
-    }
-    // draws = the TRUE number of timed executions (the published
-    // sample list trims to the best N — recording its length instead
-    // would hide the re-time cost from wall forensics)
-    val published = results.map { case (k, n, t) =>
-      (k, n, if (t.exists(_ < 0)) Seq(-1.0) else t.sorted.take(iterations))
-    }
-    val qs = published.map { case (k, _, t) =>
-      "\"" + k + f"\":${t.min}%.3f" }.mkString("{", ",", "}")
-    // per-query spread (max/min − 1, %) across the timed iterations: the
-    // published noise band — a round-over-round delta smaller than the
-    // spread is measurement, not engineering
-    def spreadJson(minPct: Double): String = published.collect {
-      case (k, _, t) if t.min > 0 &&
-          (t.max / t.min - 1) * 100 >= minPct =>
-        "\"" + k + f"\":${(t.max / t.min - 1) * 100}%.1f"
-    }.mkString("{", ",", "}")
-    // actual timed draws per row — a spread of 0.0 from one scheduled
-    // draw and from three coincidentally-equal draws read very
-    // differently in adjudication; file channel only
-    val drawsJson = fmtMap(published.map { case (k, n, _) =>
-      k -> n.toString })
-    val errJson = errors.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = published.map(_._3.min).filter(_ >= 0).sum
-    // the part-run session token (r19 ADVICE): parts only merge when
-    // every part carries the same token, so a leftover part file from
-    // a crashed earlier session can't blend into this run's artifact.
-    // The driver sets no env, so the default token is the box boot
-    // epoch PLUS the git HEAD (r21): same-session same-revision parts
-    // share it; a part from a previous boot, another box, or another
-    // code revision refuses.
-    val runToken = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUN",
-      bootToken + "-" + gitHeadToken())
-    // spread_min_pct is self-describing: a consumer comparing the stdout
-    // line against bench_out.json can tell a FILTERED spread map (only
-    // entries >= the stated floor) from a complete one
-    def json(spread: String, spreadMinPct: Double,
-        withDraws: Boolean): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread_pct":$spread,"spread_min_pct":$spreadMinPct%.0f,"iters":$iterations,"box_drift":$drift%.2f,${
-        if (withDraws) "\"draws\":" + drawsJson + "," else ""}${
-        partSpec.map { case (i, n) =>
-          s""""part":"$i/$n","run_token":"$runToken",""" }
-          .getOrElse("")}"errors":$errJson,"sf":"$sfDir"}"""
-    println(f"[bench] timed phase: ${published.map(_._2).sum} " +
-      f"draws in ${(System.nanoTime() - timedT0) / 1e9}%.1f s")
-    // stdout must survive a bounded tail-capture window (round 10's
-    // artifact was cut mid-line): print the spread only where it is
-    // signal (≥25%); the complete spread map goes to bench_out.json.
-    println(json(spreadJson(25.0), 25, withDraws = false))
-    partSpec match {
-      case Some((i, n)) =>
-        Files.writeString(Paths.get(s"bench_out_part${i}of$n.json"),
-          json(spreadJson(0.0), 0, withDraws = true) + "\n")
-        mergeParts(n): Unit
-      case None =>
-        Files.writeString(Paths.get("bench_out.json"),
-          json(spreadJson(0.0), 0, withDraws = true) + "\n")
-        // regression autodiff, wired into every FULL bench run (the r16
-        // verdict gap: the tool existed but its artifact was never
-        // produced): diff against the newest committed BENCH_OUT_r{N}
-        // snapshot, write BENCH_DIFF_r{N+1}.json (empty `flagged` is
-        // the pass) AND snapshot this run's complete map as
-        // BENCH_OUT_r{N+1}.json so the next round diffs against it
-        // (the driver's BENCH_r{N}.json keeps only a truncated stdout
-        // tail — r16's full map was lost exactly that way). Subset
-        // runs (SPARK_GRAFT_BENCH_QUERIES) neither diff nor snapshot;
-        // neither does a run with errors — errored queries report -1
-        // timings, and a failed run silently becoming the baseline
-        // would poison every later diff.
-        if (sys.env.get("SPARK_GRAFT_BENCH_QUERIES").isEmpty &&
-            errors.isEmpty)
-          diffAndSnapshot("bench_out.json")
-    }
-    // the metric line is RE-PRINTED as the very last stdout line (r22,
-    // VERDICT item 6): the driver keeps only a bounded stdout tail and
-    // r20's artifact lost the line to the benchdiff/merge chatter
-    // printed after it (BENCH_r20.json `parsed: null` cost r21 its
-    // round-over-round comparison). Whatever a truncated tail cuts,
-    // the final complete line is the contract; the earlier print
-    // stays for humans reading the log top-down. PART runs skip the
-    // reprint (self-review fix): mergeParts prints the MERGED total
-    // after the part line, and re-printing this invocation's partial
-    // json would put a part-scoped line last instead.
-    if (partSpec.isEmpty)
-      println(json(spreadJson(25.0), 25, withDraws = false))
+    // min of Draws: single draws swing ±15% (occasionally 2-3×) with
+    // host noise — SCALING.md's noise characterization; the min is the
+    // stable estimate of what the plan costs (JMH's min-time mode)
+    val draws = names.map(name => name -> (1 to Draws).map(_ => once(name)))
+    println(f"[bench] timed phase: ${names.size * Draws} draws in " +
+      f"${(System.nanoTime() - timedT0) / 1e9}%.1f s")
+    val (line, file) = report(draws, errors.reverse, sfDir,
+      conditions(cpus.toInt, sfDir, spark.version, gitHeadToken()))
+    Files.writeString(Paths.get("bench_out.json"), file + "\n")
     spark.stop()
+    println(line)
     if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -5,15 +5,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * r20: the sweep is PARALLEL (default 8 workers over one session —
-  * Spark schedules concurrent jobs; the queries are independent, index
+  * The sweep is PARALLEL (default 8 workers over one session — Spark
+  * schedules concurrent jobs; the queries are independent, index
   * prefixes are query-scoped, and per-query persisted frames are
   * released through [[Caches.scoped]] so one worker's cleanup cannot
-  * strip another's in-flight subplan). CORRECTNESS_r19 was truncated at
-  * 203/206 because the strictly-sequential 206-query sweep outgrew the
-  * driver's invocation budget; 6 workers cut the wall 3-5× and
-  * oracle_sql.json is written FIRST so a truncated run still yields a
-  * comparable (partial) artifact instead of a zeroed round.
+  * strip another's in-flight subplan). A strictly-sequential 206-query
+  * sweep outgrew the invocation budget (one run was truncated at
+  * 203/206); 6 workers cut the wall 3-5×, and oracle_sql.json is written
+  * FIRST so a truncated run still yields a comparable (partial) artifact.
   */
 object Verify {
   def main(args: Array[String]): Unit = {

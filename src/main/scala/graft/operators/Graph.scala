@@ -65,23 +65,10 @@ object Graph {
     * scalar in both loops, so the gate is decided from data the loop
     * holds anyway; above the gate (a 10^8-vertex host graph at 100 TB,
     * where |V| rows would be a multi-GB broadcast rebuilt per round)
-    * the shuffle plan stands unchanged. Env-parameterised with a local
-    * default sized well under the 8 GB/512M-row broadcast cap:
-    * 2M vertices ≈ 80 MB framed.
+    * the shuffle plan stands unchanged. The gate is sized well under
+    * the 8 GB/512M-row broadcast cap: 2M vertices ≈ 80 MB framed.
     */
-  private[graft] val BcastMaxN: Long =
-    sys.env.get("SPARK_GRAFT_GRAPH_BCAST_MAX_N").flatMap { v =>
-      // a malformed value must not crash the Graph object's static
-      // initializer (ExceptionInInitializerError names neither the
-      // var nor the value, and poisons the class for the whole JVM —
-      // r21 review fix): warn loudly, keep the default
-      val parsed = scala.util.Try(v.trim.toLong).toOption
-      if (parsed.isEmpty)
-        System.err.println("[graph] WARNING: ignoring malformed " +
-          s"SPARK_GRAFT_GRAPH_BCAST_MAX_N='$v' (not a long); " +
-          "using the 2000000 default")
-      parsed
-    }.getOrElse(2000000L)
+  private[graft] val BcastMaxN: Long = 2000000L
 
   /** Apply the broadcast hint when the loop's vertex count clears the
     * gate — joins keyed on integer-exact aggregates are strategy-

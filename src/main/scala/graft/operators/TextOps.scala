@@ -154,24 +154,13 @@ object TextOps {
     *
     * Native kernel (`graft_hashed_shingles`): one pass per document from
     * the md5 digest bytes — no hex round-trip, no intermediate
-    * shingle-string array. [[legacyHashedShingleSet]] is the
-    * Column-composed executable spec, pinned bit-equal by
-    * TextKernelsSpec.
+    * shingle-string array. The Column-composed executable spec it
+    * replaced lives in the tests (`LegacyTextKernels`), pinned
+    * bit-equal by TextKernelsSpec.
     */
   def hashedShingleSet(text: Column, n: Int = 3, xx: Boolean = false): Column =
     if (xx) call_function("graft_hashed_shingles", text, lit(n), lit(true))
     else call_function("graft_hashed_shingles", text, lit(n))
-
-  /** The Column-composed form [[hashedShingleSet]] replaces (kept as the
-    * kernel's executable specification + oracle-SQL mirror; `xx` selects
-    * the xxhash64 production hash so HashModeSpec can pin kernel parity
-    * in both modes).
-    */
-  private[graft] def legacyHashedShingleSet(text: Column, n: Int = 3,
-                                            xx: Boolean = false): Column =
-    array_sort(array_distinct(transform(
-      array_distinct(shingles(text, n)),
-      s => if (xx) hash7Xx(s) else hash7(s))))
 
   /** Word n-gram shingles (default 3): one string per window. */
   def shingles(text: Column, n: Int = 3): Column =
@@ -891,8 +880,8 @@ object TextOps {
     * Native kernel (`graft_simhash`): the whole fingerprint is ROW-LOCAL
     * — one generated-code pass over the distinct words per doc, ZERO
     * shuffle. (The previous explode → 28·|salts|-column ±1 bit-sum
-    * aggregate shuffled one row per (doc, distinct word);
-    * [[legacySimhashWideDf]] keeps that form as the kernel's executable
+    * aggregate shuffled one row per (doc, distinct word); the tests'
+    * `LegacyTextKernels` keeps that form as the kernel's executable
     * spec, pinned bit-equal by TextKernelsSpec.)
     */
   def simhashWideDf(df: DataFrame, idCol: String, textCol: String,
@@ -904,34 +893,6 @@ object TextOps {
       (if (xx) call_function("graft_simhash", col(textCol), saltArr, lit(true))
        else call_function("graft_simhash", col(textCol), saltArr))
         .as("simhash"))
-  }
-
-  /** The explode → bit-sum aggregate form [[simhashWideDf]] replaces
-    * (kept as the kernel's executable specification).
-    */
-  private[graft] def legacySimhashWideDf(df: DataFrame, idCol: String,
-                                         textCol: String,
-                                         salts: Seq[String],
-                                         xx: Boolean = false): DataFrame = {
-    require(salts.nonEmpty && 28 * salts.size <= 63,
-      "width must fit a single long")
-    val h: Column => Column = if (xx) hash7Xx else hash7
-    val ex = salts.zipWithIndex.foldLeft(
-      df.select(col(idCol).as("doc_id"),
-        explode(array_distinct(words(col(textCol)))).as("w"))) {
-      case (d, (s, k)) => d.withColumn(s"h$k",
-        h(if (s.isEmpty) col("w") else concat(col("w"), lit(s))))
-    }
-    val aggs = for { k <- salts.indices; j <- 0 until 28 }
-      yield sum((shiftright(col(s"h$k"), j).bitwiseAND(1)) * 2 - 1)
-        .as(s"b${k}_$j")
-    val bitSums = ex.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-    val sim = (for { k <- salts.indices; j <- 0 until 28 }
-      yield when(col(s"b${k}_$j") > 0, lit(1L << (28 * k + j))).otherwise(0L))
-      .reduce(_ + _)
-    df.select(col(idCol).as("doc_id"))
-      .join(bitSums, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(sim, lit(0L)).as("simhash"))
   }
 
   /** 56-bit SimHash (plain + '#'-salted word hashes; see

@@ -95,8 +95,8 @@ object Bm25Index {
     // the postings write runs ALONE first: it materializes the shared
     // `toks` cache exactly once; the remaining three tables then read
     // the cache and their writes are independent — overlapped via
-    // [[Sinks.inParallel]] (guide §2.6; r21 — measured on the q154/
-    // q157/q159 lifecycle gates, evidence in OPTIMIZATION_r21.md)
+    // [[Sinks.inParallel]] (guide §2.6; measured on the q154/q157/q159
+    // lifecycle gates)
     Sinks.writeBucketed(post.withColumn("b", lit(b)),
       phys(prefix, "postings", gen), Seq("term"), nb, mode)
     Sinks.inParallel(Seq(

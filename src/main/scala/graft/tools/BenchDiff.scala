@@ -2,21 +2,22 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** Bench regression autodiff — the r15 verdict's ask: the q157/q154
-  * manifest-overhead regression was only caught by hand-diffing
-  * per-query seconds against numbers that survived in prose. This
-  * makes the diff an ARTIFACT: compare two bench JSON lines
-  * (`BENCH_r{N-1}.json` vs the current `bench_out.json`), flag every
-  * query whose time grew past the ratio gate AND whose published
-  * spread is small enough that the growth is signal, not noise
-  * (a >1.3× move inside a >50% spread band is measurement), and write
-  * the flagged list as `BENCH_DIFF_r{N}.json` — empty `flagged` is a
-  * pass. No Spark session involved; the JSON shapes are the bench's
-  * own flat maps, parsed with a deliberately minimal extractor.
+/** Bench regression diff of two explicit bench_out.json files: flag every
+  * query whose time grew past the ratio gate AND whose published spread
+  * is small enough that the growth is signal, not noise (a >1.3× move
+  * inside a >50% spread band is measurement). Prints a JSON report on
+  * stdout — empty `flagged` is a pass. No Spark session involved; the
+  * JSON shapes are the bench's own flat maps, parsed with a deliberately
+  * minimal extractor.
   *
-  * Usage: runMain graft.tools.BenchDiff <prev.json> <curr.json> [out]
-  * Exit code stays 0 either way — the artifact is the signal; the
-  * driver's bench gate stays authoritative.
+  * Runs taken under different conditions (cores, dataset, JVM, Spark,
+  * draws — see `graft.Bench.conditions`) are not comparable: BenchDiff
+  * refuses them, and files without conditions, with exit status 2. The
+  * git HEAD is recorded but is not a condition, as in
+  * perfbench/compare.py.
+  *
+  * Usage: runMain graft.tools.BenchDiff <prev.json> <curr.json>
+  * Flags leave the exit status 0: the report is the signal.
   */
 object BenchDiff {
 
@@ -36,66 +37,67 @@ object BenchDiff {
     ("\"" + key + "\"\\s*:\\s*(-?[0-9.]+)").r
       .findFirstMatchIn(json).map(_.group(1).toDouble)
 
+  /** The `conditions` object as raw JSON values, None when absent. */
+  private[graft] def conditionsOf(json: String): Option[Map[String, String]] =
+    "\"conditions\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(json).map { m =>
+      "\"([^\"]+)\"\\s*:\\s*(\"[^\"]*\"|[^,]+)".r
+        .findAllMatchIn(m.group(1))
+        .map(f => f.group(1) -> f.group(2).trim).toMap
+    }
+
+  /** Why two runs cannot be compared, or None when they can: a file
+    * without conditions, or any condition but `git_head` that differs. */
+  private[graft] def refusal(prevJson: String,
+                             currJson: String): Option[String] =
+    (conditionsOf(prevJson), conditionsOf(currJson)) match {
+      case (None, _) => Some("prev carries no conditions")
+      case (_, None) => Some("curr carries no conditions")
+      case (Some(p), Some(c)) =>
+        val differ = (p.keySet ++ c.keySet - "git_head").toSeq.sorted
+          .filter(k => p.get(k) != c.get(k))
+        differ.headOption.map(k =>
+          s"conditions differ in $k: ${p.getOrElse(k, "absent")} vs " +
+            c.getOrElse(k, "absent"))
+    }
+
   /** One flagged row: name, prev s, curr s, raw ratio, drift-normalized
     * ratio, current spread %, current draws. */
   private[graft] final case class Flagged(name: String, prev: Double,
       curr: Double, ratio: Double, normRatio: Double, spread: Double,
       draws: Int)
 
-  /** r20 changes (r19 ADVICE + VERDICT item 3): (a) the compared ratio
-    * is DRIFT-NORMALIZED — each run publishes `box_drift` (its median
-    * draw/anchored-floor ratio), and dividing the raw ratio by the
-    * drift ratio removes uniform box-era movement so the 1.3× gate
-    * measures the PLAN again, not the box (r20's diff flagged 37 rows,
-    * all box/methodology drift); files without the field default to
-    * drift 1.0; (b) a one-draw row's published spread of 0.0 is not
-    * evidence — the old <50%-spread filter treated it as
-    * high-confidence signal. One-draw rows now flag only past a
-    * stricter 1.6× normalized gate and carry draws in the output so
-    * adjudication sees the sample size.
-    */
-  /** The drift basis actually divided out of the ratios (r21, VERDICT
-    * item 2 + r20 ADVICE): the MINIMUM of up to three estimates — the
-    * published box_drift ratio (contention-sensitive, over-forgave by
-    * ~50% in r20: probe 3.09 vs matched-median 2.07), the matched-query
-    * MEDIAN ratio (self-normalization on the stable fleet), and the
-    * q00x_drift_probe row's own ratio (pure-Spark synthetic work,
-    * the ONLY estimate a uniform plan regression cannot contaminate —
-    * the fleet-derived bases both rise with an across-the-board code
-    * slowdown and would forgive it). Taking the min normalizes away
-    * the least movement, so every flag decision uses the most
-    * conservative (most-flagging) defensible basis. All bases clamp
-    * at 1 for the r20 review-fix reason (floor-seeking published
-    * values do not scale below their floors).
+  /** The drift bases a diff may divide out of the ratios: the matched-
+    * query MEDIAN ratio (`self`, normalization on the stable fleet) and
+    * the two code-independent probe rows' own ratios (`probe`, shuffle-
+    * shaped; `probe_cpu`, CPU-bound) — the probes are the only estimates
+    * a uniform plan regression cannot contaminate, since `self` rises
+    * with an across-the-board code slowdown and would forgive it.
+    * [[flag]] divides by the MINIMUM, so every flag decision uses the
+    * most-flagging defensible basis. All bases clamp at 1: published
+    * values are floor-seeking mins that do not scale below their
+    * floors on a faster run.
     */
   private[graft] def driftBases(prevJson: String, currJson: String)
       : Map[String, Double] = {
     val pq = mapOf(prevJson, "queries")
     val cq = mapOf(currJson, "queries")
-    val box = math.max(1.0,
-      scalarOf(currJson, "box_drift").getOrElse(1.0) /
-        scalarOf(prevJson, "box_drift").getOrElse(1.0))
     val matched = cq.toSeq.flatMap { case (k, c) =>
       pq.get(k).filter(p => p > 0 && c > 0).map(c / _) }
     val self =
       if (matched.isEmpty) None
       else Some(math.max(1.0, matched.sorted.apply(matched.size / 2)))
-    val probe = for {
-      p <- pq.get("q00x_drift_probe").filter(_ > 0)
-      c <- cq.get("q00x_drift_probe").filter(_ > 0)
+    def probe(row: String) = for {
+      p <- pq.get(row).filter(_ > 0)
+      c <- cq.get(row).filter(_ > 0)
     } yield math.max(1.0, c / p)
-    // the CPU-bound leg (r22, VERDICT item 7): no shuffle, so the
-    // (probe, probe_cpu) PAIR attributes a divergence — both moved →
-    // box/JVM era; probe alone → the box's shuffle path; neither while
-    // the fleet moved → suspect the code
-    val probeCpu = for {
-      p <- pq.get("q00y_drift_probe_cpu").filter(_ > 0)
-      c <- cq.get("q00y_drift_probe_cpu").filter(_ > 0)
-    } yield math.max(1.0, c / p)
-    Map("box" -> Some(box), "self" -> self, "probe" -> probe,
-      "probe_cpu" -> probeCpu)
+    Map("self" -> self, "probe" -> probe("q00x_drift_probe"),
+      "probe_cpu" -> probe("q00y_drift_probe_cpu"))
       .collect { case (k, Some(v)) => k -> v }
   }
+
+  /** The basis [[flag]] divides by: the least of the bases, 1 without one. */
+  private def minBasis(bases: Map[String, Double]): Double =
+    if (bases.isEmpty) 1.0 else bases.values.min
 
   private[graft] def flag(prevJson: String, currJson: String,
                           ratioGate: Double, spreadGate: Double,
@@ -106,54 +108,55 @@ object BenchDiff {
     // the complete spread map is the current run's (bench_out.json
     // writes it at min_pct 0)
     val spread = mapOf(currJson, "spread_pct")
-    val draws = mapOf(currJson, "draws")
+    val n = scalarOf(currJson, "iters").map(_.toInt).getOrElse(3)
     // main() passes its bases through so the published drift_ratio is
-    // BY CONSTRUCTION the one the flags were gated on (review fix)
+    // BY CONSTRUCTION the one the flags were gated on
     val bases = Option(precomputedBases)
       .getOrElse(driftBases(prevJson, currJson))
-    val driftRatio = bases.values.min
-    // loud disagreement warning (r20 ADVICE): when the fleet-derived
-    // bases sit far above the code-independent probe, the difference
-    // is either heterogeneous contention or a uniform plan regression
-    // — adjudication must look either way
+    val driftRatio = minBasis(bases)
+    // loud disagreement warning: when the fleet-derived basis sits far
+    // above the code-independent probes, the difference is either
+    // heterogeneous contention or a uniform plan regression —
+    // adjudication must look either way
     if (bases.size > 1 && bases.values.max / bases.values.min > 1.15) {
-      // resource attribution from the probe PAIR (r22): both probe
-      // legs are code-independent, so their relative movement says
-      // WHICH resource the box drifted on
+      // resource attribution from the probe PAIR: both legs are
+      // code-independent, so their relative movement says WHICH
+      // resource the host drifted on
       val attrib = (bases.get("probe"), bases.get("probe_cpu")) match {
         case (Some(sh), Some(cp)) if sh / cp > 1.15 =>
           " Probe pair: the shuffle-shaped leg moved " +
-            f"${sh / cp}%.2fx past the CPU leg — the box's " +
+            f"${sh / cp}%.2fx past the CPU leg — the host's " +
             "shuffle/disk path drifted; CPU-bound flagged rows are " +
             "the suspicious ones."
         case (Some(sh), Some(cp)) if cp / sh > 1.15 =>
           " Probe pair: the CPU leg moved " +
-            f"${cp / sh}%.2fx past the shuffle leg — CPU-era drift; " +
+            f"${cp / sh}%.2fx past the shuffle leg — CPU drift; " +
             "shuffle-bound flagged rows are the suspicious ones."
         case (Some(_), Some(_)) =>
-          " Probe pair agrees (uniform box/JVM-era drift)."
+          " Probe pair agrees (uniform host/JVM drift)."
         case _ => ""
       }
       System.err.println("[benchdiff] WARNING: drift estimates " +
         s"disagree > 15% (${bases.map { case (k, v) =>
           f"$k=$v%.2f" }.mkString(", ")}) — normalizing by the min; " +
-        "if box drift alone explains the gap, flagged rows need " +
-        "ABA adjudication, if not, suspect an across-the-board " +
-        "plan regression." + attrib)
+        "if host drift alone explains the gap, flagged rows need an " +
+        "interleaved A/B, if not, suspect an across-the-board plan " +
+        "regression." + attrib)
     }
     cq.toSeq.sortBy(_._1).flatMap { case (k, c) =>
       pq.get(k) match {
         case Some(p) if p > 0 && c > 0 =>
-          val n = draws.get(k).map(_.toInt).getOrElse(3)
           val raw = c / p
           val norm = raw / math.max(driftRatio, 0.01)
+          // a one-draw spread of 0.0 is not evidence: one-draw runs
+          // flag only past a stricter gate
           val gate = if (n <= 1) math.max(ratioGate, 1.6) else ratioGate
-          // sub-second rows (r21, VERDICT item 3): a <1 s row's timing
-          // on a cold/drifted box measures JVM and page-cache state,
-          // not the plan — r20 published 24,971% spreads on such rows.
-          // Spread is NOT evidence either way there; they flag only on
-          // ABSOLUTE excess (≥ 1 s of real growth past the normalized
-          // prior), never on ratio alone.
+          // sub-second rows: a <1 s row's timing on a cold/drifted host
+          // measures JVM and page-cache state, not the plan (spreads of
+          // 24,971% were published on such rows). Spread is NOT
+          // evidence either way there; they flag only on ABSOLUTE
+          // excess (≥ 1 s of real growth past the normalized prior),
+          // never on ratio alone.
           val subSecond = p < 1.0
           val flagged =
             if (subSecond) norm > gate && c - p * driftRatio >= 1.0
@@ -167,22 +170,25 @@ object BenchDiff {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: BenchDiff <prev.json> <curr.json> [out.json]")
-    val out = if (args.length > 2) args(2) else "BENCH_DIFF.json"
+    require(args.length == 2, "usage: BenchDiff <prev.json> <curr.json>")
     val prev = Files.readString(Paths.get(args(0)))
     val curr = Files.readString(Paths.get(args(1)))
+    refusal(prev, curr).foreach { why =>
+      System.err.println(s"[benchdiff] REFUSED: ${args(0)} vs ${args(1)}: " +
+        s"$why; only runs taken under the same conditions are comparable")
+      sys.exit(2)
+    }
     val bases = driftBases(prev, curr)
     val flagged = flag(prev, curr, ratioGate = 1.3, spreadGate = 50.0,
       precomputedBases = bases)
-    val driftRatio = bases.values.min
+    val driftRatio = minBasis(bases)
     val rows = flagged.map { f =>
       f"""    "${f.name}": {"prev_sec": ${f.prev}%.3f, "curr_sec": ${
         f.curr}%.3f, "ratio": ${f.ratio}%.2f, "norm_ratio": ${
         f.normRatio}%.2f, "spread_pct": ${f.spread}%.1f, "draws": ${
         f.draws}%d}"""
     }.mkString(",\n")
-    val json =
+    println(
       f"""{
          |  "prev": "${args(0)}",
          |  "curr": "${args(1)}",
@@ -196,13 +202,11 @@ object BenchDiff {
          |  "flagged": {
          |$rows
          |  }
-         |}
-         |""".stripMargin
-    Files.writeString(Paths.get(out), json)
+         |}""".stripMargin)
     if (flagged.isEmpty)
-      println(s"[benchdiff] PASS: no low-noise regressions > 1.3x -> $out")
+      println("[benchdiff] PASS: no low-noise regressions > 1.3x")
     else {
-      println(s"[benchdiff] ${flagged.size} flagged -> $out")
+      println(s"[benchdiff] ${flagged.size} flagged")
       flagged.foreach { f =>
         println(f"[benchdiff]   ${f.name}: ${f.prev}%.2f -> ${f.curr}%.2f s " +
           f"(${f.ratio}%.2fx raw, ${f.normRatio}%.2fx drift-normalized, " +

@@ -40,7 +40,7 @@ class HashModeSpec extends AnyFunSuite {
     val df = corpus.toDF("doc_id", "text")
     val both = df.select(
       TextOps.hashedShingleSet(col("text"), xx = true).as("kernel"),
-      TextOps.legacyHashedShingleSet(col("text"), xx = true).as("column"))
+      LegacyTextKernels.legacyHashedShingleSet(col("text"), xx = true).as("column"))
     assert(both.filter(not(col("kernel") === col("column"))).count() == 0)
     // and hash7Xx really is the low-28-bit fold of Spark's xxhash64
     val folds = df.select(TextOps.hash7Xx(col("text")).as("h")).as[Long].collect()
@@ -51,7 +51,7 @@ class HashModeSpec extends AnyFunSuite {
     import spark.implicits._
     val df = corpus.toDF("doc_id", "text")
     val k = TextOps.simhashWideDf(df, "doc_id", "text", Seq("", "#"), xx = true)
-    val c = TextOps.legacySimhashWideDf(df, "doc_id", "text", Seq("", "#"), xx = true)
+    val c = LegacyTextKernels.legacySimhashWideDf(df, "doc_id", "text", Seq("", "#"), xx = true)
     val joined = k.withColumnRenamed("simhash", "sk")
       .join(c.withColumnRenamed("simhash", "sc"), Seq("doc_id"))
     assert(joined.count() == corpus.size)

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TextOps.{hash7, hash7Xx, shingles, words}
 
 /** Pins the native text kernels (`graft_hashed_shingles`,
   * `graft_simhash`) bit-equal to the Column-composed forms they replace
@@ -44,7 +46,7 @@ class TextKernelsSpec extends AnyFunSuite {
     for (n <- Seq(2, 3, 5)) {
       val rows = df.select(
         TextOps.hashedShingleSet(col("text"), n).as("got"),
-        TextOps.legacyHashedShingleSet(col("text"), n).as("want"),
+        LegacyTextKernels.legacyHashedShingleSet(col("text"), n).as("want"),
         col("text")).collect()
       for (r <- rows)
         assert(r.getSeq[Long](0) == r.getSeq[Long](1),
@@ -56,7 +58,7 @@ class TextKernelsSpec extends AnyFunSuite {
     for (salts <- Seq(Seq(""), Seq("", "#"))) {
       val got = TextOps.simhashWideDf(df, "doc_id", "text", salts)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val want = TextOps.legacySimhashWideDf(df, "doc_id", "text", salts)
+      val want = LegacyTextKernels.legacySimhashWideDf(df, "doc_id", "text", salts)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"salts=$salts")
     }
@@ -74,13 +76,13 @@ class TextKernelsSpec extends AnyFunSuite {
       .withColumn("doc_id", monotonically_increasing_id())
     val sh = fuzz.select(
       TextOps.hashedShingleSet(col("text")).as("got"),
-      TextOps.legacyHashedShingleSet(col("text")).as("want"), col("text"))
+      LegacyTextKernels.legacyHashedShingleSet(col("text")).as("want"), col("text"))
       .collect()
     for (r <- sh)
       assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"text=${r.get(2)}")
     val got = TextOps.simhashWideDf(fuzz, "doc_id", "text", Seq("", "#"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = TextOps.legacySimhashWideDf(fuzz, "doc_id", "text", Seq("", "#"))
+    val want = LegacyTextKernels.legacySimhashWideDf(fuzz, "doc_id", "text", Seq("", "#"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
   }
@@ -125,5 +127,51 @@ class TextKernelsSpec extends AnyFunSuite {
     val e3 = intercept[Exception](
       spark.sql("SELECT graft_hashed_shingles('a b c', 0)").collect())
     assert(e3.getMessage.contains("graft_hashed_shingles"), e3.getMessage)
+  }
+}
+
+/** The Column-composed reference forms the native text kernels replaced,
+  * kept as their executable specifications: TextKernelsSpec and
+  * HashModeSpec pin the kernels bit-equal to these.
+  */
+object LegacyTextKernels {
+
+  /** The Column-composed form [[TextOps.hashedShingleSet]] replaces (kept as the
+    * kernel's executable specification + oracle-SQL mirror; `xx` selects
+    * the xxhash64 production hash so HashModeSpec can pin kernel parity
+    * in both modes).
+    */
+  def legacyHashedShingleSet(text: Column, n: Int = 3,
+                             xx: Boolean = false): Column =
+    array_sort(array_distinct(transform(
+      array_distinct(shingles(text, n)),
+      s => if (xx) hash7Xx(s) else hash7(s))))
+
+  /** The explode → bit-sum aggregate form [[TextOps.simhashWideDf]] replaces
+    * (kept as the kernel's executable specification).
+    */
+  def legacySimhashWideDf(df: DataFrame, idCol: String,
+                          textCol: String,
+                          salts: Seq[String],
+                          xx: Boolean = false): DataFrame = {
+    require(salts.nonEmpty && 28 * salts.size <= 63,
+      "width must fit a single long")
+    val h: Column => Column = if (xx) hash7Xx else hash7
+    val ex = salts.zipWithIndex.foldLeft(
+      df.select(col(idCol).as("doc_id"),
+        explode(array_distinct(words(col(textCol)))).as("w"))) {
+      case (d, (s, k)) => d.withColumn(s"h$k",
+        h(if (s.isEmpty) col("w") else concat(col("w"), lit(s))))
+    }
+    val aggs = for { k <- salts.indices; j <- 0 until 28 }
+      yield sum((shiftright(col(s"h$k"), j).bitwiseAND(1)) * 2 - 1)
+        .as(s"b${k}_$j")
+    val bitSums = ex.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+    val sim = (for { k <- salts.indices; j <- 0 until 28 }
+      yield when(col(s"b${k}_$j") > 0, lit(1L << (28 * k + j))).otherwise(0L))
+      .reduce(_ + _)
+    df.select(col(idCol).as("doc_id"))
+      .join(bitSums, Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), coalesce(sim, lit(0L)).as("simhash"))
   }
 }
