@@ -416,6 +416,18 @@ object Bench {
       println(f"[bench] warmup: ${warmSet.size} queries in " +
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
+    // the media rows read image fixtures synthesized once per process
+    // and dataset; staging them here keeps that synthesis out of the
+    // first timed draw (the warmup stages only the warmup dataset's).
+    // A fixture that fails here fails again, as its row's error, in
+    // the timed phase
+    val stageT0 = System.nanoTime()
+    try CorpusQueries.stageFixtures(spark, sfDir)
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] fixture staging FAILED: ${e.getMessage}")
+    } finally Caches.clear()
+    println(f"[bench] fixtures staged in " +
+      f"${(System.nanoTime() - stageT0) / 1e9}%.1f s")
     val timedT0 = System.nanoTime()
     var errors = List.empty[String]
     def once(name: String): Double = {

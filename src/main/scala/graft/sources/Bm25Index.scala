@@ -28,13 +28,14 @@ import graft.{Caches, CorpusOps, TextOps}
   *
   * Every batch is ATOMIC via the [[Generations]] manifest: the four
   * tables' rows carry one batch id `b`, made visible by a single
-  * commit-row append — so a crash mid-ingest (or between
+  * commit marker — so a crash mid-ingest (or between
   * [[refreshFromDiff]]'s takedown and re-append legs, which share ONE
   * batch id) leaves readers on the previous consistent state, never on
   * three-of-four tables or a half-applied refresh. [[compact]] builds
-  * the next table GENERATION fully before the one-row flip — readers
-  * keep answering from the old generation throughout (GenerationsSpec
-  * pins the equality), replacing the old purge-then-rename window.
+  * the next table GENERATION fully before the commit-marker flip —
+  * readers keep answering from the old generation throughout
+  * (GenerationsSpec pins the equality), replacing the old
+  * purge-then-rename window.
   *
   * [[search]] joins the postings against the broadcast query-term
   * table FIRST (bucket-key join, no corpus shuffle), computes df over
@@ -48,7 +49,7 @@ import graft.{Caches, CorpusOps, TextOps}
 object Bm25Index {
 
   /** DEFAULT bucket count — [[write]] takes the actual count and pins
-    * it in the generation manifest ([[Generations.setBuckets]]); every
+    * it in the generation manifest ([[Generations.bootstrap]]); every
     * later append/delete/compaction resolves the writer's count from
     * there (the [[DedupIndex.Buckets]] rationale: bucket-id math must
     * use the count the files were written with, and the
@@ -64,6 +65,9 @@ object Bm25Index {
   private[graft] val Logicals =
     Seq("postings", "doclens", "positions", "stats")
 
+  /** The bucketed tables; `stats` is a plain log compacted to one row. */
+  private val Bucketed = Seq("postings", "doclens", "positions")
+
   private def bucketColsOf(logical: String): Seq[String] = logical match {
     case "postings" | "positions" => Seq("term")
     case _                        => Seq("doc_id")
@@ -78,13 +82,13 @@ object Bm25Index {
     * positional index — ~dl rows per doc (vs distinct-term rows for
     * the tf postings), bucketed by term like the tf table so
     * [[phraseSearch]]'s per-term probes read pre-partitioned. Rows are
-    * stamped with manifest batch id `b`; callers own the intent/commit
-    * bracket.
+    * stamped with manifest batch id `b`; callers run it inside a
+    * [[Generations]] bracket.
     */
   private def writeAll(docs: DataFrame, idCol: String, textCol: String,
-                       prefix: String, w: Int, gen: Long, b: Long,
-                       mode: String, nb: Int): Unit = {
-    val spark = docs.sparkSession
+                       prefix: String, w: Int)(gen: Long, b: Long): Unit = {
+    val nb = bucketsOf(docs.sparkSession, prefix)
+    val mode = Generations.modeOf(b)
     val toks = Caches.persistTracked(docs.select(
       col(idCol).as("doc_id"),
       posexplode(TextOps.words(col(textCol))).as(Seq("pos", "term"))))
@@ -105,83 +109,42 @@ object Bm25Index {
       () => Sinks.writeBucketed(toks.select("term", "doc_id", "pos")
         .withColumn("w", lit(w)).withColumn("b", lit(b)),
         phys(prefix, "positions", gen), Seq("term"), nb, mode),
-      () => {
-        val st = dls.agg((count(lit(1)) * w).as("n"),
+      () => Sinks.saveTable(dls.agg((count(lit(1)) * w).as("n"),
           (coalesce(sum(col("dl")), lit(0L)) * w).as("tt"))
-          .withColumn("w", lit(w)).withColumn("b", lit(b))
-        if (mode == "overwrite")
-          Sinks.purgeTable(spark, phys(prefix, "stats", gen))
-        st.write.mode(if (mode == "overwrite") "errorifexists" else mode)
-          .saveAsTable(phys(prefix, "stats", gen))
-      }))
+          .withColumn("w", lit(w)).withColumn("b", lit(b)),
+        phys(prefix, "stats", gen), mode)))
   }
 
   /** Bootstrap the index from a corpus snapshot; steady state uses
     * [[append]]/[[delete]] only. */
   def write(docs: DataFrame, idCol: String, textCol: String,
-            prefix: String, buckets: Int = Buckets): Unit = {
-    val spark = docs.sparkSession
-    Generations.beginBootstrap(spark, prefix)
-    Generations.setBuckets(spark, prefix, buckets)
-    writeAll(docs, idCol, textCol, prefix, w = 1, gen = 0L, b = 0L,
-      mode = "overwrite", nb = buckets)
-    Generations.commit(spark, prefix, 0L, 0L)
-  }
+            prefix: String, buckets: Int = Buckets): Unit =
+    Generations.bootstrap(docs.sparkSession, prefix, Some(buckets))(
+      writeAll(docs, idCol, textCol, prefix, w = 1))
 
   /** Fold a NEW batch in (id-unique contract: appended doc_ids are
     * new). Pure row-appends, one file per bucket per batch; all four
-    * tables flip visible together on the single commit row. */
+    * tables flip visible together on the single commit marker. */
   def append(increment: DataFrame, idCol: String, textCol: String,
              prefix: String): Unit =
-    appendBatch(increment, idCol, textCol, prefix, w = 1)
+    Generations.batch(increment.sparkSession, prefix)(
+      writeAll(increment, idCol, textCol, prefix, w = 1))
 
   /** Takedown: append the same projections with w = -1; the search
     * fold nets them dead and the stats sum shrinks accordingly. */
   def delete(docs: DataFrame, idCol: String, textCol: String,
              prefix: String): Unit =
-    appendBatch(docs, idCol, textCol, prefix, w = -1)
-
-  private def appendBatch(docs: DataFrame, idCol: String, textCol: String,
-                          prefix: String, w: Int): Unit = {
-    val spark = docs.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    writeAll(docs, idCol, textCol, prefix, w, g, b, mode = "append",
-      nb = bucketsOf(spark, prefix))
-    Generations.commit(spark, prefix, g, b)
-  }
-
-  /** [[append]] WITHOUT the commit row — the simulated writer crash
-    * GenerationsSpec drives; the rows stay invisible forever. */
-  private[graft] def appendUncommitted(docs: DataFrame, idCol: String,
-                                       textCol: String,
-                                       prefix: String): (Long, Long) = {
-    val spark = docs.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    writeAll(docs, idCol, textCol, prefix, w = 1, g, b, mode = "append",
-      nb = bucketsOf(spark, prefix))
-    (g, b)
-  }
+    Generations.batch(docs.sparkSession, prefix)(
+      writeAll(docs, idCol, textCol, prefix, w = -1))
 
   /** Write one batch's rows under a PRE-CLAIMED (gen, b) without
-    * committing — the step-interleaved two-writer GenerationsSpec
-    * drives claim → write → commit as separate steps; production
-    * writers use [[append]]/[[delete]]. */
+    * committing — the step-interleaved GenerationsSpec cases drive
+    * claim → write → commit as separate steps; production writers use
+    * [[append]]/[[delete]]. */
   private[graft] def writeClaimed(docs: DataFrame, idCol: String,
                                   textCol: String, prefix: String,
                                   g: Long, b: Long): Unit =
-    writeAll(docs, idCol, textCol, prefix, w = 1, g, b, mode = "append",
-      nb = bucketsOf(docs.sparkSession, prefix))
-
-  /** Live fold of a log table at the resolved committed state. */
-  private def live(spark: SparkSession, prefix: String, logical: String,
-                   st: (Long, Seq[Long]),
-                   dataCols: Seq[String]): DataFrame =
-    spark.table(phys(prefix, logical, st._1))
-      .filter(col("b").isin(st._2: _*))
-      .groupBy(dataCols.map(col): _*)
-      .agg(sum(col("w")).as("net"))
-      .filter(col("net") > 0)
-      .select(dataCols.map(col): _*)
+    writeAll(docs, idCol, textCol, prefix, w = 1)(g, b)
 
   /** The stats log's running sum at the committed state: (live N, live
     * total tokens) — one bounded scalar read. */
@@ -233,16 +196,13 @@ object Bm25Index {
     // because the fold's grouping includes `term`.
     val terms = queries.flatMap(_._2.trim.split("\\s+")).distinct
     val matched = Caches.persistTracked(
-      spark.table(phys(prefix, "postings", st._1))
-        .filter(col("b").isin(st._2: _*))
-        .filter(col("term").isin(terms: _*))
-        .groupBy("term", "doc_id", "tf")
-        .agg(sum(col("w")).as("net")).filter(col("net") > 0)
-        .select("term", "doc_id", "tf"))
+      Generations.live(spark, prefix, "postings", st,
+        Seq("term", "doc_id", "tf"), Some(col("term").isin(terms: _*))))
     val dfr = matched.groupBy("term").agg(count(lit(1)).as("df"))
     val tf = matched.join(broadcast(qterms), Seq("term"))
       .select("query_id", "doc_id", "term", "tf")
-    (tf, dfr, live(spark, prefix, "doclens", st, Seq("doc_id", "dl")),
+    (tf, dfr,
+      Generations.live(spark, prefix, "doclens", st, Seq("doc_id", "dl")),
       n, avgdlMilli)
   }
 
@@ -364,12 +324,8 @@ object Bm25Index {
   private def livePositions(spark: SparkSession, prefix: String,
                             terms: Seq[String],
                             st: (Long, Seq[Long])): DataFrame =
-    spark.table(phys(prefix, "positions", st._1))
-      .filter(col("b").isin(st._2: _*))
-      .filter(col("term").isin(terms: _*))
-      .groupBy("term", "doc_id", "pos")
-      .agg(sum(col("w")).as("net")).filter(col("net") > 0)
-      .select("term", "doc_id", "pos")
+    Generations.live(spark, prefix, "positions", st,
+      Seq("term", "doc_id", "pos"), Some(col("term").isin(terms: _*)))
 
   /** EXACT-PHRASE search over the positional postings — the retrieval
     * feature tf postings cannot answer ("big order scan" as consecutive
@@ -419,14 +375,14 @@ object Bm25Index {
     * ∝ |delta|. Post-refresh the index answers exactly as one
     * bootstrapped fresh on `newGen` (the q159 gate; CorpusOpsSpec
     * pins bit-equality). Both legs share ONE manifest batch id and ONE
-    * commit row, so the refresh is all-or-nothing: no reader ever sees
-    * the takedowns applied without the re-appends.
+    * commit marker, so the refresh is all-or-nothing: no reader ever
+    * sees the takedowns applied without the re-appends.
     *
     * Scale shape: the diff is one map-side-digest full-outer join
     * (md5 hashes shuffle, never text — snapshotDiff's contract); the
     * two verdict joins are id-equi-joins against the persisted
     * manifest; ingest itself is the usual per-batch bucketed append.
-    * Honest cost note (measured, SCALING.md r14e-ab + r15a-ab): the
+    * Honest cost note (measured, SCALING.md's refresh probes): the
     * diff and the two join legs are ~|docs|-proportional corpus
     * passes, so on SHORT docs (200k×30-token parquet corpus) refresh
     * runs 0.6× a full re-ingest — and on LONG docs (10k×1k-token),
@@ -439,29 +395,24 @@ object Bm25Index {
     */
   def refreshFromDiff(oldGen: DataFrame, newGen: DataFrame,
                       idCol: String, textCol: String,
-                      prefix: String): Unit = {
-    val spark = oldGen.sparkSession
-    val nb = bucketsOf(spark, prefix)
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    TextOps.refreshViaDiff(oldGen, newGen, idCol, col(textCol))(
-      writeAll(_, idCol, textCol, prefix, w = -1, g, b, mode = "append",
-        nb),
-      writeAll(_, idCol, textCol, prefix, w = 1, g, b, mode = "append",
-        nb))
-    Generations.commit(spark, prefix, g, b)
-  }
+                      prefix: String): Unit =
+    Generations.batch(oldGen.sparkSession, prefix) { (g, b) =>
+      TextOps.refreshViaDiff(oldGen, newGen, idCol, col(textCol))(
+        writeAll(_, idCol, textCol, prefix, w = -1)(g, b),
+        writeAll(_, idCol, textCol, prefix, w = 1)(g, b))
+    }
 
   /** Compact the index's four tables into the NEXT generation — one
     * file per bucket, stats netted to a single row — then flip with
     * one commit and GC the old generation. Readers resolve the old
     * tables until the flip; an interrupted compaction leaves the index
-    * exactly as it was (GenerationsSpec pins both).
+    * exactly as it was (GenerationsSpec pins both), and a batch
+    * committed during the rewrite aborts the flip.
     */
   def compact(spark: SparkSession, prefix: String,
               retain: Int = 0): Unit = {
-    val ng = buildNextGeneration(spark, prefix)
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
+    val (st, ng) = buildNextGeneration(spark, prefix)
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
   }
 
   /** Dead-row fraction of the log, in percent — one bounded stats-log
@@ -480,10 +431,10 @@ object Bm25Index {
     if (gross <= 0) 0L else (gross - net) * 100L / gross
   }
 
-  /** THRESHOLD compaction — the steady-state maintenance policy the
-    * r16 verdict asked for: q157's lifecycle paid a FULL index rewrite
-    * for a one-batch delete log, a cost ∝ corpus that at 100 TB
-    * dominates the maintenance budget while reclaiming almost nothing.
+  /** THRESHOLD compaction — the steady-state maintenance policy:
+    * q157's lifecycle paid a FULL index rewrite for a one-batch delete
+    * log, a cost ∝ corpus that at 100 TB dominates the maintenance
+    * budget while reclaiming almost nothing.
     * Search correctness never depends on compaction (every read folds
     * the delete log — `sum(w) > 0`), so below the gate the rewrite is
     * simply SKIPPED; above it the usual full [[compact]] runs.
@@ -518,62 +469,37 @@ object Bm25Index {
     * @return rewritten-bucket count per logical table (spec gate) */
   def compactPartial(spark: SparkSession, prefix: String,
                      retain: Int = 0): Map[String, Int] = {
-    val st @ (gen, bs) = Generations.committedState(spark, prefix)
+    val st = Generations.committedState(spark, prefix)
     val nb = bucketsOf(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
-    // the three per-table legs are independent (distinct source and
-    // target tables) — overlapped (guide §2.6, r21)
-    val counts = Sinks.inParallelMap(
-      Seq("postings", "doclens", "positions").map(logical => () => {
-        val touched = Sinks.tombstonedBuckets(spark,
-          phys(prefix, logical, gen), bucketColsOf(logical), nb, bs)
-        Sinks.partialCompactBucketedTo(spark,
-          phys(prefix, logical, gen), phys(prefix, logical, ng),
-          bucketColsOf(logical), nb, bs, touched)
-        logical -> touched.size
-      })).toMap
-    val (n, tt) = liveStats(spark, prefix, st)
-    val s = spark
-    import s.implicits._
-    val tgt = phys(prefix, "stats", ng)
-    Sinks.purgeTable(spark, tgt)
-    Seq((n, tt, 1, 0L)).toDF("n", "tt", "w", "b")
-      .coalesce(1).write.mode("errorifexists").saveAsTable(tgt)
-    // SINGLE-MAINTENANCE-WRITER guard before the flip — the
-    // [[DedupIndex.compactPartial]] rationale: a batch committed into
-    // the old generation after the snapshot would be silently dropped
-    // by the carry; abort instead (no b0 lands, readers keep the old
-    // generation, the orphaned tables are GC'd after a later flip).
-    require(Generations.committedState(spark, prefix) == st,
-      s"$prefix: a batch committed during partial compaction — " +
-        "aborting the flip (single-maintenance-writer contract)")
-    // carry the old batch visibility over, THEN flip on b0
-    bs.filter(_ != 0L).foreach(b =>
-      Generations.commit(spark, prefix, ng, b))
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
+    val counts = Sinks.partialCompactLegs(spark, prefix, Bucketed,
+      bucketColsOf, nb, st, ng)
+    writeNetStats(spark, prefix, st, ng)
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, st._2)
     counts
   }
 
   /** Compaction's build phase (intent + next-generation tables, NO
-    * commit) — split out for GenerationsSpec's interleaved reads. */
+    * commit) — split out for GenerationsSpec's interleaved reads.
+    * @return (the committed state the build read, the new generation) */
   private[graft] def buildNextGeneration(spark: SparkSession,
-                                         prefix: String): Long = {
-    val st @ (gen, bs) = Generations.committedState(spark, prefix)
+      prefix: String): ((Long, Seq[Long]), Long) = {
+    val st = Generations.committedState(spark, prefix)
     val nb = bucketsOf(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
-    // independent per-table rewrites — overlapped (guide §2.6, r21)
-    Sinks.inParallel(Seq("postings", "doclens", "positions").map(
-      logical => () =>
-        Sinks.compactBucketedTo(spark, phys(prefix, logical, gen),
-          phys(prefix, logical, ng), bucketColsOf(logical), nb, bs)))
+    Sinks.compactLegs(spark, prefix, Bucketed, bucketColsOf, nb, st, ng)
+    writeNetStats(spark, prefix, st, ng)
+    (st, ng)
+  }
+
+  /** Generation `ng`'s stats log: the live (n, tt) at `st` netted to
+    * one batch-0 row. */
+  private def writeNetStats(spark: SparkSession, prefix: String,
+                            st: (Long, Seq[Long]), ng: Long): Unit = {
     val (n, tt) = liveStats(spark, prefix, st)
     val s = spark
     import s.implicits._
-    val tgt = phys(prefix, "stats", ng)
-    Sinks.purgeTable(spark, tgt)
-    Seq((n, tt, 1, 0L)).toDF("n", "tt", "w", "b")
-      .coalesce(1).write.mode("errorifexists").saveAsTable(tgt)
-    ng
+    Sinks.saveTable(Seq((n, tt, 1, 0L)).toDF("n", "tt", "w", "b")
+      .coalesce(1), phys(prefix, "stats", ng))
   }
 }

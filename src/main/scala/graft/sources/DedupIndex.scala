@@ -50,8 +50,9 @@ import graft.{Caches, TextOps}
   * transactional — via the [[Generations]] manifest every read and
   * write brackets — is each batch against readers and crashes: a
   * multi-table ingest or takedown becomes visible through one commit
-  * row, and [[compact]] builds the next table generation fully before
-  * flipping, so a reader never sees a missing table or half a batch.
+  * marker, and [[compact]] builds the next table generation fully
+  * before flipping, so a reader never sees a missing table or half a
+  * batch.
   */
 object DedupIndex {
 
@@ -59,7 +60,7 @@ object DedupIndex {
     * cluster this is a deployment knob (buckets ≥ executor cores, and
     * the probe side's shuffle lands on exactly this many partitions).
     * [[write]] takes the actual count and PINS it in the generation
-    * manifest ([[Generations.setBuckets]]); every later append/delete/
+    * manifest ([[Generations.bootstrap]]); every later append/delete/
     * compaction resolves the writer's count from there — a reader or
     * maintenance pass guessing a different count would compute wrong
     * bucket ids. The partial-compaction law (SCALING.md partial-ab:
@@ -100,20 +101,20 @@ object DedupIndex {
   }
 
   /** Write one batch's rows — stamped with its manifest batch id `b` —
-    * into generation `gen`'s physical tables. Callers own the
-    * intent/commit bracket ([[Generations]]); rows written here are
-    * invisible until the commit row lands. */
+    * into generation `gen`'s physical tables, at the writer-pinned
+    * bucket count. Callers run it inside a [[Generations]] bracket;
+    * rows written here are invisible until the commit marker lands. */
   private def writeAll(docs: DataFrame, idCol: String, textCol: String,
-                       prefix: String, w: Int, gen: Long, b: Long,
-                       mode: String, nb: Int): Unit = {
+                       prefix: String, w: Int)(gen: Long, b: Long): Unit = {
+    val nb = bucketsOf(docs.sparkSession, prefix)
     val (bn, s, h) = project(docs, idCol, textCol, w)
     def one(df: DataFrame, logical: String): Unit =
       Sinks.writeBucketed(df.withColumn("b", lit(b)),
         Generations.physical(prefix, logical, gen),
-        bucketColsOf(logical), nb, mode)
+        bucketColsOf(logical), nb, Generations.modeOf(b))
     // bands first, alone — it materializes the shared hashing
     // projection; shsets/hashes then read the cache and overlap
-    // ([[Sinks.inParallel]], guide §2.6; r21)
+    // ([[Sinks.inParallel]], guide §2.6)
     one(bn, "bands")
     Sinks.inParallel(Seq(
       () => one(s, "shsets"),
@@ -126,27 +127,23 @@ object DedupIndex {
     * increments fold in via [[append]], takedowns via [[delete]].
     */
   def write(docs: DataFrame, idCol: String, textCol: String,
-            prefix: String, buckets: Int = Buckets): Unit = {
-    val spark = docs.sparkSession
-    Generations.beginBootstrap(spark, prefix)
-    Generations.setBuckets(spark, prefix, buckets)
-    writeAll(docs, idCol, textCol, prefix, w = 1, gen = 0L, b = 0L,
-      mode = "overwrite", nb = buckets)
-    Generations.commit(spark, prefix, 0L, 0L)
-  }
+            prefix: String, buckets: Int = Buckets): Unit =
+    Generations.bootstrap(docs.sparkSession, prefix, Some(buckets))(
+      writeAll(docs, idCol, textCol, prefix, w = 1))
 
   /** Fold an accepted increment into the standing index. Appends only —
     * each batch adds one file per bucket and the corpus is never
     * rewritten; Spark unions bucket files at read, so the bucketed
     * read-side guarantee survives any number of appends. The batch is
     * ATOMIC: all three tables' rows carry one manifest batch id, made
-    * visible by a single commit-row append — a crash mid-write leaves
+    * visible by a single commit marker — a crash mid-write leaves
     * only invisible orphans ([[Generations]]). Run [[compact]]
     * periodically to bound the accumulated file count.
     */
   def append(increment: DataFrame, idCol: String, textCol: String,
              prefix: String): Unit =
-    appendBatch(increment, idCol, textCol, prefix, w = 1)
+    Generations.batch(increment.sparkSession, prefix)(
+      writeAll(increment, idCol, textCol, prefix, w = 1))
 
   /** Remove documents from the standing index — the takedown/GDPR path.
     * The caller supplies the SAME (id, text) rows it inserted (a
@@ -159,42 +156,22 @@ object DedupIndex {
     */
   def delete(docs: DataFrame, idCol: String, textCol: String,
              prefix: String): Unit =
-    appendBatch(docs, idCol, textCol, prefix, w = -1)
-
-  private def appendBatch(docs: DataFrame, idCol: String, textCol: String,
-                          prefix: String, w: Int): Unit = {
-    val spark = docs.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    writeAll(docs, idCol, textCol, prefix, w, g, b, mode = "append",
-      nb = bucketsOf(spark, prefix))
-    Generations.commit(spark, prefix, g, b)
-  }
-
-  /** [[append]] WITHOUT the commit row — the simulated writer crash
-    * GenerationsSpec drives: the rows land on disk but stay invisible
-    * to every screen, and the allocated batch id is never reused. */
-  private[graft] def appendUncommitted(docs: DataFrame, idCol: String,
-                                       textCol: String,
-                                       prefix: String): (Long, Long) = {
-    val spark = docs.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    writeAll(docs, idCol, textCol, prefix, w = 1, g, b, mode = "append",
-      nb = bucketsOf(spark, prefix))
-    (g, b)
-  }
+    Generations.batch(docs.sparkSession, prefix)(
+      writeAll(docs, idCol, textCol, prefix, w = -1))
 
   /** Compact all three of an index's tables to one file per bucket,
     * physically dropping tombstone-cancelled rows and crashed batches'
     * orphans. The rewrite lands in the NEXT generation's tables while
-    * readers keep the current one; ONE manifest commit row flips
+    * readers keep the current one; ONE manifest commit marker flips
     * visibility, then the old generation is garbage-collected — no
     * missing-table or mixed-generation window at any point
-    * (GenerationsSpec pins search-during-compaction equality). */
+    * (GenerationsSpec pins search-during-compaction equality). A batch
+    * committed during the rewrite aborts the flip
+    * ([[Generations.flip]]). */
   def compact(spark: SparkSession, prefix: String,
               retain: Int = 0): Unit = {
-    val ng = buildNextGeneration(spark, prefix)
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
+    val (st, ng) = buildNextGeneration(spark, prefix)
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
   }
 
   /** PARTIAL compaction — the takedown-proportional maintenance pass
@@ -217,76 +194,27 @@ object DedupIndex {
     * @return rewritten-bucket count per logical table (spec gate) */
   def compactPartial(spark: SparkSession, prefix: String,
                      retain: Int = 0): Map[String, Int] = {
-    val st @ (gen, bs) = Generations.committedState(spark, prefix)
+    val st = Generations.committedState(spark, prefix)
     val nb = bucketsOf(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
-    // independent per-table legs — overlapped (guide §2.6, r21)
-    val counts = Sinks.inParallelMap(Logicals.map(logical => () => {
-      val touched = Sinks.tombstonedBuckets(spark,
-        Generations.physical(prefix, logical, gen),
-        bucketColsOf(logical), nb, bs)
-      Sinks.partialCompactBucketedTo(spark,
-        Generations.physical(prefix, logical, gen),
-        Generations.physical(prefix, logical, ng),
-        bucketColsOf(logical), nb, bs, touched)
-      logical -> touched.size
-    })).toMap
-    // SINGLE-MAINTENANCE-WRITER guard (shared posture with full
-    // compact, but the batch-id carry here makes the window look safe
-    // when it is not): a batch committed into the OLD generation after
-    // the snapshot had its files neither folded nor reliably carried —
-    // re-list immediately before the flip and ABORT rather than
-    // silently dropping it. The abort is safe by construction: no b0
-    // commit ever lands, readers stay on the old generation, and the
-    // orphaned next-generation tables are GC'd after a later flip.
-    // (The re-list shrinks the race window from the whole compaction
-    // to one FS roundtrip; true concurrent append+compact needs a
-    // lock service or a CAS on the flip itself.)
-    require(Generations.committedState(spark, prefix) == st,
-      s"$prefix: a batch committed during partial compaction — " +
-        "aborting the flip (single-maintenance-writer contract)")
-    bs.filter(_ != 0L).foreach(b =>
-      Generations.commit(spark, prefix, ng, b))
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
+    val counts = Sinks.partialCompactLegs(spark, prefix, Logicals,
+      bucketColsOf, nb, st, ng)
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, st._2)
     counts
   }
 
   /** Compaction's build phase only (intent + full next-generation
     * write, NO commit) — split out so GenerationsSpec can interleave
-    * reads and simulate the crash-before-commit. */
+    * reads and simulate the crash-before-commit.
+    * @return (the committed state the build read, the new generation) */
   private[graft] def buildNextGeneration(spark: SparkSession,
-                                         prefix: String): Long = {
-    val (gen, bs) = Generations.committedState(spark, prefix)
+      prefix: String): ((Long, Seq[Long]), Long) = {
+    val st = Generations.committedState(spark, prefix)
     val nb = bucketsOf(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
-    // independent per-table rewrites — overlapped (guide §2.6, r21)
-    Sinks.inParallel(Logicals.map(logical => () =>
-      Sinks.compactBucketedTo(spark,
-        Generations.physical(prefix, logical, gen),
-        Generations.physical(prefix, logical, ng),
-        bucketColsOf(logical), nb, bs)))
-    ng
+    Sinks.compactLegs(spark, prefix, Logicals, bucketColsOf, nb, st, ng)
+    (st, ng)
   }
-
-  /** Live (tombstone-folded) view of a log-structured table at the
-    * resolved committed state: visible batches only, group on the data
-    * columns — bucket key leading — and keep net weight > 0. The batch
-    * filter is a static IN over a bounded list (it reaches the parquet
-    * scan); the grouping keys are a superset of the bucket key, so the
-    * aggregate satisfies its distribution from the bucketed read and
-    * plans ZERO Exchange; output partitioning stays on the bucket key,
-    * which is exactly what the downstream screen join needs.
-    */
-  private def live(spark: SparkSession, prefix: String, logical: String,
-                   st: (Long, Seq[Long]),
-                   dataCols: Seq[String]): DataFrame =
-    spark.table(Generations.physical(prefix, logical, st._1))
-      .filter(col("b").isin(st._2: _*))
-      .groupBy(dataCols.map(col): _*)
-      .agg(sum(col("w")).as("net"))
-      .filter(col("net") > 0)
-      .select(dataCols.map(col): _*)
 
   /** Screen a new batch against the standing index: banded-LSH
     * candidates from the index only, exact-Jaccard verify against the
@@ -303,9 +231,11 @@ object DedupIndex {
     val newSh = Caches.persistTracked(batch.select(col(idCol).as("doc_id"),
       TextOps.hashedShingleSet(col(textCol)).as("shset")))
     TextOps.incrementalNearDupProbe(
-      live(spark, prefix, "bands", st, Seq("band", "key", "doc_id"))
+      Generations.live(spark, prefix, "bands", st,
+          Seq("band", "key", "doc_id"))
         .select(col("doc_id").as("old_id"), col("band"), col("key")),
-      live(spark, prefix, "shsets", st, Seq("doc_id", "shset")),
+      Generations.live(spark, prefix, "shsets", st,
+        Seq("doc_id", "shset")),
       newSh, threshold)
   }
 
@@ -320,7 +250,7 @@ object DedupIndex {
   def screenExact(spark: SparkSession, batch: DataFrame, idCol: String,
                   textCol: String, prefix: String): DataFrame = {
     val st = Generations.committedState(spark, prefix)
-    val oldCanon = live(spark, prefix, "hashes", st,
+    val oldCanon = Generations.live(spark, prefix, "hashes", st,
         Seq("content_hash", "doc_id"))
       .groupBy("content_hash").agg(min(col("doc_id")).as("canonical_id"))
     batch.select(col(idCol).as("doc_id"),

@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** ATOMIC COMMIT for the standing-index family — the missing
   * transactional layer over [[DedupIndex]]/[[Bm25Index]]/[[VectorIndex]]/
@@ -17,13 +18,20 @@ import org.apache.spark.sql.SparkSession
   * generation (every ingest/takedown/refresh stamps its rows with one
   * `b`), and `state` is `intent` (id claimed, data may be partially
   * written) or `commit` (fully written, visible). Marker files instead
-  * of a catalog table (the r15 layout) because the manifest is pure
-  * driver-side metadata: every protocol step is one atomic file
-  * create/list — no Spark job — so the per-batch fixed cost that
-  * dominated the r15 lifecycle timings (two 1-row table-write jobs +
-  * a collect per batch) drops to filesystem latency. This is exactly
-  * the Delta/Iceberg posture: the transaction log is files, only the
-  * data is tables.
+  * of a catalog table because the manifest is pure driver-side
+  * metadata: every protocol step is one atomic file create/list — no
+  * Spark job — so the per-batch fixed cost a table-backed manifest
+  * paid (two 1-row table-write jobs + a collect per batch) drops to
+  * filesystem latency. This is exactly the Delta/Iceberg posture: the
+  * transaction log is files, only the data is tables.
+  *
+  * The index modules never sequence these steps themselves: every
+  * write goes through one of three brackets — [[bootstrap]] (reset,
+  * write generation 0, commit), [[batch]] (claim, write, commit) and
+  * [[flip]] (re-check the compaction's snapshot, carry batch ids,
+  * commit b0, gc) — and every row-level tombstone fold goes through
+  * [[live]]. Each index keeps only its table layout, its projections
+  * and its weighted-sum readers.
   *
   * The protocol — CONCURRENT writers, any number of readers:
   *
@@ -296,7 +304,8 @@ object Generations {
     * for the index's lifetime ([[gc]] never touches it — changing the
     * count means re-bucketing every table, i.e. a fresh bootstrap).
     * One marker file, same discipline as the commit log. */
-  def setBuckets(spark: SparkSession, prefix: String, n: Int): Unit = {
+  private def setBuckets(spark: SparkSession, prefix: String,
+                         n: Int): Unit = {
     require(n >= 1, s"bucket count must be >= 1, got $n")
     val p = new Path(dir(spark, prefix), s"buckets_$n")
     require(claimPrimitive.claim(fsOf(spark, p), p),
@@ -444,5 +453,80 @@ object Generations {
         .foreach { case (g, b, st) =>
           f.delete(marker(spark, prefix, g, b, st), false) }
     }
+  }
+
+  // ------------------------------------------------------ the brackets
+
+  /** Write mode of batch `b`: b = 0 is a generation's first batch and
+    * creates its tables (bootstrap, reroute); every later batch appends
+    * to them. */
+  def modeOf(b: Long): String = if (b == 0L) "overwrite" else "append"
+
+  /** Bootstrap an index: reset its manifest, pin the writer's bucket
+    * count when the index is bucketed, `write` generation 0's tables
+    * as batch 0, then commit g0/b0 — the index is invisible until that
+    * one marker lands. */
+  def bootstrap[A](spark: SparkSession, prefix: String,
+                   buckets: Option[Int])(write: (Long, Long) => A): A = {
+    beginBootstrap(spark, prefix)
+    buckets.foreach(setBuckets(spark, prefix, _))
+    val out = write(0L, 0L)
+    commit(spark, prefix, 0L, 0L)
+    out
+  }
+
+  /** One atomic batch: claim a fresh id in the current generation,
+    * `write` every table's rows stamped with it, commit. A failed write
+    * commits nothing and rethrows — its rows stay invisible under an
+    * id that is never reused, and the next compaction drops them. */
+  def batch[A](spark: SparkSession, prefix: String)(
+      write: (Long, Long) => A): A = {
+    val (g, b) = beginBatch(spark, prefix)
+    val out = write(g, b)
+    commit(spark, prefix, g, b)
+    out
+  }
+
+  /** Make compacted generation `ng` current. `snapshot` is the
+    * committed state the build read; a batch committed since then
+    * appended into the old generation's tables, which the build neither
+    * folded nor copied and [[gc]] is about to drop — so the flip
+    * refuses (no b0 lands, readers stay on the old generation, and the
+    * orphaned tables are reaped after a later flip). The re-list
+    * shrinks the race to one listing; truly concurrent append and
+    * compaction would need a CAS on the flip itself. `carried` are the
+    * old batch ids a partial compaction copied forward: they commit
+    * first and stay invisible until the b0 commit flips the whole set
+    * at once ([[committedState]]'s rule). Then [[gc]]. */
+  def flip(spark: SparkSession, prefix: String, ng: Long,
+           logicals: Seq[String], retain: Int,
+           snapshot: (Long, Seq[Long]), carried: Seq[Long]): Unit = {
+    require(committedState(spark, prefix) == snapshot,
+      s"$prefix: a batch committed during compaction — aborting the " +
+        "flip (single-maintenance-writer contract)")
+    carried.filter(_ != 0L).foreach(commit(spark, prefix, ng, _))
+    commit(spark, prefix, ng, 0L)
+    gc(spark, prefix, ng, logicals, retain)
+  }
+
+  /** The live (tombstone-folded) view of a log-structured table at the
+    * resolved committed state `st`: visible batches only, optionally
+    * `restrict`ed, grouped on `dataCols` with net weight > 0. Both
+    * filters are static predicates that reach the parquet scan, and
+    * the fold commutes with `restrict` whenever its columns are among
+    * `dataCols`. With the bucket key leading `dataCols` the aggregate
+    * takes its distribution from the bucketed read — zero Exchange —
+    * and its output stays partitioned on the bucket key, which is what
+    * every downstream screen or search join needs. */
+  def live(spark: SparkSession, prefix: String, logical: String,
+           st: (Long, Seq[Long]), dataCols: Seq[String],
+           restrict: Option[Column] = None): DataFrame = {
+    val visible = spark.table(physical(prefix, logical, st._1))
+      .filter(col("b").isin(st._2: _*))
+    restrict.fold(visible)(visible.filter)
+      .groupBy(dataCols.map(col): _*)
+      .agg(sum(col("w")).as("net"))
+      .filter(col("net") > 0)
+      .select(dataCols.map(col): _*)
   }
 }

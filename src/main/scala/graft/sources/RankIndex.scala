@@ -20,7 +20,7 @@ import graft.{Caches, Graph}
   * graph (nodes ≪ edges ≪ corpus bytes), the expensive part is the
   * iteration, and warm-starting is what the previous generation buys.
   * Readers resolve the manifest once and keep reading the OLD
-  * generation until the new one's single commit row lands — a crash
+  * generation until the new one's single commit marker lands — a crash
   * mid-refresh leaves an orphan intent generation that is invisible,
   * GC'd by the next successful refresh (RankIndexSpec simulates both).
   */
@@ -32,36 +32,33 @@ object RankIndex {
     * @return rounds the cold convergence ran */
   def bootstrap(nodes: DataFrame, edges: DataFrame, prefix: String,
                 scale: Long = Graph.RefreshScale): Int = {
-    val spark = nodes.sparkSession
-    Generations.beginBootstrap(spark, prefix)
-    val (ranks, rounds) =
-      Graph.pageRankFixedPoint(nodes, edges, scale = scale)
-    val t = Generations.physical(prefix, "ranks", 0L)
-    Sinks.purgeTable(spark, t)
-    ranks.write.mode("overwrite").saveAsTable(t)
-    Generations.commit(spark, prefix, 0L, 0L)
+    val rounds = Generations.bootstrap(nodes.sparkSession, prefix, None) {
+      (g, _) =>
+        val (r, n) = Graph.pageRankFixedPoint(nodes, edges, scale = scale)
+        Sinks.saveTable(r, Generations.physical(prefix, "ranks", g))
+        n
+    }
     Caches.clear()
     rounds
   }
 
   /** Re-converge over the republished graph, warm-started from the
     * CURRENT committed generation's ranks, into a NEW generation;
-    * readers flip atomically on the commit row, then old generations
+    * readers flip atomically on the commit marker, then old generations
     * (and any crashed intents) are GC'd.
     * @return rounds the warm convergence ran */
   def refresh(nodes: DataFrame, newEdges: DataFrame, prefix: String,
               scale: Long = Graph.RefreshScale,
               retain: Int = 0): Int = {
     val spark = nodes.sparkSession
-    val prev = ranks(spark, prefix)
+    val st = Generations.committedState(spark, prefix)
+    val prev = spark.table(Generations.physical(prefix, "ranks", st._1))
     val ng = Generations.beginGeneration(spark, prefix)
     val (r, rounds) = Graph.pageRankFixedPoint(nodes, newEdges,
       init = Some(prev), scale = scale)
-    val t = Generations.physical(prefix, "ranks", ng)
-    Sinks.purgeTable(spark, t) // a crashed intent may have left one
-    r.write.mode("overwrite").saveAsTable(t)
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, logicals, retain)
+    // the purge in saveTable also clears a crashed intent's leftover
+    Sinks.saveTable(r, Generations.physical(prefix, "ranks", ng))
+    Generations.flip(spark, prefix, ng, logicals, retain, st, Nil)
     Caches.clear()
     rounds
   }

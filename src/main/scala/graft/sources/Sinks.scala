@@ -40,7 +40,7 @@ object Sinks {
       df.dropDuplicates(uniqueCols).write.mode("append").parquet(path)
       return
     }
-    // Bloom prefilter on the STANDING side (r22, guide §3.2): the
+    // Bloom prefilter on the STANDING side (guide §3.2): the
     // anti-join needs only the existing rows that could possibly
     // collide with this batch's keys — without the prefilter every
     // append re-reads AND re-shuffles the whole standing table just to
@@ -111,6 +111,17 @@ object Sinks {
       .delete(loc, true)
   }
 
+  /** Write `df` as warehouse table `table`. `overwrite` purges any
+    * stale table and location first and then creates the table
+    * (`errorifexists`: after the purge a leftover is a bug, not data to
+    * replace); other modes pass through. */
+  def saveTable(df: DataFrame, table: String,
+                mode: String = "overwrite"): Unit = {
+    if (mode == "overwrite") purgeTable(df.sparkSession, table)
+    df.write.mode(if (mode == "overwrite") "errorifexists" else mode)
+      .saveAsTable(table)
+  }
+
   /** Run INDEPENDENT sink writes concurrently (guide §2.6 "overlap
     * independent jobs"): Spark's scheduler happily runs several jobs
     * at once inside one application — the index writers' per-ingest
@@ -123,14 +134,14 @@ object Sinks {
     * alone first), or the racing tasks compute the shared cache
     * once each. The first failure propagates with its original
     * exception; remaining tasks are awaited (a torn multi-table
-    * batch stays invisible anyway — only the manifest commit row,
+    * batch stays invisible anyway — only the manifest commit marker,
     * which the caller never writes after a failure, makes it
     * visible). */
   def inParallel(tasks: Seq[() => Unit]): Unit =
     inParallelMap(tasks): Unit
 
   /** [[inParallel]] with results, in task order. EVERY task is awaited
-    * before the first failure rethrows (r21 review fix): abandoning a
+    * before the first failure rethrows: abandoning a
     * still-running sibling write would let the caller's cleanup
     * (Caches unpersist, a retry of the same batch id) race an orphan
     * job still appending rows under the batch id the retry later
@@ -164,7 +175,7 @@ object Sinks {
     require(bucketCols.nonEmpty, "bucketed write needs at least one key")
     val spark = df.sparkSession
     if (mode == "overwrite") purgeTable(spark, table)
-    // pin partition-to-bucket alignment for EVERY bucketed write (r22):
+    // pin partition-to-bucket alignment for EVERY bucketed write:
     // a bucketed saveAsTable emits one file per (task, bucket-held), so
     // an input whose partitioning is not the bucket hash writes up to
     // tasks × buckets files per batch — measured 1533 files on a
@@ -201,7 +212,7 @@ object Sinks {
     * Writing into `to` (the next generation's physical name,
     * [[Generations.physical]]) instead of renaming over `from` is what
     * removes the old missing-table window: readers keep resolving the
-    * previous generation until its [[Generations.commit]] row lands —
+    * previous generation until its [[Generations.commit]] marker lands —
     * the source table is never dropped here (that is post-commit
     * [[Generations.gc]]). The explicit `repartition(numBuckets,
     * bucketKey)` pins partition-to-bucket alignment — repartition's
@@ -223,6 +234,36 @@ object Sinks {
     // bucket alignment (one file per bucket) now lives in writeBucketed
     writeBucketed(net, to, bucketCols, numBuckets, "overwrite")
   }
+
+  /** Full compaction of an index's bucketed `logicals` from the
+    * committed state `st` into generation `ng`: one
+    * [[compactBucketedTo]] per table, the independent legs overlapped
+    * (guide §2.6). */
+  def compactLegs(spark: SparkSession, prefix: String,
+                  logicals: Seq[String], bucketCols: String => Seq[String],
+                  numBuckets: Int, st: (Long, Seq[Long]), ng: Long): Unit =
+    inParallel(logicals.map(l => () =>
+      compactBucketedTo(spark, Generations.physical(prefix, l, st._1),
+        Generations.physical(prefix, l, ng), bucketCols(l), numBuckets,
+        st._2)))
+
+  /** Partial compaction of an index's bucketed `logicals` from `st`
+    * into `ng`: per table, rewrite the tombstoned buckets and carry the
+    * rest ([[partialCompactBucketedTo]]), the legs overlapped.
+    * @return rewritten-bucket count per logical table */
+  def partialCompactLegs(spark: SparkSession, prefix: String,
+                         logicals: Seq[String],
+                         bucketCols: String => Seq[String], numBuckets: Int,
+                         st: (Long, Seq[Long]), ng: Long): Map[String, Int] =
+    inParallelMap(logicals.map(l => () => {
+      val from = Generations.physical(prefix, l, st._1)
+      val touched = tombstonedBuckets(spark, from, bucketCols(l),
+        numBuckets, st._2)
+      partialCompactBucketedTo(spark, from,
+        Generations.physical(prefix, l, ng), bucketCols(l), numBuckets,
+        st._2, touched)
+      l -> touched.size
+    })).toMap
 
   /** Spark's bucket id of a bucketed-table data file name
     * (`part-00000-<uuid>_00017.c000.snappy.parquet` → 17), −1 for
@@ -265,7 +306,7 @@ object Sinks {
     * source, so a batch committed concurrently would be silently
     * dropped from the new generation — callers must re-resolve
     * [[Generations.committedState]] immediately before their b0 flip
-    * and abort on drift (both index compactPartial impls do).
+    * and abort on drift ([[Generations.flip]] does).
     * Untouched buckets keep their
     * one-file-per-batch layout — partial compaction bounds tombstone
     * mass, FULL compaction bounds file count; a maintenance schedule

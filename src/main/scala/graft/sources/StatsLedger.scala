@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Caches, TextOps}
+import graft.TextOps
 
 /** Incrementally maintained CORPUS GOVERNANCE STATS — the
   * [[VectorIndex]] mergeable-partial-aggregate posture applied to the
@@ -34,11 +34,10 @@ object StatsLedger {
 
   /** One tokenization per batch feeds the partial; a takedown (w = -1)
     * re-derives rows matching its insert bit-for-bit. Rows carry the
-    * manifest batch id `b`; callers own the intent/commit bracket. */
+    * manifest batch id `b`; callers run it inside a [[Generations]]
+    * bracket. */
   private def writeAll(df: DataFrame, textCol: String, srcCol: String,
-                       prefix: String, w: Int, gen: Long, b: Long,
-                       mode: String): Unit = {
-    val spark = df.sparkSession
+                       prefix: String, w: Int)(gen: Long, b: Long): Unit = {
     val partial = df
       .select(col(srcCol).as("source"),
         length(col(textCol)).cast("long").as("n_chars"),
@@ -54,36 +53,24 @@ object StatsLedger {
         sum(col("n_stop")).as("n_stop"),
         sum(when(col("n_tokens") < 20, 1L).otherwise(0L)).as("n_short"))
       .withColumn("w", lit(w)).withColumn("b", lit(b))
-    if (mode == "overwrite") Sinks.purgeTable(spark, ledger(prefix, gen))
-    partial.coalesce(1).write
-      .mode(if (mode == "overwrite") "errorifexists" else mode)
-      .saveAsTable(ledger(prefix, gen))
+    Sinks.saveTable(partial.coalesce(1), ledger(prefix, gen),
+      Generations.modeOf(b))
   }
 
   def write(df: DataFrame, textCol: String, srcCol: String,
-            prefix: String): Unit = {
-    val spark = df.sparkSession
-    Generations.beginBootstrap(spark, prefix)
-    writeAll(df, textCol, srcCol, prefix, w = 1, gen = 0L, b = 0L,
-      mode = "overwrite")
-    Generations.commit(spark, prefix, 0L, 0L)
-  }
+            prefix: String): Unit =
+    Generations.bootstrap(df.sparkSession, prefix, None)(
+      writeAll(df, textCol, srcCol, prefix, w = 1))
 
   def append(df: DataFrame, textCol: String, srcCol: String,
              prefix: String): Unit =
-    appendBatch(df, textCol, srcCol, prefix, w = 1)
+    Generations.batch(df.sparkSession, prefix)(
+      writeAll(df, textCol, srcCol, prefix, w = 1))
 
   def delete(df: DataFrame, textCol: String, srcCol: String,
              prefix: String): Unit =
-    appendBatch(df, textCol, srcCol, prefix, w = -1)
-
-  private def appendBatch(df: DataFrame, textCol: String, srcCol: String,
-                          prefix: String, w: Int): Unit = {
-    val spark = df.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    writeAll(df, textCol, srcCol, prefix, w, g, b, mode = "append")
-    Generations.commit(spark, prefix, g, b)
-  }
+    Generations.batch(df.sparkSession, prefix)(
+      writeAll(df, textCol, srcCol, prefix, w = -1))
 
   /** Update the ledger for a republished corpus generation through
     * its diff manifest — cost ∝ |delta|, never |corpus|. The diff
@@ -94,24 +81,22 @@ object StatsLedger {
     * to_json(struct(…)) keeps null text distinct from empty. */
   def refreshFromDiff(oldGen: DataFrame, newGen: DataFrame,
                       idCol: String, textCol: String, srcCol: String,
-                      prefix: String): Unit = {
-    val spark = oldGen.sparkSession
-    // both legs share ONE manifest batch id and ONE commit row — the
+                      prefix: String): Unit =
+    // both legs share ONE manifest batch id and ONE commit marker — the
     // refresh is all-or-nothing against readers and crashes
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    TextOps.refreshViaDiff(oldGen, newGen, idCol,
-      to_json(struct(col(textCol), col(srcCol))))(
-      writeAll(_, textCol, srcCol, prefix, w = -1, g, b, mode = "append"),
-      writeAll(_, textCol, srcCol, prefix, w = 1, g, b, mode = "append"))
-    Generations.commit(spark, prefix, g, b)
-  }
+    Generations.batch(oldGen.sparkSession, prefix) { (g, b) =>
+      TextOps.refreshViaDiff(oldGen, newGen, idCol,
+        to_json(struct(col(textCol), col(srcCol))))(
+        writeAll(_, textCol, srcCol, prefix, w = -1)(g, b),
+        writeAll(_, textCol, srcCol, prefix, w = 1)(g, b))
+    }
 
   /** Compact the ledger into the next generation: one netted row per
-    * source, then the one-row flip + GC (the [[Bm25Index.compact]]
+    * source, then the commit-marker flip + GC (the [[Bm25Index.compact]]
     * stats posture). */
   def compact(spark: SparkSession, prefix: String,
               retain: Int = 0): Unit = {
-    val (gen, bs) = Generations.committedState(spark, prefix)
+    val st @ (gen, bs) = Generations.committedState(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
     val net = spark.table(ledger(prefix, gen))
       .filter(col("b").isin(bs: _*))
@@ -123,11 +108,8 @@ object StatsLedger {
         sum(col("n_short") * col("w")).as("n_short"))
       .filter(col("n_docs") =!= 0)
       .withColumn("w", lit(1)).withColumn("b", lit(0L))
-    val tgt = ledger(prefix, ng)
-    Sinks.purgeTable(spark, tgt)
-    net.coalesce(1).write.mode("errorifexists").saveAsTable(tgt)
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
+    Sinks.saveTable(net.coalesce(1), ledger(prefix, ng))
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
   }
 
   /** Finish the reduce: the live per-source data card. One scan of a

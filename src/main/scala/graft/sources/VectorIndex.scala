@@ -31,12 +31,12 @@ import graft.{Caches, Similarity}
   * reduce over a |blocks × batches|-row table instead of the corpus.
   *
   * Every batch is ATOMIC via the [[Generations]] manifest (rows stamped
-  * with batch id `b`, one commit-row flip): a crash between the vectors
-  * write and the centroid-partial write can never leave readers with
-  * vectors whose block has no centroid mass (or vice versa), and
+  * with batch id `b`, one commit-marker flip): a crash between the
+  * vectors write and the centroid-partial write can never leave readers
+  * with vectors whose block has no centroid mass (or vice versa), and
   * [[compact]] builds the next table generation fully before the
-  * one-row flip — no purge-then-rename window. The PQ codes layer has
-  * its own independent manifest (`<prefix>_pq`), since the two layers
+  * commit-marker flip — no purge-then-rename window. The PQ codes layer
+  * has its own independent manifest (`<prefix>_pq`), since the two layers
   * have independent lifecycles.
   *
   * [[search]] is [[graft.Similarity.ivfTopK]]'s routed shape against
@@ -62,11 +62,12 @@ object VectorIndex {
 
   /** One quantization pass feeds both tables; a takedown (w = -1)
     * re-derives rows matching its insert bit-for-bit. Rows carry the
-    * manifest batch id `b`; callers own the intent/commit bracket. */
+    * manifest batch id `b`; callers run it inside a [[Generations]]
+    * bracket. */
   private def writeAll(df: DataFrame, idCol: String, vecCol: String,
-                       blockCol: String, prefix: String, w: Int,
-                       gen: Long, b: Long, mode: String): Unit = {
-    val spark = df.sparkSession
+                       blockCol: String, prefix: String, w: Int)(
+                       gen: Long, b: Long): Unit = {
+    val mode = Generations.modeOf(b)
     val vecs = Caches.persistTracked(
       df.select(col(blockCol).as("block"), col(idCol).as("vec_id"),
           Similarity.quantize(col(vecCol)).as("q"))
@@ -84,45 +85,30 @@ object VectorIndex {
       .join(vecs.groupBy("block").agg(count(lit(1)).as("cnt")),
         Seq("block"))
       .withColumn("w", lit(w)).withColumn("b", lit(b))
-    val tgt = phys(prefix, "centroids", gen)
-    if (mode == "overwrite") Sinks.purgeTable(spark, tgt)
-    partial.write.mode(if (mode == "overwrite") "errorifexists" else mode)
-      .saveAsTable(tgt)
+    Sinks.saveTable(partial, phys(prefix, "centroids", gen), mode)
   }
 
   /** Bootstrap from a corpus snapshot; steady state is
     * [[append]]/[[delete]] only. */
   def write(df: DataFrame, idCol: String, vecCol: String,
-            blockCol: String, prefix: String): Unit = {
-    val spark = df.sparkSession
-    Generations.beginBootstrap(spark, prefix)
-    writeAll(df, idCol, vecCol, blockCol, prefix, w = 1, gen = 0L,
-      b = 0L, mode = "overwrite")
-    Generations.commit(spark, prefix, 0L, 0L)
-  }
+            blockCol: String, prefix: String): Unit =
+    Generations.bootstrap(df.sparkSession, prefix, None)(
+      writeAll(df, idCol, vecCol, blockCol, prefix, w = 1))
 
   /** Fold a new batch in (id-unique contract: appended vec_ids are
     * new). Pure row-appends — one file per bucket per batch plus a
     * |blocks|-row centroid partial; both flip visible on one commit. */
   def append(df: DataFrame, idCol: String, vecCol: String,
              blockCol: String, prefix: String): Unit =
-    appendBatch(df, idCol, vecCol, blockCol, prefix, w = 1)
+    Generations.batch(df.sparkSession, prefix)(
+      writeAll(df, idCol, vecCol, blockCol, prefix, w = 1))
 
   /** Takedown: the same projections with w = -1 — the centroid
     * partial cancels the insert's exactly (integer sums). */
   def delete(df: DataFrame, idCol: String, vecCol: String,
              blockCol: String, prefix: String): Unit =
-    appendBatch(df, idCol, vecCol, blockCol, prefix, w = -1)
-
-  private def appendBatch(df: DataFrame, idCol: String, vecCol: String,
-                          blockCol: String, prefix: String,
-                          w: Int): Unit = {
-    val spark = df.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    writeAll(df, idCol, vecCol, blockCol, prefix, w, g, b,
-      mode = "append")
-    Generations.commit(spark, prefix, g, b)
-  }
+    Generations.batch(df.sparkSession, prefix)(
+      writeAll(df, idCol, vecCol, blockCol, prefix, w = -1))
 
   /** INCREMENTAL refresh from a vector-corpus generation diff — the
     * [[Bm25Index.refreshFromDiff]] discipline for embeddings, closing
@@ -133,7 +119,7 @@ object VectorIndex {
     * vectors re-derive their w = −1 projections from the OLD
     * generation's rows (the signed centroid partial cancels the
     * original insert's exactly — integer sums), added+changed append
-    * the NEW rows. Both legs share ONE batch id and ONE commit row —
+    * the NEW rows. Both legs share ONE batch id and ONE commit marker —
     * the refresh is all-or-nothing against readers and crashes, and
     * post-refresh the index answers exactly as one bootstrapped fresh
     * on `newGen` (the q177 gate shares q160's oracle). Cost ∝ |delta|
@@ -142,18 +128,14 @@ object VectorIndex {
     */
   def refreshFromDiff(oldGen: DataFrame, newGen: DataFrame,
                       idCol: String, vecCol: String, blockCol: String,
-                      prefix: String): Unit = {
-    val spark = oldGen.sparkSession
-    val (g, b) = Generations.beginBatch(spark, prefix)
-    val sig = md5(concat_ws(",",
-      transform(col(vecCol), x => x.cast("string"))))
-    graft.TextOps.refreshViaDiff(oldGen, newGen, idCol, sig)(
-      writeAll(_, idCol, vecCol, blockCol, prefix, w = -1, g, b,
-        mode = "append"),
-      writeAll(_, idCol, vecCol, blockCol, prefix, w = 1, g, b,
-        mode = "append"))
-    Generations.commit(spark, prefix, g, b)
-  }
+                      prefix: String): Unit =
+    Generations.batch(oldGen.sparkSession, prefix) { (g, b) =>
+      val sig = md5(concat_ws(",",
+        transform(col(vecCol), x => x.cast("string"))))
+      graft.TextOps.refreshViaDiff(oldGen, newGen, idCol, sig)(
+        writeAll(_, idCol, vecCol, blockCol, prefix, w = -1)(g, b),
+        writeAll(_, idCol, vecCol, blockCol, prefix, w = 1)(g, b))
+    }
 
   /** Finish the centroid reduce over the signed partial log at the
     * resolved committed state: blocks with a live member count, their
@@ -183,12 +165,9 @@ object VectorIndex {
   private def liveVectors(spark: SparkSession, prefix: String,
                           st: (Long, Seq[Long]),
                           blocks: Seq[Any]): DataFrame =
-    spark.table(phys(prefix, "vectors", st._1))
-      .filter(col("b").isin(st._2: _*))
-      .filter(col("block").isin(blocks: _*))
-      .groupBy("block", "vec_id", "q", "norm2")
-      .agg(sum(col("w")).as("net")).filter(col("net") > 0)
-      .select("block", "vec_id", "q", "norm2")
+    Generations.live(spark, prefix, "vectors", st,
+      Seq("block", "vec_id", "q", "norm2"),
+      Some(col("block").isin(blocks: _*)))
 
   /** Route + rank a bounded probe batch (probe_id, pq, pnorm2 — see
     * [[graft.Similarity.probes]]) against the live index: nprobe
@@ -279,19 +258,11 @@ object VectorIndex {
   /** Compact into the NEXT generation: vectors to one live file per
     * bucket (tombstoned pairs and uncommitted orphans physically
     * drop), centroid log netted to one row per block — then the
-    * one-row manifest flip and post-commit GC. Readers resolve the old
-    * generation until the flip. */
+    * commit-marker flip and post-commit GC. Readers resolve the old
+    * generation until the flip; a batch committed during the rewrite
+    * aborts it. */
   def compact(spark: SparkSession, prefix: String,
               retain: Int = 0): Unit = {
-    val ng = buildNextGeneration(spark, prefix)
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
-  }
-
-  /** Compaction's build phase (intent + next-generation tables, NO
-    * commit) — split out for GenerationsSpec's interleaved reads. */
-  private[graft] def buildNextGeneration(spark: SparkSession,
-                                         prefix: String): Long = {
     val st @ (gen, bs) = Generations.committedState(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
     Sinks.compactBucketedTo(spark, phys(prefix, "vectors", gen),
@@ -304,10 +275,8 @@ object VectorIndex {
         Seq("block"))
       .select(col("block"), col("cq"), col("cnt"), lit(1).as("w"),
         lit(0L).as("b"))
-    val tgt = phys(prefix, "centroids", ng)
-    Sinks.purgeTable(spark, tgt)
-    net.coalesce(1).write.mode("errorifexists").saveAsTable(tgt)
-    ng
+    Sinks.saveTable(net.coalesce(1), phys(prefix, "centroids", ng))
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
   }
 
   // ---------------------------------------------------------------
@@ -335,17 +304,15 @@ object VectorIndex {
     * learned bootstrap. */
   def trainCoarse(df: DataFrame, idCol: String, vecCol: String,
                   prefix: String, k: Int = 4, iters: Int = 3): Unit = {
-    val spark = df.sparkSession
     val cens = Similarity.trainKmeans(df, idCol, vecCol, k, iters)
-    val s = spark
+    val s = df.sparkSession
     import s.implicits._
     val rows = for {
       (c, cl) <- cens.zipWithIndex.toSeq
       (v, d) <- c.zipWithIndex.toSeq
     } yield (cl, d, v)
-    Sinks.purgeTable(spark, coarseT(prefix))
-    rows.toDF("cl", "d", "cv").coalesce(1).write
-      .mode("errorifexists").saveAsTable(coarseT(prefix))
+    Sinks.saveTable(rows.toDF("cl", "d", "cv").coalesce(1),
+      coarseT(prefix))
   }
 
   /** Reuse an ALREADY-TRAINED coarse quantizer under a new index
@@ -355,11 +322,8 @@ object VectorIndex {
     * gate re-pays the k-means corpus passes for bit-identical
     * centroids). Copies the bounded k×dim table — one tiny job, no
     * corpus scan. */
-  def reuseCoarse(spark: SparkSession, from: String, to: String): Unit = {
-    Sinks.purgeTable(spark, coarseT(to))
-    spark.table(coarseT(from)).coalesce(1).write
-      .mode("errorifexists").saveAsTable(coarseT(to))
-  }
+  def reuseCoarse(spark: SparkSession, from: String, to: String): Unit =
+    Sinks.saveTable(spark.table(coarseT(from)).coalesce(1), coarseT(to))
 
   /** The bounded coarse table read back as the centroid matrix. */
   private def loadCoarse(spark: SparkSession,
@@ -399,7 +363,7 @@ object VectorIndex {
       "_lblock", prefix)
 
   /** DRIFT-TRIGGERED RE-ROUTE — the loop that closes the learned-ANN
-    * story (r15's open end): a TRAINED quantizer is a snapshot of the
+    * story: a TRAINED quantizer is a snapshot of the
     * corpus distribution, and when the distribution moves (the
     * caller's drift gate — [[graft.Similarity.embeddingDrift]] against
     * the previous generation, the q141 metric — crossed its
@@ -427,16 +391,16 @@ object VectorIndex {
               prefix: String, k: Int = 4, iters: Int = 3,
               retain: Int = 0): Unit = {
     val spark = df.sparkSession
+    val st = Generations.committedState(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
     trainCoarse(df, idCol, vecCol, prefix, k, iters)
     writeAll(withLearnedBlock(df, vecCol, prefix), idCol, vecCol,
-      "_lblock", prefix, w = 1, gen = ng, b = 0L, mode = "overwrite")
-    Generations.commit(spark, prefix, ng, 0L)
-    Generations.gc(spark, prefix, ng, Logicals, retain)
+      "_lblock", prefix, w = 1)(ng, 0L)
+    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
   }
 
   /** [[trainCodebook]] with codewords = the LEARNED clusters instead
-    * of caller labels — the r14 verdict's second missing composition:
+    * of caller labels:
     * the PQ codebook of a production index is trained per coarse
     * cluster, so reconstruction quality tracks the actual routing
     * geometry. */
@@ -496,7 +460,6 @@ object VectorIndex {
     */
   def trainCodebook(df: DataFrame, vecCol: String,
                     blockCol: String, prefix: String): Unit = {
-    val spark = df.sparkSession
     val cb = df
       .select(col(blockCol).cast("int").as("cl"),
         Similarity.quantize(col(vecCol)).as("q"))
@@ -506,9 +469,7 @@ object VectorIndex {
       .select(col("cl"), col("d"),
         ((col("sv") - pmod(col("sv"), col("cnt"))) / col("cnt"))
           .cast("long").as("cv"))
-    val tgt = phys(pqPrefix(prefix), "codebook", 0L)
-    Sinks.purgeTable(spark, tgt)
-    cb.coalesce(1).write.mode("errorifexists").saveAsTable(tgt)
+    Sinks.saveTable(cb.coalesce(1), phys(pqPrefix(prefix), "codebook", 0L))
   }
 
   /** The bounded codebook of generation `gen` read back: (dim, sorted
@@ -530,8 +491,8 @@ object VectorIndex {
     * with w = -1. Codes are bucketed by block like the full-precision
     * vectors and stamped with the manifest batch id. */
   private def writeAllCodes(df: DataFrame, idCol: String, vecCol: String,
-                            blockCol: String, prefix: String, w: Int,
-                            gen: Long, b: Long, mode: String): Unit = {
+                            blockCol: String, prefix: String, w: Int)(
+                            gen: Long, b: Long): Unit = {
     val spark = df.sparkSession
     val (dim, labels, cb) = loadCodebook(spark, prefix, gen)
     require(dim % Subspaces == 0, s"dim $dim must split into $Subspaces")
@@ -554,36 +515,24 @@ object VectorIndex {
         array((0 until Subspaces).map(codeExpr): _*).as("codes"))
       .withColumn("w", lit(w)).withColumn("b", lit(b))
     Sinks.writeBucketed(coded, phys(pqPrefix(prefix), "codes", gen),
-      Seq("block"), Buckets, mode)
+      Seq("block"), Buckets, Generations.modeOf(b))
   }
 
   /** Bootstrap the codes log (codebook must be trained first). */
   def writeCodes(df: DataFrame, idCol: String, vecCol: String,
-                 blockCol: String, prefix: String): Unit = {
-    val spark = df.sparkSession
-    Generations.beginBootstrap(spark, pqPrefix(prefix))
-    writeAllCodes(df, idCol, vecCol, blockCol, prefix, w = 1, gen = 0L,
-      b = 0L, mode = "overwrite")
-    Generations.commit(spark, pqPrefix(prefix), 0L, 0L)
-  }
+                 blockCol: String, prefix: String): Unit =
+    Generations.bootstrap(df.sparkSession, pqPrefix(prefix), None)(
+      writeAllCodes(df, idCol, vecCol, blockCol, prefix, w = 1))
 
   def appendCodes(df: DataFrame, idCol: String, vecCol: String,
                   blockCol: String, prefix: String): Unit =
-    appendCodesBatch(df, idCol, vecCol, blockCol, prefix, w = 1)
+    Generations.batch(df.sparkSession, pqPrefix(prefix))(
+      writeAllCodes(df, idCol, vecCol, blockCol, prefix, w = 1))
 
   def deleteCodes(df: DataFrame, idCol: String, vecCol: String,
                   blockCol: String, prefix: String): Unit =
-    appendCodesBatch(df, idCol, vecCol, blockCol, prefix, w = -1)
-
-  private def appendCodesBatch(df: DataFrame, idCol: String,
-                               vecCol: String, blockCol: String,
-                               prefix: String, w: Int): Unit = {
-    val spark = df.sparkSession
-    val (g, b) = Generations.beginBatch(spark, pqPrefix(prefix))
-    writeAllCodes(df, idCol, vecCol, blockCol, prefix, w, g, b,
-      mode = "append")
-    Generations.commit(spark, pqPrefix(prefix), g, b)
-  }
+    Generations.batch(df.sparkSession, pqPrefix(prefix))(
+      writeAllCodes(df, idCol, vecCol, blockCol, prefix, w = -1))
 
   /** ADC search over the standing codes: probes exact (the
     * [[graft.Similarity.probes]] projection), corpus reconstructed
@@ -603,10 +552,8 @@ object VectorIndex {
     // codebook must fail loudly, not silently truncate reconstruction
     require(dim % Subspaces == 0, s"dim $dim must split into $Subspaces")
     val subDim = dim / Subspaces
-    val live = spark.table(phys(pqPrefix(prefix), "codes", st._1))
-      .filter(col("b").isin(st._2: _*))
-      .groupBy("block", "vec_id", "codes")
-      .agg(sum(col("w")).as("net")).filter(col("net") > 0)
+    val live = Generations.live(spark, pqPrefix(prefix), "codes", st,
+        Seq("block", "vec_id", "codes"))
       .select("vec_id", "codes")
     val r = concat((0 until Subspaces).map { s =>
       val subMap = labels.map(l =>
@@ -630,18 +577,16 @@ object VectorIndex {
 
   /** Compact the codes log into the next generation (codebook copied
     * forward — codes and their codebook travel together), then the
-    * one-row flip + GC. */
+    * commit-marker flip + GC. */
   def compactCodes(spark: SparkSession, prefix: String,
                    retain: Int = 0): Unit = {
-    val (gen, bs) = Generations.committedState(spark, pqPrefix(prefix))
-    val ng = Generations.beginGeneration(spark, pqPrefix(prefix))
-    Sinks.compactBucketedTo(spark, phys(pqPrefix(prefix), "codes", gen),
-      phys(pqPrefix(prefix), "codes", ng), Seq("block"), Buckets, bs)
-    val cbTgt = phys(pqPrefix(prefix), "codebook", ng)
-    Sinks.purgeTable(spark, cbTgt)
-    spark.table(phys(pqPrefix(prefix), "codebook", gen))
-      .coalesce(1).write.mode("errorifexists").saveAsTable(cbTgt)
-    Generations.commit(spark, pqPrefix(prefix), ng, 0L)
-    Generations.gc(spark, pqPrefix(prefix), ng, PqLogicals, retain)
+    val pq = pqPrefix(prefix)
+    val st = Generations.committedState(spark, pq)
+    val ng = Generations.beginGeneration(spark, pq)
+    Sinks.compactBucketedTo(spark, phys(pq, "codes", st._1),
+      phys(pq, "codes", ng), Seq("block"), Buckets, st._2)
+    Sinks.saveTable(spark.table(phys(pq, "codebook", st._1)).coalesce(1),
+      phys(pq, "codebook", ng))
+    Generations.flip(spark, pq, ng, PqLogicals, retain, st, Nil)
   }
 }

@@ -5,8 +5,9 @@ import graft.{Caches, GraftSession, SparkEntry}
 /** Timing helper for one query: repeated noop-sink materializations
   * (same methodology as Bench) so a change's effect on a single query
   * is measurable without the full bench loop. Each iteration prints its
-  * wall time and how many classes it compiled; a query whose later
-  * iterations still compile is recompiling its plan on every call.
+  * wall time and how many classes it compiled, followed by one `[job]`
+  * row per Spark job it ran; a query whose later iterations still
+  * compile is recompiling its plan on every call.
   * Usage:
   *   runMain graft.tools.Profile <sfDir> <query> [iters]
   */
@@ -16,33 +17,31 @@ object Profile {
     val name = args(1)
     val iters = if (args.length > 2) args(2).toInt else 3
     val spark = GraftSession.get("graft-profile")
-    // opt-in job-time breakdown (SPARK_GRAFT_PROFILE_JOBS=1): wall per
-    // job with its description/callsite, so a many-job lifecycle query
-    // shows WHERE the seconds go (r22 — the 8-vs-32-core inversion hunt)
+    // job-time breakdown: wall per job with its description/callsite,
+    // so a many-job lifecycle query shows WHERE the seconds go
     val jobLog =
       new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val d = Option(j.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .orElse(Option(j.properties)
-                .flatMap(p => Option(p.getProperty("callSite.short"))))
-              .getOrElse(j.stageInfos.lastOption.map(s =>
-                s"${s.name.takeWhile(_ != '\n')} [${j.stageInfos.map(_.numTasks).sum} tasks]")
-                .getOrElse("?"))
-            jobLog.put(j.jobId, (d, j.time))
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val d = Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .orElse(Option(j.properties)
+              .flatMap(p => Option(p.getProperty("callSite.short"))))
+            .getOrElse(j.stageInfos.lastOption.map(s =>
+              s"${s.name.takeWhile(_ != '\n')} [${j.stageInfos.map(_.numTasks).sum} tasks]")
+              .getOrElse("?"))
+          jobLog.put(j.jobId, (d, j.time))
+        }
+        override def onJobEnd(
+            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          Option(jobLog.get(j.jobId)).foreach { case (d, t0) =>
+            rows.add(f"[job] ${j.jobId}%4d ${(j.time - t0) / 1e3}%8.3f s  $d")
           }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            Option(jobLog.get(j.jobId)).foreach { case (d, t0) =>
-              rows.add(f"[job] ${j.jobId}%4d ${(j.time - t0) / 1e3}%8.3f s  $d")
-            }
-          }
-        })
+        }
+      })
     val fn = SparkEntry.queries(name)
     for (i <- 1 to iters) {
       val t0 = System.nanoTime()

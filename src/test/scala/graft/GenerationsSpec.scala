@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Bm25Index, DedupIndex, Generations}
+import graft.sources.{Bm25Index, DedupIndex, Generations, StatsLedger,
+  VectorIndex}
 
 /** The atomic-commit contract of the standing-index family
   * ([[graft.sources.Generations]]): a reader NEVER observes a missing
   * table, a half-written batch, or a mixed-generation index —
-  * maintenance becomes visible only through the one-row manifest
-  * commit. Simulated crashes = running the build/append phases without
-  * their commit call (the exact prefix of work a real crash leaves).
+  * maintenance becomes visible only through one manifest commit
+  * marker. Simulated crashes = running the build/append phases without
+  * their commit call (the exact prefix of work a real crash leaves);
+  * the failed-write case plants a real failing write job instead.
   */
 class GenerationsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -32,7 +35,7 @@ class GenerationsSpec extends AnyFunSuite {
     assert(before.nonEmpty)
     // the build phase: full next-generation tables exist on disk, but
     // no commit row — readers must keep resolving the old generation
-    val ng = Bm25Index.buildNextGeneration(spark, p)
+    val (_, ng) = Bm25Index.buildNextGeneration(spark, p)
     assert(Generations.committedState(spark, p)._1 != ng,
       "uncommitted generation leaked into the committed state")
     assert(run() == before, "search diverged mid-compaction")
@@ -63,7 +66,7 @@ class GenerationsSpec extends AnyFunSuite {
       .collect().toSeq
     val before = screen()
     assert(before.nonEmpty)
-    val orphan = DedupIndex.buildNextGeneration(spark, p) // crash here
+    val (_, orphan) = DedupIndex.buildNextGeneration(spark, p) // crash here
     assert(screen() == before, "interrupted compaction changed answers")
     Caches.clear()
     // recovery: a later compaction allocates a FRESH generation (the
@@ -87,8 +90,9 @@ class GenerationsSpec extends AnyFunSuite {
     def run() = Bm25Index.search(spark, p, qs).collect().toSeq
     val before = run()
     // all four tables now hold the crashed batch's rows — none visible
-    val (g, orphanB) = Bm25Index.appendUncommitted(
-      docs.filter(col("doc_id") % 5 === 3), "doc_id", "text", p)
+    val (g, orphanB) = Generations.beginBatch(spark, p)
+    Bm25Index.writeClaimed(docs.filter(col("doc_id") % 5 === 3), "doc_id",
+      "text", p, g, orphanB)
     assert(spark.table(s"${p}_postings").filter(col("b") === orphanB)
       .count() > 0, "the crash simulation wrote nothing")
     assert(run() == before, "uncommitted batch leaked into search")
@@ -434,5 +438,144 @@ class GenerationsSpec extends AnyFunSuite {
     assert(b1.filter($"doc_id" === 3L && $"w" === -1).count() > 0)
     assert(b1.filter($"doc_id" === 4L && $"w" === 1).count() > 0)
     Caches.clear()
+  }
+
+  test("full compaction refuses to flip over a batch committed during " +
+    "its build: the late batch stays visible, and the next compaction " +
+    "folds it in") {
+    import spark.implicits._
+    val p = "tgen14"
+    DedupIndex.write(Seq((1L, "alpha beta gamma delta epsilon"),
+      (2L, "zeta eta theta iota kappa")).toDF("doc_id", "text"),
+      "doc_id", "text", p)
+    val (st, ng) = DedupIndex.buildNextGeneration(spark, p)
+    // doc X commits into the OLD generation while the next one builds
+    val x = Seq((3L, "the late batch lands mid compaction"))
+      .toDF("doc_id", "text")
+    DedupIndex.append(x, "doc_id", "text", p)
+    val flipped = scala.util.Try(
+      Generations.flip(spark, p, ng, DedupIndex.Logicals, 0, st, Nil))
+    def known() = DedupIndex.screenExact(spark, x, "doc_id", "text", p)
+      .collect().map(_.getAs[Boolean]("is_known")).toSeq
+    assert(known() == Seq(true),
+      "the batch committed during compaction was lost by the flip")
+    assert(flipped.isFailure, "the flip ignored a concurrent commit")
+    assert(Generations.committedState(spark, p)._1 == st._1)
+    DedupIndex.compact(spark, p)
+    assert(Generations.committedState(spark, p)._1 > ng)
+    assert(known() == Seq(true), "the recovery compaction dropped X")
+    Caches.clear()
+  }
+
+  /** One log lifecycle of the standing-index family, as the
+    * failed-write test drives it. Frames carry (id, payload, group):
+    * (doc_id, text, source) for the text indexes, (vec_id, embedding,
+    * label) for the vector layers. */
+  private case class Lifecycle(name: String, vectors: Boolean,
+                               boot: (DataFrame, String) => Unit,
+                               append: (DataFrame, String) => Unit,
+                               compact: String => Unit,
+                               read: String => Seq[String],
+                               manifest: String => String = identity)
+
+  test("a REAL failed write (a projection that raises at execution) " +
+    "leaves every log lifecycle exactly as it was; the next batch " +
+    "gets a higher id and compaction answers as if it never ran") {
+    import spark.implicits._
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val qs = Seq(("q1", "quick brown"), ("q2", "lazy dog"))
+    val screen = Seq((100L, "the quick brown fox jumps over it"),
+      (101L, "a lazy dog sleeps all night long")).toDF("doc_id", "text")
+    def vec(seed: Int): Array[Float] =
+      (0 until 16).map(d => ((seed * 7 + d * 13) % 201 - 100) / 100.0f)
+        .toArray
+    // frames come from an RDD, not a local relation, so the planted
+    // raise_error runs inside the write job instead of being folded at
+    // planning time
+    val text = Seq(
+      (1L, "the quick brown fox jumps over it", "web"),
+      (2L, "a lazy dog sleeps all day long", "news"),
+      (3L, "the quick brown fox leaps over it", "web"),
+      (4L, "a lazy dog sleeps all night long", "news"),
+      (5L, "order data zzz and the quick cat", "web"))
+    val vecs = (1 to 10).map(i => (i.toLong, vec(i % 6), i % 2))
+    def textF(ids: Long => Boolean) = spark.sparkContext
+      .parallelize(text.filter(r => ids(r._1)), 2)
+      .toDF("doc_id", "text", "source")
+    def vecF(ids: Long => Boolean) = spark.sparkContext
+      .parallelize(vecs.filter(r => ids(r._1)), 2)
+      .toDF("vec_id", "embedding", "label")
+    val probes = Similarity.probes(
+      Seq((200L, vec(1), 0), (201L, vec(4), 1))
+        .toDF("vec_id", "embedding", "label"),
+      "vec_id", "embedding", lit(true))
+    val cases = Seq(
+      Lifecycle("dedup", vectors = false,
+        DedupIndex.write(_, "doc_id", "text", _),
+        DedupIndex.append(_, "doc_id", "text", _),
+        DedupIndex.compact(spark, _),
+        p => sorted(DedupIndex.screenNearDup(spark, screen, "doc_id",
+          "text", p, threshold = 0.3))),
+      Lifecycle("bm25", vectors = false,
+        Bm25Index.write(_, "doc_id", "text", _),
+        Bm25Index.append(_, "doc_id", "text", _),
+        Bm25Index.compact(spark, _),
+        p => sorted(Bm25Index.search(spark, p, qs))),
+      Lifecycle("vector", vectors = true,
+        VectorIndex.write(_, "vec_id", "embedding", "label", _),
+        VectorIndex.append(_, "vec_id", "embedding", "label", _),
+        VectorIndex.compact(spark, _),
+        p => sorted(VectorIndex.search(spark, p, probes, 2, nprobe = 2))),
+      Lifecycle("pq", vectors = true,
+        (df, p) => {
+          VectorIndex.trainCodebook(vecF(_ => true), "embedding", "label",
+            p)
+          VectorIndex.writeCodes(df, "vec_id", "embedding", "label", p)
+        },
+        VectorIndex.appendCodes(_, "vec_id", "embedding", "label", _),
+        VectorIndex.compactCodes(spark, _),
+        p => sorted(VectorIndex.searchAdc(spark, p, probes, 2)),
+        manifest = p => s"${p}_pq"),
+      Lifecycle("ledger", vectors = false,
+        StatsLedger.write(_, "text", "source", _),
+        StatsLedger.append(_, "text", "source", _),
+        StatsLedger.compact(spark, _),
+        p => sorted(StatsLedger.profile(spark, p))))
+    def planted(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).exists(t =>
+        Option(t.getMessage).exists(_.contains("planted")))
+    for (c <- cases) {
+      val (p, ref) = (s"tfail_${c.name}", s"tfail_${c.name}_ref")
+      val (base, good, bad) =
+        if (c.vectors) (vecF(_ <= 6), vecF(_ > 6),
+          vecF(_ > 6).withColumn("embedding", when(col("vec_id") === 8L,
+            raise_error(lit("planted"))).otherwise(col("embedding"))))
+        else (textF(_ <= 3), textF(_ > 3),
+          textF(_ > 3).withColumn("text", when(col("doc_id") === 5L,
+            raise_error(lit("planted"))).otherwise(col("text"))))
+      c.boot(base, p)
+      val st0 = Generations.committedState(spark, c.manifest(p))
+      val before = c.read(p)
+      Caches.clear()
+      val e = intercept[Exception](c.append(bad, p))
+      assert(planted(e), s"${c.name}: failed for another reason: $e")
+      Caches.clear()
+      assert(Generations.committedState(spark, c.manifest(p)) == st0,
+        s"${c.name}: the failed batch changed the committed state")
+      assert(c.read(p) == before, s"${c.name}: answers moved")
+      Caches.clear()
+      val failedB = Generations.rows(spark, c.manifest(p))
+        .filter(_._3 == "intent").map(_._2).max
+      c.append(good, p)
+      assert(Generations.committedState(spark, c.manifest(p))._2.max >
+        failedB, s"${c.name}: the failed batch's id was reused")
+      c.compact(p)
+      c.boot(base, ref)
+      c.append(good, ref)
+      assert(c.read(p) == c.read(ref),
+        s"${c.name}: compacted answers differ from an index that never " +
+          "saw the failed batch")
+      Caches.clear()
+    }
   }
 }
