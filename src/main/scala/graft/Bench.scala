@@ -101,8 +101,11 @@ object Bench {
   /** [[headline]] with the subset request injectable (spec hook). */
   private[graft] def headline(subsetEnv: Option[String]): Seq[String] = {
     val preferred = Seq(
-      // first rows: the code-independent drift controls (benchOnly)
+      // the code-independent drift controls (benchOnly)
       "q00x_drift_probe", "q00y_drift_probe_cpu",
+      // single-plan operators: scans, aggregates, joins, windows, MERGE,
+      // exact and approximate dedup, similarity joins, ANN, temporal
+      // analytics, corpus filters and the listing-ETL profiles
       "q02_pricing_summary", "q05_latest_per_group", "q10_join_agg",
       "q11_join_5way", "q14_self_join_dup", "q16_window_seq_id",
       "q17_topk_per_group", "q18_running_agg", "q28_merge_upsert",
@@ -129,116 +132,101 @@ object Bench {
       "q116_heavy_hitters", "q117_rate_anomaly",
       "q118_constraint_check", "q119_scd2_incremental",
       "q121_vocab_encode",
-      // the production standing-index screens: each run times the full
-      // registered lifecycle (bootstrap write + append + screen) — the
-      // steady-state screen-only cost is SCALING.md's index-ab probe
-      // row; benching the registered form here makes the flagship
-      // driver-visible instead of probe-only
+      // the standing-index screens: each run times the full registered
+      // lifecycle (bootstrap write + append + screen); the steady-state
+      // screen-only cost is SCALING.md's index-ab probe row
       "q98_neardup_indexed", "q99_exact_indexed",
-      // round-14: the full delete/compact lifecycle (bootstrap + append
-      // + tombstone + three-table compaction + screen) — the takedown
-      // maintenance cost, driver-visible like the q98/q99 ingest cost
+      // the delete/compact lifecycle (bootstrap + append + tombstone +
+      // three-table compaction + screen): the takedown maintenance cost
       "q129_neardup_deleted", "q130_exact_deleted",
-      // round-13 additions: synthesized-JPEG decode scan, BPE learn +
-      // corpus encode
+      // JPEG header decode scan, BPE learn + corpus encode + packing,
+      // trigram language id, SQ8 recall, semantic decontamination
       "q122_jpeg_meta", "q123_bpe_merges", "q124_bpe_encode",
       "q125_langid_trigram", "q126_sq8_recall", "q127_semantic_decontam",
       "q128_bpe_packing",
-      // round-14: synthesized-BMP pixel decode + dHash + banded
-      // hamming near-dup (the image-content dedup path); IVF-PQ
-      // codebook/reconstruction fidelity gate
+      // BMP pixel decode + dHash + banded hamming near-dup, IVF-PQ
+      // codebook and ADC fidelity, audio features and prints, video
+      // frames, the curation manifest and embedding drift
       "q133_image_phash_dedup", "q134_pq_recall", "q135_pq_adc_recall",
       "q137_audio_features", "q138_audio_phash_dedup",
       "q139_video_frames", "q140_curation_manifest",
       "q141_embedding_drift",
-      // round-14 second tranche: substring-span dedup (rolling-window
-      // scan + one count shuffle), 10-round fixed-point PageRank
-      // (iterative checkpoints — the only multi-job headline entry),
-      // mixing planner (agg-only), hard-negative broadcast-probe scan
+      // substring-span dedup (rolling-window scan + one count shuffle),
+      // 10-round PageRank (iterative checkpoints, many jobs per run),
+      // the mixing planner, the hard-negative broadcast-probe scan and
+      // DSIR selection
       "q142_substring_dedup", "q143_pagerank", "q144_source_mix",
       "q145_hard_negatives", "q146_dsir_select",
-      // round-14 third tranche: the mix-plan EXECUTOR (two-level
-      // per-source prefix sum) and 5-round label propagation (the
-      // second iterative-checkpoint entry)
+      // the mix-plan executor (two-level per-source prefix sum) and
+      // 5-round label propagation (iterative checkpoints)
       "q147_mix_execute", "q148_label_prop",
-      // round-14 fourth tranche: epoch-schedule packing (budget-
-      // bounded copy explode), integer BM25 retrieval (query-term
-      // broadcast onto the token explode), and canonical selection
-      // over q69's clusters
+      // epoch-schedule packing (budget-bounded copy explode), BM25
+      // retrieval (query-term broadcast onto the token explode),
+      // canonical selection over q69's clusters, snapshot diff and the
+      // BM25 index lifecycle
       "q149_mix_pack", "q150_bm25_topk", "q151_canonical_docs",
       "q153_snapshot_diff", "q154_bm25_indexed",
-      // round-14 fifth tranche: trained Lloyd k-means (bounded
-      // centroid collects per round), SemDeDup over its clusters
-      // (the within-cluster pair join), and the positional-index
-      // lifecycle (build + takedown + compaction + phrase joins)
+      // Lloyd k-means (bounded centroid collects per round), SemDeDup
+      // over its clusters (the within-cluster pair join), the
+      // positional-index lifecycle and systematic sampling
       "q155_kmeans", "q156_semdedup", "q157_phrase_search",
       "q158_systematic_sample",
-      // round-14 sixth tranche: diff-driven BM25 index refresh
-      // (bootstrap + delta ingest + search), the standing ANN index
-      // lifecycle (mergeable-centroid build + takedown + compaction +
-      // routed search), and its PQ-coded serving layout (codebook
-      // train + codes log + ADC search)
+      // diff-driven BM25 refresh, the standing ANN index lifecycle and
+      // its PQ-coded serving layout, stats refresh, retrieval eval,
+      // phrase snippets and fuzzy vocabulary lookup
       "q159_index_refresh", "q160_vector_index", "q162_pq_index",
       "q163_stats_refresh", "q164_retrieval_eval",
       "q165_phrase_snippets", "q166_fuzzy_vocab",
-      // round-15 tranche: proximity retrieval over the positional
-      // index (windowed m-way chains), phrase-aware ranking (BM25 +
-      // boost before the cut), the learned-routing ANN index
-      // (trained coarse quantizer + lifecycle + routed search), its
-      // recall eval, and the learned-codeword PQ lifecycle
+      // proximity retrieval over the positional index (windowed m-way
+      // chains), phrase-aware ranking, the learned-routing ANN index
+      // with its recall eval, and the learned-codeword PQ lifecycle
       "q167_proximity_search", "q168_proximity_ranked",
       "q169_learned_vector_index", "q170_learned_recall",
       "q171_learned_pq_index",
-      // round-15 second tranche: the end-to-end curation composition
-      // (quality ∩ canonical ∩ decontaminated → mix→pack) — the
-      // full-text pipeline cost in one number — and the PNG pixel
-      // decode gate (CRC-verified chunk walk + inflate + all-five
-      // filter reconstruction, q133's sibling); q172/q175 (iterative
-      // refresh lifecycles) and q173 (shard writer) are floor-table
-      // entries like the other harness/writer shapes
+      // the end-to-end curation composition (quality, canonical and
+      // decontaminated, then mix and pack) as one number, PNG pixel
+      // decode (chunk CRC + inflate + filter reconstruction), mu-law
+      // audio features and the cross-container image clique
       "q174_curation_pipeline", "q176_png_pixel_dedup",
       "q179_mulaw_features", "q180_png_rgb_dedup",
       "q181_cross_container_dedup",
       // diff-driven ANN refresh (bootstrap + diff + atomic batch +
-      // routed search) — q159's posture for vectors
+      // routed search): q159's posture for vectors
       "q177_vector_refresh",
-      // round-16: drift-triggered quantizer re-training (two Lloyd
-      // trainings + stale/re-routed search legs + brute-force eval),
-      // warm-started dup-cluster refresh (two component loops over
-      // the LSH pair path), and the baseline-JPEG cross-container
-      // clique (entropy decode joins the pixel-hash dedup space)
+      // drift-triggered quantizer re-training, warm-started dup-cluster
+      // refresh (two component loops over the LSH pair path), and the
+      // baseline-JPEG member of the cross-container clique
       "q182_drift_reroute", "q183_clusters_refresh",
       "q184_jpeg_cross_container",
-      // round-17: restart-interval + progressive JPEG entropy layouts,
-      // palette-8 PNG joining the container-blind clique, and the
-      // partial-compaction lifecycle (touched-bucket rewrite)
+      // restart-interval and progressive JPEG, palette PNG, the
+      // partial-compaction lifecycle (touched-bucket rewrite), EXIF
+      // metadata, orientation-normalized dedup and star clusters
       "q185_jpeg_modes_dedup", "q186_palette_png_dedup",
       "q187_partial_compact", "q188_partial_dedup_compact",
       "q189_exif_meta", "q191_oriented_dedup",
       "q192_stars_clusters",
-      // round-18: the PNG depth/interlace matrix (Adam7 + 16-bit +
-      // 4-bit members joining the container-blind clique) and the
-      // ISO-BMFF sample-table walk (Motion-JPEG decoded, avc1
-      // honestly labeled)
+      // PNG bit depths and Adam7 interlace, the ISO-BMFF sample-table
+      // walk (Motion-JPEG decoded, avc1 labeled)
       "q193_png_depths", "q194_mp4_samples",
-      // round-18 second tranche: GIF joins the clique via real LZW;
-      // alpha PNGs (types 4/6) join via white-compositing; TIFF joins
-      // in both byte orders with scattered strips
+      // GIF (LZW), alpha PNG and TIFF members of the clique, GIF
+      // animation frames, Unicode-canonical dedup, A-law and ADPCM
+      // audio, the media census, mojibake repair and HLL distinct counts
       "q195_gif_lzw_dedup", "q196_png_alpha_dedup", "q197_tiff_dedup",
       "q198_gif_anim_frames", "q199_unicode_dedup",
       "q200_alaw_features", "q201_adpcm_features", "q202_media_census",
       "q203_mojibake_repair", "q204_hll_distinct", "q205_hll_merged",
-      // round-19: the small-range (linear-counting) HLL regime —
-      // per-type user_id sits below the 2.5m boundary at sf0.01
+      // the small-range (linear-counting) HLL regime: per-type user_id
+      // sits below the 2.5m boundary at sf0.01
       "q206_hll_small_range",
       // production twins (benchOnly): xxhash64 for the heaviest
       // shingle scans, df-capped langid for the heaviest per-char scan
       "q36x_minhash_lsh_xx", "q76x_winnow_containment_xx",
       "q125x_langid_capped")
-    // excluded by design, like the q66/q67 sink roundtrips: q120 (the
-    // z-ordered WRITER — scan cost is measured above; the write path is
-    // ZOrderSpec's subject) and q100/q106/q112/q113 (file-backed replay
-    // harnesses whose cost is dominated by streaming-engine batch
+    // excluded by design: the q66/q67 sink roundtrips and q173's shard
+    // writer; q120 (the z-ordered WRITER: its scan cost is measured
+    // above, the write path is ZOrderSpec's subject); q172/q175 (the
+    // iterative refresh lifecycles); and q100/q106/q112/q113 (file-backed
+    // replay harnesses whose cost is dominated by streaming-engine batch
     // bookkeeping, not executor-side plans)
     val available = preferred.filter(benchable.contains)
     val base =
@@ -401,12 +389,12 @@ object Bench {
       "q150_bm25_topk",        // token explode + rank tail
       "q155_kmeans",           // vector/centroid path
       "q204_hll_distinct")     // register-sketch chain
+    val subset = sys.env.contains("SPARK_GRAFT_BENCH_QUERIES")
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory) {
       val t0 = System.nanoTime()
       val warmSet =
-        if (sys.env.contains("SPARK_GRAFT_BENCH_QUERIES")) names
-        else warmFamilies.filter(benchable.contains)
+        if (subset) names else warmFamilies.filter(benchable.contains)
       warmSet.foreach { name =>
         try benchable(name)(spark, warmDir)
           .write.format("noop").mode("overwrite").save()
@@ -417,17 +405,21 @@ object Bench {
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     // the media rows read image fixtures synthesized once per process
-    // and dataset; staging them here keeps that synthesis out of the
-    // first timed draw (the warmup stages only the warmup dataset's).
-    // A fixture that fails here fails again, as its row's error, in
-    // the timed phase
-    val stageT0 = System.nanoTime()
-    try CorpusQueries.stageFixtures(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] fixture staging FAILED: ${e.getMessage}")
-    } finally Caches.clear()
-    println(f"[bench] fixtures staged in " +
-      f"${(System.nanoTime() - stageT0) / 1e9}%.1f s")
+    // and dataset; the full sweep stages all of them here, which keeps
+    // that synthesis out of the first timed draw (the warmup stages only
+    // the warmup dataset's). A fixture that fails here fails again, as
+    // its row's error, in the timed phase. A subset run stages none: a
+    // media row's first draw pays for its own fixtures and the min over
+    // [[Draws]] absorbs that cost, as it does the row's cold start
+    if (!subset) {
+      val stageT0 = System.nanoTime()
+      try CorpusQueries.stageFixtures(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] fixture staging FAILED: ${e.getMessage}")
+      } finally Caches.clear()
+      println(f"[bench] fixtures staged in " +
+        f"${(System.nanoTime() - stageT0) / 1e9}%.1f s")
+    }
     val timedT0 = System.nanoTime()
     var errors = List.empty[String]
     def once(name: String): Double = {

@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 
 /** Native Catalyst form of the reference's `to_number` locale-heuristic
-  * parser (reid/func.py:18-32): same semantics as the Parse kernel /
-  * Udfs.toNumber, but as a real `Expression` with `doGenCode`, so it
+  * parser (reid/func.py:18-32): same semantics as Parse.toNumber, but
+  * as a real `Expression` with `doGenCode`, so it
   * stays inside whole-stage codegen — no UDF serialization boundary, no
   * codegen fence in hot standardization scans.
   *

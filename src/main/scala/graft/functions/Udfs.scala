@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
@@ -16,8 +14,6 @@ import org.apache.spark.sql.functions.udf
   */
 object Udfs {
 
-  val toNumber: UserDefinedFunction = udf(Parse.toNumber _)
-  val fixPrice: UserDefinedFunction = udf(Parse.fixPrice _)
   val reExtractPrice: UserDefinedFunction = udf(Parse.reExtractPrice _)
   val findLandSize: UserDefinedFunction = udf(Parse.findLandSize _)
   val findBuildSize: UserDefinedFunction = udf(Parse.findBuildSize _)
@@ -26,8 +22,6 @@ object Udfs {
   val getUploadedDate: UserDefinedFunction = udf(Parse.getUploadedDate _)
   val findBedroomsInDescription: UserDefinedFunction =
     udf(Parse.findBedroomsInDescription _)
-  val extractCurrency: UserDefinedFunction = udf(Parse.extractCurrency _)
-  val areToSqm: UserDefinedFunction = udf(Parse.areToSqm _)
   val findLocationInDescription: UserDefinedFunction =
     udf(Parse.findLocationInDescription _)
 
@@ -39,8 +33,6 @@ object Udfs {
     udf((s: String) => Parse.searchLeaseholdYears(s, asOfYear))
   def leaseholdYearsFinders(asOfYear: Int): UserDefinedFunction =
     udf((s: String) => Parse.leaseholdYearsFinders(s, asOfYear))
-  def findYears(asOfYear: Int): UserDefinedFunction =
-    udf((s: String) => Parse.findYears(s, asOfYear))
   def getLeaseYears(asOfYear: Int): UserDefinedFunction =
     udf((s: String) => Parse.getLeaseYears(s, asOfYear).map(_._1))
   val recalculatePriceByLandSize: UserDefinedFunction =
@@ -49,8 +41,6 @@ object Udfs {
       else Parse.recalculatePriceByLandSize(t, p, l))
   def ubudFindLeaseholdYears(asOfYear: Int): UserDefinedFunction =
     udf((s: String) => Parse.ubudFindLeaseholdYears(s, asOfYear))
-  def timeAgoToDatetime(asOf: LocalDate): UserDefinedFunction =
-    udf((s: String) => Parse.timeAgoToDatetime(s, asOf))
 
   /** WAV (RIFF/WAVE) header decode over a binary payload — irreducible
     * like the parsers above: binary chunk-walking has no built-in Column
@@ -204,17 +194,5 @@ object Udfs {
           .replace('\u00A0', ' '),
         java.text.Normalizer.Form.NFC)
     }
-  }
-
-  /** Register the fixed-arity UDFs for spark.sql use. */
-  def register(spark: SparkSession, asOfYear: Int): Unit = {
-    spark.udf.register("graft_to_number", toNumber)
-    spark.udf.register("graft_fix_price", fixPrice)
-    spark.udf.register("graft_re_extract_price", reExtractPrice)
-    spark.udf.register("graft_find_land_size", findLandSize)
-    spark.udf.register("graft_find_build_size", findBuildSize)
-    spark.udf.register("graft_get_uploaded_date", getUploadedDate)
-    spark.udf.register("graft_extract_currency", extractCurrency)
-    spark.udf.register("graft_lease_years", leaseholdYearsFinders(asOfYear))
   }
 }

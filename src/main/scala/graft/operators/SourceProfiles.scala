@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * post-load fixups (reference reid/items.py:20-87 field processors;
   * reid/spiders/ubudproperty.py:96-171; reid/spiders/dotproperty.py:85-175;
   * reid/spiders/balivillasales.py:40-157 + reid/customs/balivillasales
-  * .py:1-22). [[Standardize]] is the generic chain; this wires the three
-  * representative sources' actual candidate order and fixups.
+  * .py:1-22). [[Standardize]] is the generic chain; this wires 24
+  * sources' actual candidate order and fixups over one shared set of
+  * default field processors.
   *
   * Input contract: one row per scraped detail page whose columns are the
   * *selector outputs* the spider extracts (CSS/JSON selection itself is
@@ -48,7 +49,7 @@ object SourceProfiles {
   private def nullIfEmpty(c: Column): Column = nullif(c, lit(""))
 
   /** The locale-heuristic numeric parse as the NATIVE codegen expression
-    * ([[graft.expressions.ToNumberExpr]], same kernel as Udfs.toNumber).
+    * ([[graft.expressions.ToNumberExpr]], same kernel as Parse.toNumber).
     * Profiles evaluate this per candidate field per row — the native form
     * keeps every per-source branch inside whole-stage codegen instead of
     * fencing at a Scala-UDF serialization boundary 100+ times per plan.
@@ -56,10 +57,30 @@ object SourceProfiles {
   private def toNum(c: Column): Column =
     call_function("graft_to_number_native", c)
 
+  /** The field processors every source shares (the reference declares them
+    * once on PropertyItem, reid/items.py:20-87). A profile's own `fields`
+    * entry for the same target replaces the default.
+    */
+  private val defaultFields: Seq[(String, Column)] = Seq(
+    "title" -> nullIfEmpty(trim(col("raw_title"))),
+    "description" -> nullIfEmpty(trim(col("raw_desc"))),
+    "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
+    "bedrooms" -> toNum(col("raw_beds")).cast("double"),
+    "bathrooms" -> toNum(col("raw_baths")).cast("double"),
+    "location" -> nullIfEmpty(trim(col("raw_location"))),
+    "image_url" -> nullIfEmpty(trim(col("raw_image"))),
+    "availability" -> lit("Available"),
+    "build_size" -> toNum(col("raw_build")).cast("double"),
+    "land_size" -> toNum(col("raw_land")).cast("double"),
+    "price" -> toNum(col("raw_price")).cast("double"),
+    "listed_date" -> lit(null).cast("string"))
+
   /** A profile: ordered (target, expression) field candidates evaluated
     * over the raw selector columns, then ordered row-local fixups applied
     * sequentially (each sees the previous ones' results, like the
-    * reference's item-dict mutation).
+    * reference's item-dict mutation). The [[defaultFields]] the profile
+    * does not define itself come first, so its fields and fixups can read
+    * them.
     */
   final case class SourceProfile(
       source: String,
@@ -69,13 +90,11 @@ object SourceProfiles {
 
     def apply(raw: DataFrame, asOf: LocalDate): DataFrame = {
       val gated = gate.map(raw.filter).getOrElse(raw)
-      val withFields = fields(asOf).foldLeft(gated) {
-        case (d, (name, expr)) => d.withColumn(name, expr)
-      }
-      val fixed = fixups(asOf).foldLeft(withFields) {
-        case (d, (name, expr)) => d.withColumn(name, expr)
-      }
-      fixed.select(targets.map(col): _*)
+      val own = fields(asOf)
+      val defined = own.map(_._1).toSet
+      (defaultFields.filterNot(f => defined(f._1)) ++ own ++ fixups(asOf))
+        .foldLeft(gated) { case (d, (name, expr)) => d.withColumn(name, expr) }
+        .select(targets.map(col): _*)
     }
   }
 
@@ -92,7 +111,6 @@ object SourceProfiles {
       val usd = Cleaners.findUsd(col("raw_price"))
       Seq(
         "property_id" -> Cleaners.findCode(col("alt_title")),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
         "location" -> lit("Ubud"),
         "contract_type" -> nullIfEmpty(trim(col("raw_contract"))),
         "property_type" -> Cleaners.standardizePropertyType(
@@ -100,18 +118,12 @@ object SourceProfiles {
         "leasehold_years" ->
           Udfs.ubudFindLeaseholdYears(asOf.getYear)(col("lease_text"))
             .cast("double"),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "land_size" -> Udfs.findLandSize(col("raw_land")).cast("double"),
         "build_size" -> Udfs.findBuildSize(col("raw_build")).cast("double"),
         "price" -> when(idr.isNotNull, idr)
           .when(usd.isNotNull, usd).cast("double"),
         "currency" -> when(idr.isNotNull, "IDR")
-          .when(usd.isNotNull, "USD"),
-        "availability" -> lit("Available"),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-        "listed_date" -> lit(null).cast("string"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+          .when(usd.isNotNull, "USD"))
     },
     fixups = asOf => Seq(
       // stash the pre-fallback title: the reference's description fixup
@@ -160,21 +172,11 @@ object SourceProfiles {
   val dotproperty: SourceProfile = SourceProfile(
     "dotproperty",
     fields = asOf => Seq(
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
-      "location" -> nullIfEmpty(trim(col("raw_location"))),
       "property_id" -> Cleaners.afterColon(trim(col("raw_pid"))),
       "property_type" ->
         Cleaners.standardizePropertyType(trim(col("raw_type"))),
-      "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-      "land_size" -> toNum(col("raw_land")).cast("double"),
-      "build_size" -> toNum(col("raw_build")).cast("double"),
       "price" -> toNum(col("json_price")).cast("double"),
       "currency" -> nullIfEmpty(upper(trim(col("json_currency")))),
-      "availability" -> lit("Available"),
-      "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-      "listed_date" -> lit(null).cast("string"),
-      "description" -> nullIfEmpty(trim(col("raw_desc"))),
       "leasehold_years" ->
         Udfs.leaseholdYearsFinders(asOf.getYear)(col("raw_desc"))
           .cast("double")),
@@ -217,9 +219,6 @@ object SourceProfiles {
           regexp_replace(regexp_replace(c, "m2", ""), ",", "."), "-"))
           .cast("double")
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
         "contract_type" -> nullIfEmpty(trim(col("raw_contract"))),
         "property_type" ->
           Cleaners.standardizePropertyType(trim(col("raw_title"))),
@@ -232,14 +231,10 @@ object SourceProfiles {
           .when(col("raw_price").contains("USD"), "USD"),
         "availability" -> when(col("raw_price").contains("Sold"), "Sold")
           .otherwise("Available"),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
         "listed_date" -> Udfs.getUploadedDate(col("raw_image")).cast("string"),
         "land_size" -> sizeClean(col("raw_land")),
         "build_size" -> sizeClean(col("raw_build")),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-        "leasehold_years" -> lit(null).cast("double"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+        "leasehold_years" -> lit(null).cast("double"))
     },
     fixups = asOf => Seq(
       // balivillasales.py:120-123 — empty title / missing contract →
@@ -294,19 +289,7 @@ object SourceProfiles {
           lower(coalesce(contract, lit(""))).contains("lease") ||
             lower(coalesce(col("raw_contract"), lit(""))).contains("lease"),
           toNum(col("lease_text"))).cast("double"),
-        "availability" -> lit("Available"),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-        "land_size" -> toNum(col("raw_land")).cast("double"),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
-        "price" -> toNum(col("raw_price")).cast("double"),
-        "currency" -> Cleaners.identifyCurrency(col("raw_price")),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-        "listed_date" -> lit(null).cast("string"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+        "currency" -> Cleaners.identifyCurrency(col("raw_price")))
     },
     fixups = _ => Seq.empty)
 
@@ -323,25 +306,16 @@ object SourceProfiles {
     fields = asOf => {
       val currency = Cleaners.identifyCurrency(col("raw_price"))
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
         "property_type" -> Cleaners.definePropertyType(trim(col("raw_title"))),
         "currency" -> currency,
         "price" -> when(currency === "IDR", Cleaners.findIdr(col("raw_price")))
           .otherwise(Cleaners.findUsd(col("raw_price"))).cast("double"),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "land_size" ->
           toNum(regexp_replace(col("raw_land"), ",", ".")).cast("double"),
         "build_size" ->
           toNum(regexp_replace(col("raw_build"), ",", ".")).cast("double"),
         "contract_type" -> Cleaners.grabFirstWord(trim(col("raw_contract"))),
-        "availability" -> lit("Available"),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-        "listed_date" -> lit(null).cast("string"),
-        "leasehold_years" -> lit(null).cast("double"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+        "leasehold_years" -> lit(null).cast("double"))
     },
     fixups = asOf => {
       // "/word" probes: `x in " ".join(set(re.findall(r"/\w+", text)))`
@@ -394,21 +368,11 @@ object SourceProfiles {
       val descLease =
         Udfs.countLeaseYears(asOf.getYear)(trim(col("raw_desc")))
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
         "listed_date" -> regexp_replace(nullIfEmpty(regexp_extract(
           col("raw_image"), "(\\d{4}/\\d{2}/\\d{2}|\\d{4}-\\d{2}-\\d{2})", 1)),
           "/", "-"),
         "currency" -> nullIfEmpty(upper(trim(col("json_currency")))),
         "price" -> toNum(col("json_price")).cast("double"),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-        "land_size" -> toNum(col("raw_land")).cast("double"),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
-        "availability" -> lit("Available"),
         "property_type" -> when(state.contains("Rumah"), "House")
           .when(state.contains("Gudang") || state.contains("Pabrik") ||
             state.contains("Komersial") || state.contains("Ruko") ||
@@ -462,23 +426,14 @@ object SourceProfiles {
           .when(usd.isNotNull, usd.cast("double"))
           .otherwise(lit(-1d)),
         "currency" -> when(idr.isNotNull, "IDR").otherwise("USD"),
-        "availability" -> lit("Available"),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
         "contract_type" -> contract,
         "leasehold_years" -> when(contract === "Leasehold",
           Udfs.getLeaseYears(asOf.getYear)(col("raw_contract")))
           .cast("double"),
         "property_type" -> Cleaners.findPropertyType(trim(col("raw_title"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "land_size" -> coalesce(Cleaners.areToSqm(col("raw_land")).cast("double"),
           toNum(col("raw_land")).cast("double")),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
-        "image_url" -> Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
-        "listed_date" -> lit(null).cast("string"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+        "image_url" -> Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))))
     },
     fixups = asOf => Seq(
       // kibarer.py:141-143 — missing type defaults to Villa
@@ -506,21 +461,11 @@ object SourceProfiles {
       // lazudi's own strptime("%Y-%m-%d") — not the customs' full form
       "listed_date" ->
         date_format(to_date(col("raw_date"), "yyyy-MM-dd"), "MM/dd/yy"),
-      "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
-      "location" -> nullIfEmpty(trim(col("raw_location"))),
       "contract_type" -> coalesce(nullIfEmpty(trim(col("raw_contract"))),
         lit("Leasehold")),
       "property_type" ->
         Cleaners.standardizePropertyType(trim(col("raw_type"))),
-      "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-      "land_size" -> toNum(col("raw_land")).cast("double"),
-      "build_size" -> toNum(col("raw_build")).cast("double"),
-      "price" -> toNum(col("raw_price")).cast("double"),
       "currency" -> lit("IDR"),
-      "availability" -> lit("Available"),
-      "image_url" -> nullIfEmpty(trim(col("raw_image"))),
       "leasehold_years" -> lit(null).cast("double"),
       "description" ->
         nullIfEmpty(Cleaners.removeShowMoreLess(trim(col("raw_desc"))))),
@@ -566,11 +511,6 @@ object SourceProfiles {
   val gillesdemunter: SourceProfile = SourceProfile(
     "gillesdemunter",
     fields = asOf => Seq(
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
-      "location" -> nullIfEmpty(trim(col("raw_location"))),
-      "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-      "land_size" -> toNum(col("raw_land")).cast("double"),
-      "build_size" -> toNum(col("raw_build")).cast("double"),
       "bedrooms" ->
         toNum(Cleaners.getFirst(col("raw_beds"), "/")).cast("double"),
       "bathrooms" ->
@@ -578,11 +518,7 @@ object SourceProfiles {
       "contract_type" -> nullIfEmpty(trim(col("raw_contract"))),
       "property_type" -> Cleaners.definePropertyType(trim(col("raw_title"))),
       "leasehold_years" -> toNum(col("lease_text")).cast("double"),
-      "price" -> toNum(col("raw_price")).cast("double"),
       "currency" -> lit("USD"),
-      "availability" -> lit("Available"),
-      "listed_date" -> lit(null).cast("string"),
-      "description" -> nullIfEmpty(trim(col("raw_desc"))),
       "property_id" -> lit(null).cast("string")),
     fixups = _ => Seq(
       // gillesdemunter.py:52-55 — no BED cell → delisted_item
@@ -603,25 +539,17 @@ object SourceProfiles {
   val heritagebali: SourceProfile = SourceProfile(
     "heritagebali",
     fields = asOf => Seq(
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
-      "availability" -> lit("Available"),
-      "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
       "bedrooms" -> Cleaners.findBedrooms(col("raw_beds")).cast("double"),
-      "price" -> toNum(col("raw_price")).cast("double"),
       "currency" -> Cleaners.identifyCurrency(
         Cleaners.extractCurrency(col("raw_price"))),
       "leasehold_years" ->
         Udfs.getLeaseYears(asOf.getYear)(col("lease_text")).cast("double"),
       "land_size" -> Udfs.findLandSize(col("raw_land")).cast("double"),
       "build_size" -> Udfs.findBuildSize(col("raw_build")).cast("double"),
-      "description" -> nullIfEmpty(trim(col("raw_desc"))),
       "contract_type" -> when(
         lower(coalesce(col("lease_text"), lit(""))).contains("lease"),
         "Leasehold").otherwise("Freehold"),
       "property_type" -> Cleaners.definePropertyType(trim(col("raw_title"))),
-      "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-      "listed_date" -> lit(null).cast("string"),
       // heritagebali.py:137-143 — ", ".join(loc) replaces location even
       // when empty
       "location" -> coalesce(trim(col("raw_location")), lit(""))),
@@ -642,26 +570,17 @@ object SourceProfiles {
         toNum(Cleaners.grabFirst(regexp_replace(c, ",", ".")))
           .cast("double")
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
         "listed_date" -> Udfs.getUploadedDate(col("raw_image")).cast("string"),
         "contract_type" -> when(
           lower(coalesce(col("raw_contract"), lit(""))).contains("sale"),
           "Freehold").otherwise("Leasehold"),
         "property_type" ->
           Cleaners.standardizePropertyType(trim(col("raw_type"))),
-        "availability" -> lit("Available"),
-        "price" -> toNum(col("raw_price")).cast("double"),
         "currency" -> Cleaners.identifyCurrency(col("raw_price")),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "land_size" -> sizeClean(col("raw_land")),
         "build_size" -> sizeClean(col("raw_build")),
         "leasehold_years" -> when(col("raw_contract") === "Leasehold",
-          toNum(col("table_leasing"))).cast("double"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+          toNum(col("table_leasing"))).cast("double"))
     },
     fixups = asOf => Seq(
       // svahaproperty.py:123-133 — refind: desc when missing, the cell
@@ -689,10 +608,6 @@ object SourceProfiles {
       val contract = coalesce(nullIfEmpty(trim(col("raw_contract"))),
         lit("Freehold"))
       Seq(
-        "availability" -> lit("Available"),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
         "location" -> coalesce(nullIfEmpty(trim(col("raw_location"))),
           nullIfEmpty(trim(col("alt_title")))),
         "price" -> coalesce(toNum(col("json_price")).cast("double"),
@@ -703,16 +618,11 @@ object SourceProfiles {
           Cleaners.standardizePropertyType(trim(col("raw_type"))),
         "contract_type" -> contract,
         "listed_date" -> nullIfEmpty(trim(col("raw_date"))),
-        "land_size" -> toNum(col("raw_land")).cast("double"),
         "leasehold_years" -> when(lower(contract).contains("lease"),
           coalesce(
             Udfs.getLeaseYears(asOf.getYear)(col("lease_text")),
             Udfs.countLeaseYears(asOf.getYear)(col("table_leasing"))
-              .cast("double"))).cast("double"),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+              .cast("double"))).cast("double"))
     },
     fixups = _ => Seq.empty)
 
@@ -730,22 +640,12 @@ object SourceProfiles {
       "contract_type" -> initcap(
         nullIfEmpty(regexp_extract(coalesce(col("raw_contract"), lit("")),
           "(\\w+hold)", 1))),
-      "availability" -> lit("Available"),
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
-      "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-      "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-      "location" -> nullIfEmpty(trim(col("raw_location"))),
-      "land_size" -> toNum(col("raw_land")).cast("double"),
-      "build_size" -> toNum(col("raw_build")).cast("double"),
       "price" -> when(col("raw_price").isNotNull,
         toNum(col("raw_price")))
         .otherwise(toNum(col("json_price"))).cast("double"),
       "currency" -> when(col("raw_price").isNotNull, "IDR")
         .when(col("json_price").isNotNull, "USD"),
       "property_type" -> Cleaners.definePropertyType(trim(col("raw_title"))),
-      "description" -> nullIfEmpty(trim(col("raw_desc"))),
-      "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
       "leasehold_years" -> when(col("raw_contract").isNotNull,
         Udfs.getLeaseYears(asOf.getYear)(col("raw_contract"))).cast("double"),
       "listed_date" -> date_format(
@@ -789,13 +689,7 @@ object SourceProfiles {
   val rajavillaproperty: SourceProfile = SourceProfile(
     "rajavillaproperty",
     fields = asOf => Seq(
-      "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-      "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-      "location" -> nullIfEmpty(trim(col("raw_location"))),
-      "price" -> toNum(col("raw_price")).cast("double"),
       "currency" -> Cleaners.identifyCurrency(col("raw_price")),
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
       "contract_type" -> when(
         lower(coalesce(col("raw_title"), lit(""))).contains("leasehold"),
         "Leasehold").otherwise("Freehold"),
@@ -805,12 +699,9 @@ object SourceProfiles {
       "leasehold_years" -> when(
         nullIfEmpty(col("lease_text")).isNotNull,
         Udfs.getLeaseYears(asOf.getYear)(col("lease_text"))).cast("double"),
-      "description" -> nullIfEmpty(trim(col("raw_desc"))),
       "availability" -> when(
         array_contains(split(coalesce(col("raw_contract"), lit("")), ","),
           "Sold"), "Sold").otherwise("Available"),
-      "build_size" -> toNum(col("raw_build")).cast("double"),
-      "land_size" -> toNum(col("raw_land")).cast("double"),
       "image_url" ->
         Cleaners.dimensionRemover(coalesce(col("raw_image"), lit("")))),
     fixups = asOf => Seq(
@@ -867,9 +758,6 @@ object SourceProfiles {
       val hold = Cleaners.findHoldState(
         split(coalesce(col("raw_contract"), lit("")), ","))
       Seq(
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
         "build_size" -> sizeClean(col("raw_build")),
         "land_size" -> sizeClean(col("raw_land")),
         "price" -> when(Cleaners.findUsd(col("raw_price")).isNotNull,
@@ -896,8 +784,7 @@ object SourceProfiles {
           regexp_replace(Cleaners.grabFirst(col("raw_baths")), ",", "."))
           .cast("double"),
         "image_url" ->
-          Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+          Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))))
     },
     fixups = asOf => Seq(
       // unrealbali.py:148-150 — missing/not-found title → delisted_item
@@ -929,28 +816,20 @@ object SourceProfiles {
           toNum(col("raw_price"))).cast("double"),
         "currency" -> when(p.contains("idr"), "IDR")
           .when(p.contains("usd"), "USD"),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
         "location" -> nullIfEmpty(trim(Cleaners.getLast(
           Cleaners.getLast(col("raw_title"), "|"), " in "))),
-        "land_size" -> toNum(col("raw_land")).cast("double"),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
         "contract_type" -> nullIfEmpty(trim(col("raw_contract"))),
         "property_type" ->
           initcap(element_at(split(col("url"), "/", -1), 4)),
         "availability" -> when(
           lower(coalesce(col("lease_text"), lit(""))).contains("sold"),
           "Sold").otherwise("Available"),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "leasehold_years" -> when(
           lower(coalesce(col("raw_contract"), lit(""))).contains("lease"),
           Udfs.getLeaseYears(asOf.getYear)(col("table_leasing")))
           .cast("double"),
         "listed_date" -> Cleaners.findPublishedDate(col("raw_date"))
-          .cast("string"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+          .cast("string"))
     },
     fixups = _ => Seq(
       // suasarealestate.py:154-157 — pipe-tail location when missing
@@ -973,25 +852,18 @@ object SourceProfiles {
         toNum(Cleaners.getLast(regexp_replace(c, ",", "."), "-"))
           .cast("double")
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
         "listed_date" -> Cleaners.findPublishedDate(col("raw_date"))
           .cast("string"),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
         "leasehold_years" ->
           Udfs.getLeaseYears(asOf.getYear)(col("lease_text")).cast("double"),
         "contract_type" -> nullIfEmpty(trim(col("raw_contract"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "land_size" -> sizeClean(col("raw_land")),
         "build_size" -> sizeClean(col("raw_build")),
-        "price" -> toNum(col("raw_price")).cast("double"),
         "currency" -> lit("IDR"),
         "image_url" ->
           Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
         "availability" -> Cleaners.anySoldDelisted(
           split(coalesce(nullIfEmpty(col("alt_title")), lit("Available")), ",")),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))),
         "property_type" -> Cleaners.definePropertyType(trim(col("raw_title"))))
     },
     fixups = _ => Seq(
@@ -1030,7 +902,6 @@ object SourceProfiles {
         },
         "availability" -> when(trim(col("lease_text")) === "Yes", "Sold")
           .otherwise("Available"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))),
         "contract_type" -> when(notValid &&
           lower(coalesce(col("alt_title"), lit(""))).contains("sale"),
           "Freehold").otherwise(contract0),
@@ -1038,13 +909,6 @@ object SourceProfiles {
           Cleaners.standardizePropertyType(trim(col("raw_type"))),
         "image_url" ->
           Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-        "land_size" -> toNum(col("raw_land")).cast("double"),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
         "leasehold_years" ->
           Udfs.findLeaseYears(asOf.getYear)(col("description")).cast("double"))
     },
@@ -1085,16 +949,8 @@ object SourceProfiles {
       "location" -> format_string("%s, %s",
         coalesce(col("alt_title"), lit("None")),
         coalesce(col("raw_location"), lit("None"))),
-      "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
-      "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-      "land_size" -> toNum(col("raw_land")).cast("double"),
-      "build_size" -> toNum(col("raw_build")).cast("double"),
-      "image_url" -> nullIfEmpty(trim(col("raw_image"))),
       "availability" -> Cleaners.anySoldDelisted(array(
         coalesce(col("table_leasing"), lit("")), lit("Available"))),
-      "description" -> nullIfEmpty(trim(col("raw_desc"))),
       "property_type" -> lit(null).cast("string")),
     fixups = asOf => Seq(
       // balitreasureproperties.py:181-186 — type APPENDED to the contract;
@@ -1133,9 +989,6 @@ object SourceProfiles {
     fields = asOf => {
       val contracts = lower(coalesce(col("raw_contract"), lit("")))
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
         "property_type" -> Cleaners.definePropertyType(trim(col("raw_title"))),
         "property_id" -> nullIfEmpty(trim(
           Cleaners.getLast(col("raw_title"), "-"))),
@@ -1145,14 +998,7 @@ object SourceProfiles {
           toNum(col("table_leasing"))).cast("double"),
         "availability" -> when(col("lease_text").isNotNull, "Sold")
           .otherwise("Available"),
-        "price" -> toNum(col("raw_price")).cast("double"),
-        "currency" -> Cleaners.identifyCurrency(col("json_currency")),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
-        "land_size" -> toNum(col("raw_land")).cast("double"),
-        "build_size" -> toNum(col("raw_build")).cast("double"),
-        "listed_date" -> lit(null).cast("string"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+        "currency" -> Cleaners.identifyCurrency(col("json_currency")))
     },
     fixups = _ => Seq.empty)
 
@@ -1169,8 +1015,6 @@ object SourceProfiles {
     fields = asOf => {
       val sold = col("table_leasing").isNotNull
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
         "price" -> when(sold,
           coalesce(toNum(col("json_price")), lit(-1d)))
           .otherwise(toNum(col("json_price"))).cast("double"),
@@ -1178,14 +1022,12 @@ object SourceProfiles {
         "image_url" ->
           Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
         "listed_date" -> Cleaners.toMmddyy(col("raw_date")),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
         "land_size" ->
           toNum(regexp_replace(col("raw_land"), ",", "."))
             .cast("double"),
         "build_size" ->
           toNum(regexp_replace(col("raw_build"), ",", "."))
             .cast("double"),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
         "bathrooms" ->
           toNum(regexp_replace(col("raw_baths"), ",", "."))
             .cast("double"),
@@ -1195,8 +1037,7 @@ object SourceProfiles {
           trim(Cleaners.getFirst(col("raw_type"), ","))),
         // the reference's probe is the case-sensitive literal "lease"
         "leasehold_years" -> when(col("raw_contract").contains("lease"),
-          toNum(col("lease_text"))).cast("double"),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))))
+          toNum(col("lease_text"))).cast("double"))
     },
     fixups = asOf => Seq(
       // balipropertiesforsale.py:219-223 — location from the title
@@ -1223,16 +1064,11 @@ object SourceProfiles {
   val propertiabali: SourceProfile = SourceProfile(
     "propertiabali",
     fields = asOf => Seq(
-      "title" -> nullIfEmpty(trim(col("raw_title"))),
       "listed_date" -> Cleaners.findPublishedDate(col("raw_date"))
         .cast("string"),
-      "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-      "location" -> nullIfEmpty(trim(col("raw_location"))),
       "leasehold_years" -> toNum(col("lease_text")).cast("double"),
       "contract_type" -> Cleaners.findContractType(trim(col("raw_contract"))),
       "property_type" -> Cleaners.definePropertyType(trim(col("raw_contract"))),
-      "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-      "bathrooms" -> toNum(col("raw_baths")).cast("double"),
       "land_size" -> coalesce(Cleaners.areToSqm(col("raw_land")).cast("double"),
         toNum(col("raw_land")).cast("double")),
       "build_size" -> {
@@ -1240,14 +1076,12 @@ object SourceProfiles {
         coalesce(Cleaners.areToSqm(dotted).cast("double"),
           toNum(dotted).cast("double"))
       },
-      "price" -> toNum(col("raw_price")).cast("double"),
       "currency" -> Cleaners.identifyCurrency(col("raw_price")),
       "image_url" ->
         Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
       "availability" -> Cleaners.anySoldDelisted(concat(
         split(coalesce(col("alt_title"), lit("")), ","),
-        array(lit("Available")))),
-      "description" -> nullIfEmpty(trim(col("raw_desc")))),
+        array(lit("Available"))))),
     fixups = asOf => Seq(
       // propertiabali.py:156-164 — lease-contract desc backfill
       "leasehold_years" -> when(
@@ -1279,23 +1113,15 @@ object SourceProfiles {
           when(cellYears > 0, cellYears)
             .otherwise(abs(toNum(col("lease_text")) -
               lit(asOf.getYear.toDouble)))).cast("double"),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
-        "bedrooms" -> toNum(col("raw_beds")).cast("double"),
-        "bathrooms" -> toNum(col("raw_baths")).cast("double"),
         "land_size" -> sizeClean(col("raw_land")),
         "build_size" -> sizeClean(col("raw_build")),
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
         "availability" -> Cleaners.anySoldDelisted(concat(
           split(coalesce(col("alt_title"), lit("")), ","),
           array(lit("Available")))),
-        "price" -> toNum(col("raw_price")).cast("double"),
         "currency" -> Cleaners.identifyCurrency(col("raw_price")),
-        "location" -> nullIfEmpty(trim(col("raw_location"))),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))),
         "property_type" -> Cleaners.findPropertyType(trim(col("raw_title"))),
         "image_url" ->
-          Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))),
-        "listed_date" -> lit(null).cast("string"))
+          Cleaners.dimensionRemover(coalesce(col("raw_image"), lit(""))))
     },
     fixups = asOf => {
       val plotish = (c: Column) =>
@@ -1357,8 +1183,6 @@ object SourceProfiles {
           ",", ".")).cast("double")
       val titleBeds = Cleaners.findBedrooms(lower(col("raw_title")))
       Seq(
-        "title" -> nullIfEmpty(trim(col("raw_title"))),
-        "property_id" -> nullIfEmpty(trim(col("raw_pid"))),
         "leasehold_years" ->
           toNum(regexp_replace(
             Cleaners.getFirst(col("lease_text"), "+"), ",", "."))
@@ -1376,12 +1200,7 @@ object SourceProfiles {
           when(size(split(col("raw_title"), "\\|", -1)) > 1,
             trim(element_at(split(col("raw_title"), "\\|", -1), 2)))
             .otherwise(Cleaners.findLocationInTitle(col("raw_title")))),
-        "price" -> toNum(col("raw_price")).cast("double"),
         "currency" -> Cleaners.identifyCurrency(col("raw_price")),
-        "image_url" -> nullIfEmpty(trim(col("raw_image"))),
-        "description" -> nullIfEmpty(trim(col("raw_desc"))),
-        "availability" -> lit("Available"),
-        "listed_date" -> lit(null).cast("string"),
         "contract_type" -> coalesce(initcap(nullIfEmpty(regexp_extract(
           lower(col("raw_title")), "(freehold|leasehold)", 1))),
           lit("Freehold")),
@@ -1419,10 +1238,11 @@ object SourceProfiles {
   }
 
   /** Correctness query: raw selector rows synthesized deterministically
-    * from `part` for all three wired profiles, standardized, and compared
-    * against a DuckDB oracle that mirrors each profile's candidate order
-    * and fixups. Every branch of every fixup is exercised by some modulus
-    * class.
+    * from `part` for six profiles (ubudproperty, dotproperty,
+    * balivillasales, exotiqproperty, balimoves, raywhite), standardized,
+    * and compared against a DuckDB oracle that mirrors each profile's
+    * candidate order and fixups. Every branch of every fixup is exercised
+    * by some modulus class.
     */
   def q55SourceProfiles(s: SparkSession, d: String): DataFrame = {
     val asOf = LocalDate.of(2026, 1, 1)

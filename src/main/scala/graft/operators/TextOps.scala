@@ -214,11 +214,6 @@ object TextOps {
       array_min(transform(hset, h => (lit(a) * h + lit(b)) % P)).as(s"sig$i")
     }
 
-  /** Per-doc MinHash signatures sig0..sig7 (row-local; see [[sigCols]]). */
-  def minhashSigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("doc_id") +:
-      sigCols(hashedShingleSet(col(textCol))): _*)
-
   /** The shared LSH front half: hashed shingle sets → row-local MinHash
     * signatures → banded (band, bucket-key) self-join → exact-Jaccard
     * verification. The join key is (band, combined-sig), so only

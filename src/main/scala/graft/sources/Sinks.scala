@@ -18,10 +18,6 @@ object Sinks {
     df.withColumn("month", date_format(col("scraped_at"), "yyyy-MM"))
       .write.mode("append").partitionBy("source", "month").parquet(path)
 
-  /** Metrics/report append (reference reid/pipelines/property.py:70-87). */
-  def metricsAppend(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
-
   /** Constrained append (reference Error / DuplicateListing inserts,
     * models/error.py:6-16, models/duplicate_listing.py:7-17): enforce the
     * unique key against both the batch and what's already written.
@@ -67,14 +63,6 @@ object Sinks {
     deduped.join(existing, uniqueCols, "left_anti")
       .write.mode("append").parquet(path)
   }
-
-  /** Wide export (reference to_dict JSON/CSV outputs,
-    * models/listing.py:175-241, ml_region_prediction.py:116-118).
-    */
-  def exportJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-  def exportCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
 
   /** BUCKETED-table writer — the co-location write path behind two
     * scale designs:

@@ -28,6 +28,20 @@ class EntrySpec extends AnyFunSuite {
       .forall(k => !SparkEntry.queries.contains(k)))
   }
 
+  test("bench headline: the default set is BENCH_BASELINE.json's rows, " +
+    "in order") {
+    // BenchDiff compares a run against the committed baseline row by
+    // row, so a change to the headline set must update that file too
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("BENCH_BASELINE.json")), "UTF-8")
+    val start = json.indexOf('{', json.indexOf("\"queries\""))
+    val rows = "\"([^\"]+)\"\\s*:".r
+      .findAllMatchIn(json.substring(start + 1, json.indexOf('}', start)))
+      .map(_.group(1)).toSeq
+    assert(rows.size == 147)
+    assert(Bench.headline(None) == rows)
+  }
+
   test("benchdiff r20: drift normalization and one-draw stricter gate") {
     import graft.tools.BenchDiff
     // the probe row is unchanged, so the drift basis is 1.0 and raw

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden fixtures for the three wired source profiles — one scenario per
-  * reference fixup path (spiders/ubudproperty.py:139-171,
+/** Golden fixtures for the 24 wired source profiles — scenarios per
+  * reference fixup path (e.g. spiders/ubudproperty.py:139-171,
   * spiders/dotproperty.py:117-175, spiders/balivillasales.py:120-157).
   * Parser inputs reuse strings already pinned against the executed
   * reference in ParseSpec, so the expectations compose pinned behavior.
@@ -667,5 +667,21 @@ class SourceProfilesSpec extends AnyFunSuite {
     val out = SourceProfiles.standardize(df, asOf)
     assert(out.columns.toSeq == SourceProfiles.targets)
     assert(out.collect().map(_.getString(0)).toSeq == Seq("u9"))
+  }
+
+  test("default fields: a profile's own entry wins over the shared " +
+    "default; the others read it; every profile outputs the targets") {
+    // ubudproperty defines its own constant location
+    assert(run("url" -> "u", "source" -> "ubudproperty",
+      "raw_location" -> " Canggu ")("location") == "Ubud")
+    // dotproperty lists no location: the default trims, "" becomes null
+    assert(run("url" -> "d", "source" -> "dotproperty",
+      "raw_location" -> " Canggu ")("location") == "Canggu")
+    assert(run("url" -> "d", "source" -> "dotproperty",
+      "raw_location" -> "  ")("location") == null)
+    SourceProfiles.profiles.foreach { p =>
+      assert(p(raw("source" -> p.source), asOf).columns.toSeq ==
+        SourceProfiles.targets, p.source)
+    }
   }
 }
