@@ -1,8 +1,12 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   * One parquet file per table under the scale-factor dir.
@@ -13,7 +17,52 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")._1
+
+  /** (path, length, modification time) of every file under an input. */
+  private type Stamp = Seq[(String, Long, Long)]
+
+  /** The schema each input was last inferred with, and the stamp of the
+    * files it was inferred from, keyed by path and by the session's
+    * settings. Parquet inference (a one-task footer-reading job) reads
+    * only settings, so two sessions share an entry exactly when every
+    * setting agrees, and the memo holds no reference to a session. */
+  private val schemas =
+    new ConcurrentHashMap[(String, Map[String, String]), (Stamp, StructType)]()
+
+  /** A fresh DataFrame over the parquet input at `path`, plus the file
+    * listing it was stamped with. The schema is inferred once per file
+    * state: while no file under `path` changes name, length or mtime,
+    * later reads pass the remembered schema and start no Spark job.
+    * The listing precedes the inference, so a rewrite racing it leaves
+    * an older stamp that the next read re-infers past. */
+  private def read(spark: SparkSession, path: String): (DataFrame, Seq[FileStatus]) = {
+    val files = listFiles(spark, new Path(path))
+    val stamp: Stamp =
+      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val key = (path, spark.conf.getAll)
+    val df = Option(schemas.get(key)) match {
+      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val inferred = spark.read.parquet(path)
+        schemas.put(key, (stamp, inferred.schema))
+        inferred
+    }
+    (df, files)
+  }
+
+  /** Every file under `p` (recursively), or `p` itself when it is a
+    * file; empty when it does not exist, which leaves the missing-path
+    * error to the parquet read. */
+  private def listFiles(spark: SparkSession, p: Path): Seq[FileStatus] = {
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName)
+        .flatMap(walk)
+    try walk(fs.getFileStatus(p))
+    catch { case _: FileNotFoundException => Nil }
+  }
 
   /** A valid, collision-free warehouse-table prefix for a per-dataset
     * shared standing build (the q165/q169 staged-index discipline):
@@ -96,24 +145,20 @@ object Tables {
     * 600 KB corpus right back to one task — bytes are the wrong proxy
     * for per-row CPU here, which is the whole point of the gate.
     */
-  private def fanOutSmall(s: SparkSession, df: DataFrame, path: String,
-                          key: String): DataFrame = {
+  private def fanOutSmall(s: SparkSession, df: DataFrame,
+                          files: Seq[FileStatus], key: String): DataFrame = {
     val par = s.sparkContext.defaultParallelism
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
     val conf = s.sessionState.conf
     val maxB = conf.filesMaxPartitionBytes
     val openCost = conf.filesOpenCostInBytes
-    val files =
-      if (fs.isFile(p)) Seq(fs.getFileStatus(p))
-      else fs.listStatus(p).toSeq.filter(_.isFile)
     val splits = math.max(1L,
       (files.map(st => math.max(st.getLen, openCost)).sum + maxB - 1) / maxB)
     if (splits >= par) df else df.repartition(par, col(key))
   }
 
-  def documents(s: SparkSession, d: String): DataFrame =
-    fanOutSmall(s, load(s, d, "documents"), s"$d/documents.parquet",
-      "doc_id")
+  def documents(s: SparkSession, d: String): DataFrame = {
+    val (df, files) = read(s, s"$d/documents.parquet")
+    fanOutSmall(s, df, files, "doc_id")
+  }
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 }

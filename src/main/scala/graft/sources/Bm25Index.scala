@@ -151,7 +151,7 @@ object Bm25Index {
   private def liveStats(spark: SparkSession, prefix: String,
                         st: (Long, Seq[Long])): (Long, Long) = {
     val r = spark.table(phys(prefix, "stats", st._1))
-      .filter(col("b").isin(st._2: _*))
+      .filter(Generations.visibleIn(st._2))
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("tt")), lit(0L)).as("tt")).head()
     (r.getLong(0), r.getLong(1))
@@ -424,7 +424,7 @@ object Bm25Index {
   def deadFractionPct(spark: SparkSession, prefix: String): Long = {
     val st = Generations.committedState(spark, prefix)
     val r = spark.table(phys(prefix, "stats", st._1))
-      .filter(col("b").isin(st._2: _*))
+      .filter(Generations.visibleIn(st._2))
       .agg(coalesce(sum(abs(col("n"))), lit(0L)).as("gross"),
         coalesce(sum(col("n")), lit(0L)).as("net")).head()
     val (gross, net) = (r.getLong(0), r.getLong(1))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftHooks, SparkSession}
 import org.apache.spark.sql.functions.{col, sum}
 
 /** ATOMIC COMMIT for the standing-index family — the missing
@@ -509,6 +509,16 @@ object Generations {
     gc(spark, prefix, ng, logicals, retain)
   }
 
+  /** `b` is one of the `visible` batch ids, with the ids bound as data:
+    * a set-backed `InSet` reaches generated code as a reference object,
+    * so the compiled classes are the same for every committed state,
+    * where `isin` would inline each id as a literal (until the list
+    * passes the optimizer's 10-item set conversion) and recompile every
+    * stage that reads a log table after each commit. The scan still
+    * receives the predicate as `In(b, …)`. */
+  def visibleIn(visible: Seq[Long]): Column =
+    GraftHooks.inSet(col("b"), visible)
+
   /** The live (tombstone-folded) view of a log-structured table at the
     * resolved committed state `st`: visible batches only, optionally
     * `restrict`ed, grouped on `dataCols` with net weight > 0. Both
@@ -522,7 +532,7 @@ object Generations {
            st: (Long, Seq[Long]), dataCols: Seq[String],
            restrict: Option[Column] = None): DataFrame = {
     val visible = spark.table(physical(prefix, logical, st._1))
-      .filter(col("b").isin(st._2: _*))
+      .filter(visibleIn(st._2))
     restrict.fold(visible)(visible.filter)
       .groupBy(dataCols.map(col): _*)
       .agg(sum(col("w")).as("net"))

@@ -64,27 +64,6 @@ object Sinks {
       .write.mode("append").parquet(path)
   }
 
-  /** BUCKETED-table writer — the co-location write path behind two
-    * scale designs:
-    *
-    *  - the canonical-listing MERGE (SURVEY §4 "optional bucketing by
-    *    url"): current and incoming tables written through this on
-    *    `url` make [[graft.Merge.merge]]'s full-outer SMJ plan ZERO
-    *    Exchange on either side (BucketingSpec pins the merge plan;
-    *    SCALING.md's bucketed-merge probe row measures the saving). The
-    *    canonical table is re-written through this writer each merge
-    *    cycle (`overwrite`), so the one-time layout cost amortizes
-    *    across every later merge;
-    *  - the standing dedup index ([[DedupIndex]]), which appends.
-    *
-    * `overwrite` purges the physical location as well as the catalog
-    * entry: the session catalog is in-memory, so a table written by a
-    * PREVIOUS session is invisible to DROP TABLE yet still blocks the
-    * managed location (Hadoop FS, so remote warehouses behave the
-    * same). Bucket count is a deployment knob — match the cluster's
-    * parallelism; the non-bucketed side of a join shuffles to exactly
-    * this many partitions.
-    */
   /** Drop a warehouse table AND reclaim its location — the shared
     * purge of every standing-table writer (a DROP alone can leave a
     * stale location that blocks the next CREATE; see the compaction
@@ -157,6 +136,27 @@ object Sinks {
     } finally pool.shutdown()
   }
 
+  /** BUCKETED-table writer — the co-location write path behind two
+    * scale designs:
+    *
+    *  - the canonical-listing MERGE (SURVEY §4 "optional bucketing by
+    *    url"): current and incoming tables written through this on
+    *    `url` make [[graft.Merge.merge]]'s full-outer SMJ plan ZERO
+    *    Exchange on either side (BucketingSpec pins the merge plan;
+    *    SCALING.md's bucketed-merge probe row measures the saving). The
+    *    canonical table is re-written through this writer each merge
+    *    cycle (`overwrite`), so the one-time layout cost amortizes
+    *    across every later merge;
+    *  - the standing dedup index ([[DedupIndex]]), which appends.
+    *
+    * `overwrite` purges the physical location as well as the catalog
+    * entry: the session catalog is in-memory, so a table written by a
+    * PREVIOUS session is invisible to DROP TABLE yet still blocks the
+    * managed location (Hadoop FS, so remote warehouses behave the
+    * same). Bucket count is a deployment knob — match the cluster's
+    * parallelism; the non-bucketed side of a join shuffles to exactly
+    * this many partitions.
+    */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
                     numBuckets: Int = 32,
                     mode: String = "overwrite"): Unit = {
@@ -213,7 +213,7 @@ object Sinks {
                         visibleB: Seq[Long]): Unit = {
     val df = spark.table(from)
     val dataCols = df.columns.filterNot(c => c == "w" || c == "b").toSeq
-    val net = df.filter(col("b").isin(visibleB: _*))
+    val net = df.filter(Generations.visibleIn(visibleB))
       .groupBy(dataCols.map(col): _*)
       .agg(sum(col("w")).cast("int").as("w"))
       .filter(col("w") =!= 0)
@@ -271,7 +271,7 @@ object Sinks {
                         bucketCols: Seq[String], numBuckets: Int,
                         visibleB: Seq[Long]): Seq[Int] =
     spark.table(table)
-      .filter(col("b").isin(visibleB: _*) && col("w") < 0)
+      .filter(Generations.visibleIn(visibleB) && col("w") < 0)
       .select(pmod(hash(bucketCols.map(col): _*), lit(numBuckets))
         .as("bk"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
@@ -330,7 +330,7 @@ object Sinks {
       if (rewriteFiles.isEmpty) df.filter(lit(false))
       else spark.read.schema(df.schema)
         .parquet(rewriteFiles.map(_.toString): _*)
-    val net = touchedRows.filter(col("b").isin(visibleB: _*))
+    val net = touchedRows.filter(Generations.visibleIn(visibleB))
       .groupBy(dataCols.map(col): _*)
       .agg(sum(col("w")).cast("int").as("w"))
       .filter(col("w") =!= 0)

@@ -99,7 +99,7 @@ object StatsLedger {
     val st @ (gen, bs) = Generations.committedState(spark, prefix)
     val ng = Generations.beginGeneration(spark, prefix)
     val net = spark.table(ledger(prefix, gen))
-      .filter(col("b").isin(bs: _*))
+      .filter(Generations.visibleIn(bs))
       .groupBy("source")
       .agg(sum(col("n_docs") * col("w")).as("n_docs"),
         sum(col("n_tokens") * col("w")).as("n_tokens"),
@@ -117,7 +117,7 @@ object StatsLedger {
   def profile(spark: SparkSession, prefix: String): DataFrame = {
     val (gen, bs) = Generations.committedState(spark, prefix)
     spark.table(ledger(prefix, gen))
-      .filter(col("b").isin(bs: _*))
+      .filter(Generations.visibleIn(bs))
       .groupBy("source")
       .agg(sum(col("n_docs") * col("w")).as("n_docs"),
         sum(col("n_tokens") * col("w")).as("n_tokens"),

@@ -145,7 +145,7 @@ object VectorIndex {
   private def liveCentroids(spark: SparkSession, prefix: String,
                             st: (Long, Seq[Long])): DataFrame =
     spark.table(phys(prefix, "centroids", st._1))
-      .filter(col("b").isin(st._2: _*))
+      .filter(Generations.visibleIn(st._2))
       .select(col("block"), col("w"), col("cnt"),
         posexplode(col("cq")).as(Seq("pos", "v")))
       .groupBy("block", "pos")
@@ -269,7 +269,7 @@ object VectorIndex {
       phys(prefix, "vectors", ng), Seq("block"), Buckets, bs)
     val net = liveCentroids(spark, prefix, st)
       .join(spark.table(phys(prefix, "centroids", gen))
-          .filter(col("b").isin(bs: _*))
+          .filter(Generations.visibleIn(bs))
           .groupBy("block")
           .agg(sum(col("cnt") * col("w")).as("cnt")),
         Seq("block"))

@@ -5,9 +5,9 @@ import graft.{Caches, GraftSession, SparkEntry}
 /** Timing helper for one query: repeated noop-sink materializations
   * (same methodology as Bench) so a change's effect on a single query
   * is measurable without the full bench loop. Each iteration prints its
-  * wall time and how many classes it compiled, followed by one `[job]`
-  * row per Spark job it ran; a query whose later iterations still
-  * compile is recompiling its plan on every call.
+  * wall time, how many classes it compiled and how many Spark jobs it
+  * ran, followed by one `[job]` row per job; a query whose later
+  * iterations still compile is recompiling its plan on every call.
   * Usage:
   *   runMain graft.tools.Profile <sfDir> <query> [iters]
   */
@@ -49,10 +49,10 @@ object Profile {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       Caches.clear()
       val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[profile] $name iter $i: $secs%.3f s, ${compiles() - c0} compiles")
-      if (!rows.isEmpty) {
-        rows.forEach(r => println(r)); rows.clear()
-      }
+      org.apache.spark.sql.GraftHooks.drainListeners(spark.sparkContext)
+      println(f"[profile] $name iter $i: $secs%.3f s, " +
+        s"${compiles() - c0} compiles, ${rows.size} jobs")
+      rows.forEach(r => println(r)); rows.clear()
     }
     spark.stop()
   }

@@ -279,4 +279,31 @@ class DedupIndexSpec extends AnyFunSuite {
       "screen diverged across full compact at 8 buckets")
     Caches.clear()
   }
+
+  test("visible batches bind as data: a warm screen compiles nothing " +
+      "after one more committed batch, and the scan still pushes In(b)") {
+    val p = "tbind"
+    val docs = Tables.documents(spark, d)
+    DedupIndex.write(docs.filter(col("doc_id") % 5 <= 1), "doc_id", "text",
+      p)
+    DedupIndex.append(docs.filter(col("doc_id") % 5 === 2), "doc_id",
+      "text", p)
+    def screen() = DedupIndex.screenNearDup(spark, batch, "doc_id",
+      "text", p)
+    // the first call caches the batch's shingle sets, the second reads
+    // them: the plan a warm call runs
+    for (_ <- 1 to 2) screen().write.format("noop").mode("overwrite").save()
+    DedupIndex.append(docs.filter(col("doc_id") % 5 === 3), "doc_id",
+      "text", p)
+    val c0 = graft.tools.Profile.compiles()
+    val warm = screen()
+    warm.write.format("noop").mode("overwrite").save()
+    val compiled = graft.tools.Profile.compiles() - c0
+    val plan = warm.queryExecution.executedPlan.toString
+    assert(compiled == 0, s"warm screen compiled $compiled classes:\n$plan")
+    // the fold's filter holds the ids as a set, not as inlined literals
+    assert("b#\\d+L INSET ".r.findFirstIn(plan).nonEmpty, plan)
+    assert(plan.contains("In(b, [0,1,2])"), plan)
+    Caches.clear()
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftHooks}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,6 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * identical µs-since-epoch values. A generator layout change must
   * never silently take out the temporal query family again (r10 broke
   * exactly this way when the driver switched NANOS → timestamp[us]).
+  *
+  * Also pins `Tables.load`'s schema memo: a load of an unchanged input
+  * starts no Spark job, a rewritten input is re-inferred, and a memo-hit
+  * load reads exactly what a fresh `spark.read.parquet` reads.
   */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -105,5 +110,106 @@ class TablesSpec extends AnyFunSuite {
     val df = Tables.events(spark, sf)
     assert(df.schema("ts").dataType == TimestampType)
     assert(df.limit(1).count() == 1L)
+  }
+
+  // ------------------------------------------------ the schema memo
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    GraftHooks.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = f
+      GraftHooks.drainListeners(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def tempDir(): String = {
+    val dir = Files.createTempDirectory("graft-tables-memo").toFile
+    dir.deleteOnExit()
+    dir.getAbsolutePath
+  }
+
+  private def canon(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("a second load of an unchanged input runs no Spark job") {
+    val d = tempDir()
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$d/region.parquet")
+    val (_, first) = jobsDuring(Tables.load(spark, d, "region"))
+    assert(first >= 1, "the first load should infer the schema with a job")
+    val (df, second) = jobsDuring(Tables.load(spark, d, "region"))
+    assert(second == 0, s"an unchanged input ran $second jobs")
+    assert(canon(df) == Seq("[1,a]", "[2,b]"))
+  }
+
+  test("a rewritten input is re-inferred: new schema, new rows") {
+    val d = tempDir()
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$d/nation.parquet")
+    assert(Tables.load(spark, d, "nation").schema.fieldNames.toSeq ==
+      Seq("k", "v"))
+    Seq((7, 2.5, true), (8, 3.5, false)).toDF("id", "x", "flag")
+      .write.mode("overwrite").parquet(s"$d/nation.parquet")
+    val df = Tables.load(spark, d, "nation")
+    assert(df.schema == StructType(Seq(StructField("id", IntegerType),
+      StructField("x", DoubleType), StructField("flag", BooleanType))))
+    assert(canon(df) == Seq("[7,2.5,true]", "[8,3.5,false]"))
+  }
+
+  test("sessions with different parquet settings never share a schema") {
+    val d = tempDir()
+    // two files with disjoint columns: one footer's schema, or both merged
+    Seq(1L).toDF("k").write.parquet(s"$d/part.parquet")
+    Seq("x").toDF("v").write.mode("append").parquet(s"$d/part.parquet")
+    val merging = spark.newSession()
+    merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+    for (_ <- 1 to 2; s <- Seq(spark, merging)) {
+      val got = Tables.load(s, d, "part").schema
+      assert(got == s.read.parquet(s"$d/part.parquet").schema)
+      assert((got.fieldNames.length == 2) == (s eq merging), got)
+    }
+  }
+
+  /** The loader's normalization per table, applied to both sides. */
+  private def normalized(name: String, df: DataFrame): DataFrame =
+    name match {
+      case "orders"   => Tables.normalizeTsNaive(df, "o_orderdate")
+      case "lineitem" => Tables.normalizeTsNaive(df, "l_shipdate")
+      case "events"   => Tables.normalizeTs(df, "ts")
+      case _          => df
+    }
+
+  private def assertHitMatchesFresh(d: String, name: String): Unit = {
+    Tables.load(spark, d, name)
+    val (hit, jobs) = jobsDuring(normalized(name, Tables.load(spark, d, name)))
+    assert(jobs == 0, s"$name: the memo-hit load ran $jobs jobs")
+    val fresh = normalized(name, spark.read.parquet(s"$d/$name.parquet"))
+    assert(hit.schema == fresh.schema, name)
+    assert(canon(hit) == canon(fresh), name)
+  }
+
+  test("every sf0.001 table: a memo-hit load reads what a fresh read does") {
+    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    Tables.names.foreach(assertHitMatchesFresh(sf, _))
+  }
+
+  test("every events.ts layout: a memo-hit load reads what a fresh read does") {
+    val ns = micros.map(_ * 1000L).toDF("ts")
+    val us = micros.toDF("us")
+    for (layout <- Seq(ns,
+        us.select(timestamp_micros(col("us")).cast(TimestampNTZType).as("ts")),
+        us.select(timestamp_micros(col("us")).as("ts")))) {
+      val d = tempDir()
+      layout.write.parquet(s"$d/events.parquet")
+      assertHitMatchesFresh(d, "events")
+    }
   }
 }
