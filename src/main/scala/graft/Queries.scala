@@ -21,11 +21,25 @@ object Queries {
       .agg(count(lit(1)).as("n"))
       .orderBy("month")
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every query as its module builds it. */
+  private[graft] val builders: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_monthly_counts" -> ((s, d) => q01MonthlyCounts(s, d))
   ) ++ Relational.all ++ FunctionQueries.all ++ EtlQueries.all ++
     LlmQueries.all ++ SourceQueries.all ++ MlQueries.all ++
     SourceProfiles.queries ++ Temporal.all ++ CorpusQueries.all
+
+  /** The queries whose analyzed plans are reused ([[Prepared]]): the
+    * listing cycle's MERGE, tag, export and dashboard steps. A query
+    * belongs here only when its construction reads nothing but `Tables`
+    * inputs: it starts no Spark job, writes nothing and reads no
+    * manifest (PreparedSpec checks each). */
+  private[graft] val prepared: Set[String] = Set(
+    "q28_merge_upsert", "q29_issue_tags", "q30_export_wide",
+    "q47_crawl_report", "q48_tag_counts", "q49_queue_page",
+    "q63_report_totals")
+
+  val all: Map[String, (SparkSession, String) => DataFrame] =
+    builders.map { case (n, f) => n -> (if (prepared(n)) Prepared(n, f) else f) }
 
   val oracle: Map[String, String] = Map(
     "q01_monthly_counts" ->

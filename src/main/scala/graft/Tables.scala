@@ -4,7 +4,7 @@ import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftHooks, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -19,8 +19,12 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     read(spark, s"$sfDir/$name.parquet")._1
 
-  /** (path, length, modification time) of every file under an input. */
-  private type Stamp = Seq[(String, Long, Long)]
+  /** (path, length, modification time) of each file, sorted by path. */
+  private[graft] type Stamp = Seq[(String, Long, Long)]
+
+  private[graft] def stamp(files: Seq[FileStatus]): Stamp =
+    files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
 
   /** The schema each input was last inferred with, and the stamp of the
     * files it was inferred from, keyed by path and by the session's
@@ -35,31 +39,34 @@ object Tables {
     * state: while no file under `path` changes name, length or mtime,
     * later reads pass the remembered schema and start no Spark job.
     * The listing precedes the inference, so a rewrite racing it leaves
-    * an older stamp that the next read re-infers past. */
+    * an older stamp that the next read re-infers past. The listing is
+    * of the files the reader reads ([[listFiles]]). */
   private def read(spark: SparkSession, path: String): (DataFrame, Seq[FileStatus]) = {
     val files = listFiles(spark, new Path(path))
-    val stamp: Stamp =
-      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val now = stamp(files)
     val key = (path, spark.conf.getAll)
     val df = Option(schemas.get(key)) match {
-      case Some((`stamp`, schema)) => spark.read.schema(schema).parquet(path)
+      case Some((`now`, schema)) => spark.read.schema(schema).parquet(path)
       case _ =>
         val inferred = spark.read.parquet(path)
-        schemas.put(key, (stamp, inferred.schema))
+        schemas.put(key, (now, inferred.schema))
         inferred
     }
     (df, files)
   }
 
-  /** Every file under `p` (recursively), or `p` itself when it is a
-    * file; empty when it does not exist, which leaves the missing-path
-    * error to the parquet read. */
-  private def listFiles(spark: SparkSession, p: Path): Seq[FileStatus] = {
+  /** The files Spark's reader reads under `p`: every file below it
+    * (recursively) whose name and whose directories' names Spark does
+    * not hide (`_SUCCESS`, `.crc`, other `_`/`.` names), or `p` itself
+    * when it is a file; empty when it does not exist, which leaves the
+    * missing-path error to the parquet read. */
+  private[graft] def listFiles(spark: SparkSession, p: Path): Seq[FileStatus] = {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def walk(st: FileStatus): Seq[FileStatus] =
       if (st.isFile) Seq(st)
-      else fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName)
-        .flatMap(walk)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => GraftHooks.isHidden(c.getPath.getName))
+        .sortBy(_.getPath.getName).flatMap(walk)
     try walk(fs.getFileStatus(p))
     catch { case _: FileNotFoundException => Nil }
   }

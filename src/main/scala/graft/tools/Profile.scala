@@ -1,12 +1,18 @@
 package graft.tools
 
-import graft.{Caches, GraftSession, SparkEntry}
+import graft.{Caches, GraftSession, Prepared, SparkEntry}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Timing helper for one query: repeated noop-sink materializations
   * (same methodology as Bench) so a change's effect on a single query
   * is measurable without the full bench loop. Each iteration prints its
   * wall time, how many classes it compiled and how many Spark jobs it
-  * ran, followed by one `[job]` row per job; a query whose later
+  * ran; then the frame's build time, whether its analyzed plan was
+  * reused from the prepared memo ([[graft.Prepared]]), the analysis time
+  * of the frame's final plan and the optimization and planning times of
+  * the write; then one `[job]` row per job. A query whose later
   * iterations still compile is recompiling its plan on every call.
   * Usage:
   *   runMain graft.tools.Profile <sfDir> <query> [iters]
@@ -42,16 +48,35 @@ object Profile {
           }
         }
       })
+    // the write's QueryExecution, for its optimization and planning times
+    val write = new java.util.concurrent.atomic.AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        write.set(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def ms(qe: QueryExecution, phase: String): Double =
+      qe.tracker.phases.get(phase).fold(0.0)(_.durationMs.toDouble)
     val fn = SparkEntry.queries(name)
     for (i <- 1 to iters) {
       val t0 = System.nanoTime()
       val c0 = compiles()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val df = fn(spark, sfDir)
+      val buildMs = (System.nanoTime() - t0) / 1e6
+      val analysisMs = ms(df.queryExecution, QueryPlanningTracker.ANALYSIS)
+      df.write.format("noop").mode("overwrite").save()
       Caches.clear()
       val secs = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftHooks.drainListeners(spark.sparkContext)
+      val (opt, plan) = Option(write.getAndSet(null)).fold((0.0, 0.0))(qe =>
+        (ms(qe, QueryPlanningTracker.OPTIMIZATION),
+          ms(qe, QueryPlanningTracker.PLANNING)))
       println(f"[profile] $name iter $i: $secs%.3f s, " +
         s"${compiles() - c0} compiles, ${rows.size} jobs")
+      println(f"[profile]   build $buildMs%.1f ms (plan " +
+        (if (Prepared.reused(df)) "reused" else "built") +
+        f"), analysis $analysisMs%.1f ms, " +
+        f"optimization $opt%.0f ms, planning $plan%.0f ms")
       rows.forEach(r => println(r)); rows.clear()
     }
     spark.stop()

@@ -212,4 +212,26 @@ class TablesSpec extends AnyFunSuite {
       assertHitMatchesFresh(d, "events")
     }
   }
+
+  // ------------------------------------------------ the corpus fan-out
+
+  test("the fan-out estimate counts only the files the reader reads") {
+    val d = tempDir()
+    spark.range(0, 40).select(col("id").as("doc_id"), lit("t").as("text"))
+      .repartition(2).write.parquet(s"$d/documents.parquet")
+    val names = new java.io.File(s"$d/documents.parquet").list().toSeq
+    assert(names.count(_.startsWith("part-")) == 2 && names.contains("_SUCCESS"),
+      names)
+    // Each file counts at least the 4 MB open cost against 8 MB splits:
+    // the two parts make one split, under the session's parallelism of
+    // two. Counting _SUCCESS as well made it two splits, and no fan-out.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
+    s.conf.set("spark.sql.files.openCostInBytes", (4L << 20).toString)
+    assert(s.sparkContext.defaultParallelism == 2)
+    val plan = Tables.documents(s, d).queryExecution.analyzed
+    assert(plan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r
+    }.nonEmpty, s"a two-part corpus under one split did not fan out:\n$plan")
+  }
 }
