@@ -28,31 +28,12 @@ object Bench {
     * (1,813 s) do. */
   val Draws = 2
 
-  /** BENCH-ONLY production-hash twins of the two heaviest shingle
-    * scans: the registered q36/q76 stay on md5 (DuckDB reproduces it —
-    * the oracle constraint), but the production deployment runs
-    * xxhash64 (the `xx` flag; HashModeSpec pins mode equivalence on a
-    * collision-free corpus), so the HEADLINE number for those scans
-    * should be the production hash's, not the md5 tax. These are not
+  /** BENCH-ONLY rows: the two drift probes. These are not
     * driver-registry queries — no oracle claims, benchable only.
     */
   private[graft] val benchOnly
       : Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
-    "q36x_minhash_lsh_xx" -> ((s, d) =>
-      graft.TextOps.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-        xx = true)),
-    "q76x_winnow_containment_xx" -> ((s, d) =>
-      graft.TextOps.containmentPairs(Tables.documents(s, d), "doc_id",
-        "text", xx = true)),
-    // the capped langid production twin: minDocGramCount = 2 drops
-    // per-doc hapax trigrams after the partial aggregate — the spill
-    // knob SCALING.md's corpus-scale probe motivates. The registered
-    // q125 stays uncapped for oracle fidelity; this twin carries the
-    // production number in the headline next to it
-    "q125x_langid_capped" -> ((s, d) =>
-      graft.CorpusOps.langIdTrigram(Tables.documents(s, d), "doc_id",
-        "text", "lang", minDocGramCount = 2)),
     // The CODE-INDEPENDENT drift control: pure Spark built-ins over
     // spark.range — no graft operator code, no input data — so its
     // run-over-run ratio moves only with the host/JVM, never with the
@@ -88,7 +69,7 @@ object Bench {
         .agg(max(col("h")).as("mx"), count(lit(1)).as("n"))
     }))
 
-  /** Every benchable query: the driver registry + the bench-only twins. */
+  /** Every benchable query: the driver registry + the drift probes. */
   private[graft] def benchable
       : Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] =
@@ -217,11 +198,7 @@ object Bench {
       "q203_mojibake_repair", "q204_hll_distinct", "q205_hll_merged",
       // the small-range (linear-counting) HLL regime: per-type user_id
       // sits below the 2.5m boundary at sf0.01
-      "q206_hll_small_range",
-      // production twins (benchOnly): xxhash64 for the heaviest
-      // shingle scans, df-capped langid for the heaviest per-char scan
-      "q36x_minhash_lsh_xx", "q76x_winnow_containment_xx",
-      "q125x_langid_capped")
+      "q206_hll_small_range")
     // excluded by design: the q66/q67 sink roundtrips and q173's shard
     // writer; q120 (the z-ordered WRITER: its scan cost is measured
     // above, the write path is ZOrderSpec's subject); q172/q175 (the

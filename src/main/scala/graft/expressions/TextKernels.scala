@@ -57,21 +57,6 @@ object TextKernels {
       ((dig(2) & 0xffL) << 4) | ((dig(3) & 0xffL) >>> 4)
   }
 
-  /** Low 28 bits of xxhash64(bytes, seed 42) — bit-equal to the Column
-    * form `xxhash64(x) & 0xFFFFFFF` (Spark's xxhash64 hashes a string's
-    * UTF-8 bytes with seed 42). The PRODUCTION hash mode: a few long
-    * multiplies per input vs md5's full digest, at the cost of the
-    * DuckDB oracle (no md5 counterpart) — so oracle-gated queries stay
-    * on [[hash28]] and the swap is the `xx` flag, not a rewrite.
-    * HashModeSpec pins that both modes yield identical near-dup RESULTS
-    * on a collision-free corpus (Jaccard over hashed sets is
-    * hash-invariant wherever the sets stay collision-free).
-    */
-  def hash28xx(bytes: Array[Byte]): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-      bytes.length, 42L) & 0xFFFFFFFL
-
   private val ws = java.util.regex.Pattern.compile("\\s+")
 
   /** Spark-parity word split: `split(trim(text), "\\s+")`. Spark's trim
@@ -98,7 +83,7 @@ object TextKernels {
     * `when(size >= n, …).otherwise(array())` falls through on the null
     * condition too).
     */
-  def hashedShingles(text: UTF8String, n: Int, xx: Boolean = false): ArrayData = {
+  def hashedShingles(text: UTF8String, n: Int): ArrayData = {
     if (text == null) return emptyLongs
     val w = words(text.toString)
     val m = w.length - n + 1
@@ -115,7 +100,7 @@ object TextKernels {
         j += 1
       }
       val bytes = sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      hs(i) = if (xx) hash28xx(bytes) else hash28(bytes)
+      hs(i) = hash28(bytes)
       i += 1
     }
     java.util.Arrays.sort(hs)
@@ -135,8 +120,7 @@ object TextKernels {
     * a bit is set iff strictly more distinct words vote 1 than 0. Null
     * text → 0 (the Column form's left-outer + coalesce).
     */
-  def simhash(text: UTF8String, salts: Array[Array[Byte]],
-              xx: Boolean = false): Long = {
+  def simhash(text: UTF8String, salts: Array[Array[Byte]]): Long = {
     if (text == null) return 0L
     val w = words(text.toString)
     val seen = new java.util.HashSet[String]()
@@ -156,7 +140,7 @@ object TextKernels {
               System.arraycopy(s, 0, b, wb.length, s.length)
               b
             }
-          val h = if (xx) hash28xx(bytes) else hash28(bytes)
+          val h = hash28(bytes)
           var j = 0
           while (j < 28) {
             counters(28 * k + j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
@@ -177,14 +161,11 @@ object TextKernels {
   }
 }
 
-/** `graft_hashed_shingles(text, n[, xx])`: sorted distinct 28-bit
-  * hashes of the word n-gram shingles — md5-prefix by default, the
-  * xxhash64 production fold when the optional literal `xx` is true.
-  * Never null — null text or a doc shorter than n words yields the
-  * empty array.
+/** `graft_hashed_shingles(text, n)`: sorted distinct 28-bit md5-prefix
+  * hashes of the word n-gram shingles. Never null — null text or a doc
+  * shorter than n words yields the empty array.
   */
-case class HashedShinglesExpr(left: Expression, right: Expression,
-                              xx: Boolean = false)
+case class HashedShinglesExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -208,7 +189,7 @@ case class HashedShinglesExpr(left: Expression, right: Expression,
 
   // not nullSafeEval: null text maps to the EMPTY ARRAY, not null
   override def eval(input: InternalRow): Any =
-    TextKernels.hashedShingles(left.eval(input).asInstanceOf[UTF8String], n, xx)
+    TextKernels.hashedShingles(left.eval(input).asInstanceOf[UTF8String], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val l = left.genCode(ctx)
@@ -218,7 +199,7 @@ case class HashedShinglesExpr(left: Expression, right: Expression,
       ${r.code}
       org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
         graft.expressions.TextKernels.hashedShingles(
-          ${l.isNull} ? null : ${l.value}, ${r.value}, $xx);""",
+          ${l.isNull} ? null : ${l.value}, ${r.value});""",
       isNull = FalseLiteral)
   }
 
@@ -227,13 +208,11 @@ case class HashedShinglesExpr(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** `graft_simhash(text, salts[, xx])`: SimHash of width 28·|salts| over
-  * the distinct words (salt k → bits 28k..28k+27) — md5-prefix word
-  * hashes by default, xxhash64 when the optional literal `xx` is true.
-  * Never null — null text yields 0.
+/** `graft_simhash(text, salts)`: SimHash of width 28·|salts| over the
+  * distinct words (salt k → bits 28k..28k+27) from md5-prefix word
+  * hashes. Never null — null text yields 0.
   */
-case class SimhashExpr(left: Expression, right: Expression,
-                       xx: Boolean = false)
+case class SimhashExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -268,8 +247,7 @@ case class SimhashExpr(left: Expression, right: Expression,
 
   // not nullSafeEval: null text maps to 0L, not null
   override def eval(input: InternalRow): Any =
-    TextKernels.simhash(left.eval(input).asInstanceOf[UTF8String],
-      saltBytes, xx)
+    TextKernels.simhash(left.eval(input).asInstanceOf[UTF8String], saltBytes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val saltsRef = ctx.addReferenceObj("graftSimhashSalts", saltBytes, "byte[][]")
@@ -277,7 +255,7 @@ case class SimhashExpr(left: Expression, right: Expression,
     ev.copy(code = code"""
       ${l.code}
       long ${ev.value} = graft.expressions.TextKernels.simhash(
-        ${l.isNull} ? null : ${l.value}, $saltsRef, $xx);""",
+        ${l.isNull} ? null : ${l.value}, $saltsRef);""",
       isNull = FalseLiteral)
   }
 

@@ -87,35 +87,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       build(children)
     }
 
-  // the text-hash kernels take an OPTIONAL trailing literal boolean
-  // selecting the xxhash64 production mode (default false = md5, the
-  // oracle-reproducible hash); the flag is folded into the expression,
-  // not kept as a child
-  private def arityWithXx(name: String, n: Int)(
-      build: (Seq[Expression], Boolean) => Expression)
-      : Seq[Expression] => Expression =
-    children => {
-      def fail(expected: String): Nothing =
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> s"`$name`",
-            "expectedNum" -> expected,
-            "actualNum" -> children.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      if (children.length != n && children.length != n + 1)
-        fail(s"$n (or ${n + 1} with a literal BOOLEAN xx flag)")
-      val xx = children.length == n + 1 && {
-        val f = children(n)
-        if (!f.foldable ||
-            f.dataType != org.apache.spark.sql.types.BooleanType ||
-            f.eval() == null)
-          fail(s"$n plus a non-null literal BOOLEAN xx flag")
-        f.eval().asInstanceOf[Boolean]
-      }
-      build(children.take(n), xx)
-    }
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       FunctionIdentifier("graft_to_number_native"),
@@ -135,12 +106,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_hashed_shingles"),
       new ExpressionInfo(classOf[HashedShinglesExpr].getName,
         "graft_hashed_shingles"),
-      arityWithXx("graft_hashed_shingles", 2)((c, xx) =>
-        HashedShinglesExpr(c.head, c(1), xx))))
+      arity("graft_hashed_shingles", 2)(c =>
+        HashedShinglesExpr(c.head, c(1)))))
     ext.injectFunction((
       FunctionIdentifier("graft_simhash"),
       new ExpressionInfo(classOf[SimhashExpr].getName, "graft_simhash"),
-      arityWithXx("graft_simhash", 2)((c, xx) =>
-        SimhashExpr(c.head, c(1), xx))))
+      arity("graft_simhash", 2)(c => SimhashExpr(c.head, c(1)))))
   }
 }

@@ -698,8 +698,8 @@ object CorpusOps {
     *
     * Scale shape (r22): ALL per-document work is row-local. `idCol`
     * keys exactly one input row (a document id — the declared
-    * precondition), so a document's gram counts, its hapax filter and
-    * its top-`docK` rank profile never need rows from any other
+    * precondition), so a document's gram counts and its top-`docK`
+    * rank profile never need rows from any other
     * partition: the gram array is sorted and run-length encoded with
     * higher-order functions inside the row, then rank-sorted by
     * (count desc, gram asc) — the exact window order the old
@@ -722,8 +722,8 @@ object CorpusOps {
     * aggregates; no nested loop, no stage touching doc pairs.
     */
   def langIdTrigram(df: DataFrame, idCol: String, textCol: String,
-                    langCol: String, langK: Int = 50, docK: Int = 20,
-                    minDocGramCount: Int = 1): DataFrame = {
+                    langCol: String, langK: Int = 50, docK: Int = 20)
+      : DataFrame = {
     // the dominance shortcut (scaladoc above) needs every matched gram's
     // contribution |drank − lrank| ≤ langK − 1, which holds only when
     // docK ≤ langK — enforce the precondition instead of assuming it
@@ -751,26 +751,17 @@ object CorpusOps {
         (i === 1) ||
           element_at(col("sorted"), i) =!= element_at(col("sorted"), i - 1)))
       .otherwise(array().cast("array<int>"))
-    val rleAll = transform(col("starts"), (s, j) => struct(
+    val rle = transform(col("starts"), (s, j) => struct(
       (coalesce(try_element_at(col("starts"), j + 2),
         size(col("sorted")) + 1) - s).cast("long").as("n"),
       element_at(col("sorted"), s).as("gram")))
-    // `minDocGramCount` is the 100 TB knob SCALING.md's growth probe
-    // motivates: > 1 drops a doc's hapax trigrams right inside the row
-    // — at the cost of a DIFFERENT (coarser but still deterministic)
-    // doc profile. The registered q125 keeps 1: its oracle re-derives
-    // the uncapped profile, and capping is a deployment trade, not a
-    // default.
-    val rleExpr = if (minDocGramCount > 1)
-      filter(rleAll, e => e.getField("n") >= minDocGramCount)
-    else rleAll
     val docBase = Caches.persistTracked(
       df.select(col(idCol).as("doc_id"), col(langCol).as("lang"),
           grams.as("g"))
         .select(col("doc_id"), col("lang"), sorted.as("sorted"))
         .select(col("doc_id"), col("lang"), col("sorted"),
           starts.as("starts"))
-        .select(col("doc_id"), col("lang"), rleExpr.as("rle")))
+        .select(col("doc_id"), col("lang"), rle.as("rle")))
     val wLang = Window.partitionBy("lang")
       .orderBy(col("n").desc, col("gram").asc)
     val langProf = docBase

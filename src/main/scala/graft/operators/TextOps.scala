@@ -10,31 +10,16 @@ import org.apache.spark.sql.functions._
   * Scale discipline: every candidate-pair generator is bucketed (LSH band
   * buckets, metadata blocks) — never an all-pairs crossJoin; at 100 TB the
   * only shuffles are on bucket keys whose fan-out is bounded by design
-  * (band width, block size). Hashing defaults to md5-prefix so the DuckDB
-  * oracle can reproduce values bit-for-bit; the `xx` flag on the shingle/
-  * simhash builders swaps in the xxhash64 production hash (same operator
-  * shape, no oracle — HashModeSpec pins result equivalence).
+  * (band width, block size). Hashing is md5-prefix so the DuckDB oracle
+  * can reproduce values bit-for-bit.
   */
 object TextOps {
 
   /** 28-bit deterministic hash both engines can compute: fold the first 7
-    * hex chars of md5. At production scale [[hash7Xx]] (the `xx` flag)
-    * swaps in xxhash64 — the operator shape is identical.
+    * hex chars of md5.
     */
   def hash7(c: Column): Column =
     conv(substring(md5(c), 1, 7), 16, 10).cast("long")
-
-  /** 28-bit hash, PRODUCTION mode: low 28 bits of xxhash64 (seed 42) —
-    * a few long multiplies per input vs md5's full digest. No DuckDB
-    * counterpart, so oracle-gated queries stay on [[hash7]]; the swap
-    * is the `xx` flag on [[hashedShingleSet]] / [[simhashWideDf]] /
-    * [[lshVerifiedPairs]], not a rewrite — HashModeSpec pins that both
-    * modes produce identical near-dup RESULTS on a collision-free
-    * corpus (Jaccard over hashed sets is hash-invariant wherever the
-    * sets stay collision-free).
-    */
-  def hash7Xx(c: Column): Column =
-    xxhash64(c).bitwiseAND(lit(0xFFFFFFFL))
 
   /** Exact dedup MODULO UNICODE NORMALIZATION (q199): the crawler-dup
     * shape byte-exact dedup structurally misses — the same page served
@@ -158,9 +143,8 @@ object TextOps {
     * replaced lives in the tests (`LegacyTextKernels`), pinned
     * bit-equal by TextKernelsSpec.
     */
-  def hashedShingleSet(text: Column, n: Int = 3, xx: Boolean = false): Column =
-    if (xx) call_function("graft_hashed_shingles", text, lit(n), lit(true))
-    else call_function("graft_hashed_shingles", text, lit(n))
+  def hashedShingleSet(text: Column, n: Int = 3): Column =
+    call_function("graft_hashed_shingles", text, lit(n))
 
   /** Word n-gram shingles (default 3): one string per window. */
   def shingles(text: Column, n: Int = 3): Column =
@@ -223,8 +207,7 @@ object TextOps {
     * Consumers: [[minhashLsh]] (per-doc best-candidate stats) and
     * [[dupClusters]] (threshold → connected components).
     */
-  def lshVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
-                       xx: Boolean = false)
+  def lshVerifiedPairs(df: DataFrame, idCol: String, textCol: String)
       : (DataFrame, DataFrame) = {
     // The HASHED shingle-set projection feeds three consumers
     // (signatures + both sides of the Jaccard verify join); persist it so
@@ -237,7 +220,7 @@ object TextOps {
     // sessions can release the blocks after materialization.
     lshVerifiedPairsFrom(Caches.persistTracked(
       df.select(col(idCol).as("doc_id"),
-        hashedShingleSet(col(textCol), xx = xx).as("shset"))))
+        hashedShingleSet(col(textCol)).as("shset"))))
   }
 
   /** [[lshVerifiedPairs]] over an ALREADY-persisted (doc_id, shset)
@@ -290,10 +273,9 @@ object TextOps {
     * then best-candidate selection. Docs with no candidate keep a row
     * (n_candidates 0).
     */
-  def minhashLsh(df: DataFrame, idCol: String, textCol: String,
-                 xx: Boolean = false): DataFrame = {
+  def minhashLsh(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (sig, pairs) = lshVerifiedPairs(df, idCol, textCol, xx = xx)
+    val (sig, pairs) = lshVerifiedPairs(df, idCol, textCol)
     val perDoc = symmetrize(pairs, "doc_id", "partner", "jaccard")
     val wBest = Window.partitionBy("doc_id")
       .orderBy(col("jaccard").desc, col("partner").asc)
@@ -880,13 +862,11 @@ object TextOps {
     * spec, pinned bit-equal by TextKernelsSpec.)
     */
   def simhashWideDf(df: DataFrame, idCol: String, textCol: String,
-                    salts: Seq[String], xx: Boolean = false): DataFrame = {
+                    salts: Seq[String]): DataFrame = {
     require(salts.nonEmpty && 28 * salts.size <= 63,
       "width must fit a single long")
-    val saltArr = array(salts.map(lit): _*)
     df.select(col(idCol).as("doc_id"),
-      (if (xx) call_function("graft_simhash", col(textCol), saltArr, lit(true))
-       else call_function("graft_simhash", col(textCol), saltArr))
+      call_function("graft_simhash", col(textCol), array(salts.map(lit): _*))
         .as("simhash"))
   }
 
@@ -1114,12 +1094,10 @@ object TextOps {
     * (the higher-order-function recomputation trap the simhash scaladoc
     * describes), turning a linear scan quadratic.
     */
-  private[graft] def gramHashes(text: Column, k: Int = 8,
-                                xx: Boolean = false): Column =
+  private[graft] def gramHashes(text: Column, k: Int = 8): Column =
     when(length(text) >= k,
       transform(sequence(lit(1), length(text) - (k - 1)),
-        i => if (xx) hash7Xx(text.substr(i, lit(k)))
-             else hash7(text.substr(i, lit(k)))))
+        i => hash7(text.substr(i, lit(k)))))
       .otherwise(array().cast("array<long>"))
 
   /** Winnow selection (the MOSS rule) over a MATERIALIZED gram-hash
@@ -1165,8 +1143,7 @@ object TextOps {
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        k: Int = 8, w: Int = 16, dfCap: Int = 20,
                        minShared: Int = 4,
-                       minContainment: Double = 0.5,
-                       xx: Boolean = false): DataFrame = {
+                       minContainment: Double = 0.5): DataFrame = {
     // the fp projection is PERSISTED, not just split in two: the explode
     // below is a Generate, and the optimizer collapses projections into
     // a generator's input even when that re-inlines the md5 gram array
@@ -1177,7 +1154,7 @@ object TextOps {
     // inverted index needs materialized anyway.
     val fp = Caches.persistTracked(
       df.select(col(idCol).as("doc_id"),
-          gramHashes(col(textCol), k, xx).as("gh"))
+          gramHashes(col(textCol), k).as("gh"))
         .select(col("doc_id"), winnowSelect(col("gh"), w).as("fp")))
     val ex = fp.select(col("doc_id"), explode(col("fp")).as("h"))
     val keep = ex.groupBy("h").agg(count(lit(1)).as("c"))

@@ -74,20 +74,13 @@ import org.apache.spark.sql.functions.{col, sum}
   *    disk for readers still mid-scan on them (the Delta VACUUM
   *    retention knob); retain = 0 is the immediate-GC posture.
   *
-  * The arbitration rests on ONE primitive — atomic exclusive create —
-  * extracted behind [[ClaimPrimitive]] so the store requirement is a
-  * small, swappable, TESTABLE contract instead of prose. The default
-  * ([[ClaimPrimitive.Exclusive]]) is atomic on HDFS (create with
-  * overwrite=false is a namenode-arbitrated namespace op) and on local
-  * `file:` paths (routed through java.nio O_EXCL — Hadoop's
-  * RawLocalFileSystem would NOT do: its create(p, false) is an
-  * exists() check followed by a plain truncating open, so two truly
-  * concurrent racers can both "win"). An object store without atomic
-  * exclusive create (classic S3) must plug a conditional-write
-  * primitive (If-None-Match PUT) or keep the manifest on a consistent
-  * catalog — the same caveat every file-format transaction log
-  * carries; GenerationsSpec makes the failure mode executable with a
-  * deliberately non-atomic [[ClaimPrimitive]].
+  * The store requirement: the arbitration rests on ONE primitive,
+  * atomic exclusive create ([[ClaimPrimitive]]). It holds on HDFS and
+  * on local `file:` paths ([[ClaimPrimitive.Exclusive]]); a store
+  * without it (classic S3) cannot host the manifest — the same caveat
+  * every file-format transaction log carries. GenerationsSpec makes
+  * the failure mode executable with a deliberately non-atomic
+  * [[ClaimPrimitive]].
   */
 object Generations {
 
@@ -121,111 +114,6 @@ object Generations {
           catch { case e: java.io.IOException =>
             if (fs.exists(p)) false else throw e }
         }
-    }
-
-    /** A deliberately NON-atomic claim — exists() then plain create,
-      * the semantics of a store without conditional writes. Exists so
-      * GenerationsSpec can DEMONSTRATE the documented object-store
-      * failure (two racers both claiming one id) instead of merely
-      * asserting it in scaladoc. Never used outside tests. */
-    class NonAtomicSimulation(interleave: () => Unit)
-        extends ClaimPrimitive {
-      def claim(fs: FileSystem, p: Path): Boolean =
-        if (fs.exists(p)) false
-        else { interleave(); fs.create(p, true).close(); true }
-    }
-
-    /** CONDITIONAL-WRITE arbitration — the deployment alternative for
-      * stores without O_EXCL create but with an atomic no-overwrite
-      * PUBLISH primitive (the trait's raison d'être beyond POSIX):
-      * stage a writer-unique proposal file (plain create — uniqueness
-      * comes from the UUID in the NAME, so staging needs no atomicity
-      * at all), then publish it onto the claim path with one
-      * compare-and-swap-shaped call:
-      *
-      *  - `file:` scheme → link(2) via Files.createLink, which fails
-      *    EEXIST atomically in the kernel — the classic NFS-safe
-      *    lockfile protocol (O_EXCL was historically unreliable over
-      *    NFSv2, links never were);
-      *  - other schemes → FileSystem.rename(tmp, p), which HDFS
-      *    arbitrates in the namenode: dest-exists rename returns
-      *    false without touching either path. VALIDITY IS PER-STORE:
-      *    HDFS/GCS/ABFS renames arbitrate server-side, but vanilla
-      *    S3's "rename" is a client-side probe + copy + delete —
-      *    it CANNOT arbitrate; use [[ConditionalPut]] there (the
-      *    full per-store matrix lives on its scaladoc).
-      *
-      * Unlike [[NonAtomicSimulation]] there is NO exists() probe
-      * anywhere in the protocol — the publish call itself arbitrates —
-      * so the TOCTOU window the test double demonstrates structurally
-      * cannot exist: GenerationsSpec drives two writers through the
-      * same adversarial interleave points (the `interleave` hook runs
-      * between stage and publish, the widest possible race window)
-      * and exactly one wins. The staged proposal is deleted win or
-      * lose; a crash between stage and publish leaves a `.claim.` tmp
-      * that [[gc]]'s marker parser already ignores. */
-    class RenameCas(interleave: () => Unit = () => ())
-        extends ClaimPrimitive {
-      def claim(fs: FileSystem, p: Path): Boolean = {
-        val tmp = new Path(p.getParent,
-          p.getName + ".claim." + java.util.UUID.randomUUID().toString)
-        if (fs.getScheme == "file") {
-          val lt = java.nio.file.Paths.get(tmp.toUri.getPath)
-          java.nio.file.Files.createDirectories(lt.getParent)
-          java.nio.file.Files.write(lt, Array.emptyByteArray)
-        } else fs.create(tmp, true).close()
-        interleave()
-        val won =
-          if (fs.getScheme == "file") {
-            try {
-              java.nio.file.Files.createLink(
-                java.nio.file.Paths.get(p.toUri.getPath),
-                java.nio.file.Paths.get(tmp.toUri.getPath))
-              true
-            } catch {
-              case _: java.nio.file.FileAlreadyExistsException => false
-            }
-          } else fs.rename(tmp, p)
-        fs.delete(tmp, false)
-        won
-      }
-    }
-
-    /** The S3-TRUE claim — for stores where RENAME cannot arbitrate.
-      * [[RenameCas]] assumes an atomic dest-exists rename, which
-      * HDFS/GCS/ABFS provide and vanilla S3 does NOT (S3A rename is
-      * a client-side probe + copy + delete — a TOCTOU window at
-      * every step). There the one-call primitive is a CONDITIONAL
-      * PUT: "write this object iff absent", arbitrated by the
-      * SERVER (HTTP `If-None-Match: *`, which S3 honors for PutObject
-      * since 2024; GCS's equivalent precondition is
-      * `x-goog-if-generation-match: 0`). The store call arrives
-      * INJECTED — `putIfAbsent` must write the zero-byte marker iff
-      * absent and report whether it wrote — because this engine ships
-      * no vendor SDKs; the injection must honor exactly that contract
-      * (no client probe, no retry-overwrite). GenerationsSpec drives
-      * it through the same adversarial interleave as the other
-      * primitives, with an atomically-arbitrated test double standing
-      * in for the store.
-      *
-      * Per-store validity of the three primitives (the deployment
-      * matrix):
-      *  - POSIX `file:` — [[Exclusive]] (O_EXCL) and [[RenameCas]]
-      *    (link(2) EEXIST) both atomic; ConditionalPut n/a.
-      *  - HDFS — [[Exclusive]] and [[RenameCas]] both atomic
-      *    (namenode-arbitrated namespace operations).
-      *  - GCS / ABFS — [[RenameCas]] holds (atomic dest-exists
-      *    rename in the connectors); ConditionalPut holds via the
-      *    stores' generation/etag preconditions.
-      *  - Vanilla S3 — ONLY ConditionalPut: no exclusive create,
-      *    and rename is copy+delete. */
-    class ConditionalPut(putIfAbsent: Path => Boolean,
-                         interleave: () => Unit = () => ())
-        extends ClaimPrimitive {
-      def claim(fs: FileSystem, p: Path): Boolean = {
-        interleave()
-        putIfAbsent(p)
-      }
     }
   }
 

@@ -210,17 +210,21 @@ object Sinks {
     */
   def compactBucketedTo(spark: SparkSession, from: String, to: String,
                         bucketCols: Seq[String], numBuckets: Int,
-                        visibleB: Seq[Long]): Unit = {
-    val df = spark.table(from)
-    val dataCols = df.columns.filterNot(c => c == "w" || c == "b").toSeq
-    val net = df.filter(Generations.visibleIn(visibleB))
+                        visibleB: Seq[Long]): Unit =
+    writeBucketed(netFold(spark.table(from), visibleB), to, bucketCols,
+      numBuckets, "overwrite")
+
+  /** The compaction net fold: `rows`' visible batches grouped on every
+    * data column, `sum(w)` kept where nonzero, survivors restamped
+    * b = 0, columns in `rows`' order. */
+  private def netFold(rows: DataFrame, visibleB: Seq[Long]): DataFrame = {
+    val dataCols = rows.columns.filterNot(c => c == "w" || c == "b").toSeq
+    rows.filter(Generations.visibleIn(visibleB))
       .groupBy(dataCols.map(col): _*)
       .agg(sum(col("w")).cast("int").as("w"))
       .filter(col("w") =!= 0)
       .withColumn("b", lit(0L))
-      .select(df.columns.toSeq.map(col): _*)
-    // bucket alignment (one file per bucket) now lives in writeBucketed
-    writeBucketed(net, to, bucketCols, numBuckets, "overwrite")
+      .select(rows.columns.toSeq.map(col): _*)
   }
 
   /** Full compaction of an index's bucketed `logicals` from the
@@ -311,7 +315,6 @@ object Sinks {
                                numBuckets: Int, visibleB: Seq[Long],
                                buckets: Seq[Int]): Unit = {
     val df = spark.table(from)
-    val dataCols = df.columns.filterNot(c => c == "w" || c == "b").toSeq
     val wh = new org.apache.hadoop.fs.Path(
       spark.sessionState.conf.warehousePath)
     val srcDir = new org.apache.hadoop.fs.Path(wh, from)
@@ -330,14 +333,8 @@ object Sinks {
       if (rewriteFiles.isEmpty) df.filter(lit(false))
       else spark.read.schema(df.schema)
         .parquet(rewriteFiles.map(_.toString): _*)
-    val net = touchedRows.filter(Generations.visibleIn(visibleB))
-      .groupBy(dataCols.map(col): _*)
-      .agg(sum(col("w")).cast("int").as("w"))
-      .filter(col("w") =!= 0)
-      .withColumn("b", lit(0L))
-      .select(df.columns.toSeq.map(col): _*)
-    // bucket alignment (one file per bucket) now lives in writeBucketed
-    writeBucketed(net, to, bucketCols, numBuckets, "overwrite")
+    writeBucketed(netFold(touchedRows, visibleB), to, bucketCols, numBuckets,
+      "overwrite")
     // CARRY the untouched buckets' files. Moving their bytes would
     // cost what the skipped rewrite costs (the partial-ab probe
     // measured the byte-copy variant at ~0.75x of FULL — a loss), so

@@ -422,16 +422,16 @@ class CorpusOpsSpec extends AnyFunSuite {
       .forall(_.getAs[Long]("distance") >= 0L))
   }
 
-  test("langIdTrigram: row-local RLE counts, gram-asc rank tie-break " +
-    "and the minDocGramCount hapax cap match hand computation") {
+  test("langIdTrigram: RLE counts and gram-asc rank tie-break match " +
+    "hand computation") {
     // d1: "abcabcabc" → abc:3, bca:2, cab:2 (tie on 2 → bca before cab)
     // d2: "xyzxyz"    → xyz:2, yzx:1, zxy:1
-    // d3: "qqqxyz"    → qqq:1, qqx:1, qxy:1, xyz:1 (all hapax)
+    // d3: "qqqxyz"    → qqq:1, qqx:1, qxy:1, xyz:1
     val docs = Seq(
       (1L, "aa", "abcabcabc"),
       (2L, "bb", "xyzxyz"),
       (3L, "bb", "qqqxyz")).toDF("doc_id", "lang", "text")
-    // uncapped: lang bb profile sums d2+d3 → xyz(3) lrank1, then the
+    // lang bb profile sums d2+d3 → xyz(3) lrank1, then the
     // count-1 grams gram-asc: qqq 2, qqx 3, qxy 4, yzx 5, zxy 6
     val out = CorpusOps.langIdTrigram(docs, "doc_id", "text", "lang")
       .collect().map(r => r.getLong(0) -> r).toMap
@@ -443,17 +443,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     // d3: |1−2| + |2−3| + |3−4| + |4−1| = 6
     assert(out(3L).getAs[String]("predicted") == "bb")
     assert(out(3L).getAs[Long]("distance") == 6L)
-    // capped (minDocGramCount = 2): d3's grams are all hapax → empty
-    // profile → null prediction; d2 keeps only xyz → exact match
-    val cap = CorpusOps.langIdTrigram(docs, "doc_id", "text", "lang",
-        minDocGramCount = 2)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(cap(1L).getAs[String]("predicted") == "aa")
-    assert(cap(1L).getAs[Long]("distance") == 0L)
-    assert(cap(2L).getAs[String]("predicted") == "bb")
-    assert(cap(2L).getAs[Long]("distance") == 0L)
-    assert(cap(3L).getAs[String]("predicted") == null)
-    assert(!cap(3L).getAs[Boolean]("is_correct"))
   }
 
   test("sourceMixPlan: τ=1/2 weights, integer allocations and " +

@@ -18,11 +18,13 @@ class EntrySpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("q99_nope"))
     // no subset → the default headline, every name benchable (the
-    // registry plus Bench.benchOnly's production-hash twins)
+    // registry plus Bench.benchOnly's two drift probes)
     val base = Bench.headline(None)
     assert(base.nonEmpty && base.forall(Bench.benchable.contains))
-    // the twins are benchable but NOT registry queries — the driver's
+    // the probes are benchable but NOT registry queries — the driver's
     // oracle surface is untouched by bench-only entries
+    assert(Bench.benchOnly.keySet ==
+      Set("q00x_drift_probe", "q00y_drift_probe_cpu"))
     assert(Bench.benchOnly.keySet.forall(base.contains))
     assert(Bench.benchOnly.keySet
       .forall(k => !SparkEntry.queries.contains(k)))
@@ -38,7 +40,7 @@ class EntrySpec extends AnyFunSuite {
     val rows = "\"([^\"]+)\"\\s*:".r
       .findAllMatchIn(json.substring(start + 1, json.indexOf('}', start)))
       .map(_.group(1)).toSeq
-    assert(rows.size == 147)
+    assert(rows.size == 144)
     assert(Bench.headline(None) == rows)
   }
 

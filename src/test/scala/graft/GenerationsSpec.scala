@@ -268,7 +268,7 @@ class GenerationsSpec extends AnyFunSuite {
       // writer A's claim is paused between its exists() probe and its
       // create; writer B races the SAME candidate in that window
       Generations.claimPrimitive =
-        new Generations.ClaimPrimitive.NonAtomicSimulation(() => {
+        new GenerationsSpec.NonAtomicSimulation(() => {
           if (!fired) {
             fired = true
             bB = Generations.claimBatchFrom(spark, p, 0L, 1L)
@@ -280,89 +280,6 @@ class GenerationsSpec extends AnyFunSuite {
       // test above, where the default primitive yields 1 and 2)
       assert(bA == 1L && bB == 1L && bA == bB,
         s"expected the double-claim failure: A=$bA B=$bB")
-    } finally { Generations.claimPrimitive = saved }
-  }
-
-  test("RenameCas conditional-write claim: the SAME adversarial " +
-    "interleave that double-claims under the non-atomic double " +
-    "yields exactly one winner — the publish call itself arbitrates, " +
-    "no exists() probe exists to race") {
-    val p = "tgen10"
-    Generations.beginBootstrap(spark, p)
-    var bB = -1L
-    var fired = false
-    val saved = Generations.claimPrimitive
-    try {
-      // writer A is paused between STAGING its proposal and PUBLISHING
-      // it — the widest possible window; writer B runs a complete
-      // claim of the same candidate inside it and must win, leaving A
-      // to detect the loss at publish and retry upward
-      Generations.claimPrimitive =
-        new Generations.ClaimPrimitive.RenameCas(() => {
-          if (!fired) {
-            fired = true
-            bB = Generations.claimBatchFrom(spark, p, 0L, 1L)
-          }
-        })
-      val bA = Generations.claimBatchFrom(spark, p, 0L, 1L)
-      assert(bB == 1L && bA == 2L,
-        s"CAS arbitration failed: A=$bA B=$bB")
-    } finally { Generations.claimPrimitive = saved }
-  }
-
-  test("ConditionalPut claim (the S3-true slot): the injected " +
-    "write-iff-absent call is the sole arbiter — same adversarial " +
-    "interleave, exactly one winner, no client-side probe") {
-    val p = "tgen12"
-    Generations.beginBootstrap(spark, p)
-    var bB = -1L
-    var fired = false
-    val saved = Generations.claimPrimitive
-    try {
-      // the store stand-in: atomic membership arbitration (what a
-      // conditional PUT's If-None-Match does server-side), then the
-      // winner materializes the zero-byte marker for the manifest's
-      // directory listings
-      val store = java.util.concurrent.ConcurrentHashMap
-        .newKeySet[String]()
-      def put(path: org.apache.hadoop.fs.Path): Boolean =
-        store.add(path.toString) && {
-          val local = java.nio.file.Paths.get(path.toUri.getPath)
-          java.nio.file.Files.createDirectories(local.getParent)
-          java.nio.file.Files.write(local, Array.emptyByteArray)
-          true
-        }
-      Generations.claimPrimitive =
-        new Generations.ClaimPrimitive.ConditionalPut(put, () => {
-          if (!fired) {
-            fired = true
-            bB = Generations.claimBatchFrom(spark, p, 0L, 1L)
-          }
-        })
-      val bA = Generations.claimBatchFrom(spark, p, 0L, 1L)
-      assert(bB == 1L && bA == 2L,
-        s"conditional-PUT arbitration failed: A=$bA B=$bB")
-    } finally { Generations.claimPrimitive = saved }
-  }
-
-  test("the full index lifecycle stays green under the conditional-" +
-    "write primitive: bootstrap/append/compact/search all claim " +
-    "through RenameCas") {
-    val saved = Generations.claimPrimitive
-    try {
-      Generations.claimPrimitive =
-        new Generations.ClaimPrimitive.RenameCas()
-      val p = "tgen11"
-      Bm25Index.write(docs.filter(col("doc_id") % 5 <= 2), "doc_id",
-        "text", p)
-      Bm25Index.append(docs.filter(col("doc_id") % 5 === 3), "doc_id",
-        "text", p)
-      Bm25Index.compact(spark, p)
-      assert(Bm25Index.search(spark, p, qs).collect().toSeq ==
-        CorpusOps.bm25TopK(docs.filter(col("doc_id") % 5 <= 3),
-          "doc_id", "text", qs).collect().toSeq,
-        "lifecycle under RenameCas diverged from inline")
-      Caches.clear()
     } finally { Generations.claimPrimitive = saved }
   }
 
@@ -577,5 +494,19 @@ class GenerationsSpec extends AnyFunSuite {
           "saw the failed batch")
       Caches.clear()
     }
+  }
+}
+
+object GenerationsSpec {
+  /** A deliberately NON-atomic claim — exists() then plain create, the
+    * semantics of a store without conditional writes — so the spec can
+    * DEMONSTRATE the object-store failure (two racers both claiming one
+    * id) instead of merely asserting it in scaladoc. */
+  class NonAtomicSimulation(interleave: () => Unit)
+      extends Generations.ClaimPrimitive {
+    def claim(fs: org.apache.hadoop.fs.FileSystem,
+              p: org.apache.hadoop.fs.Path): Boolean =
+      if (fs.exists(p)) false
+      else { interleave(); fs.create(p, true).close(); true }
   }
 }

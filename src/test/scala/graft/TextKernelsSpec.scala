@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TextOps.{hash7, hash7Xx, shingles, words}
+import graft.TextOps.{hash7, shingles, words}
 
 /** Pins the native text kernels (`graft_hashed_shingles`,
   * `graft_simhash`) bit-equal to the Column-composed forms they replace
@@ -127,41 +127,42 @@ class TextKernelsSpec extends AnyFunSuite {
     val e3 = intercept[Exception](
       spark.sql("SELECT graft_hashed_shingles('a b c', 0)").collect())
     assert(e3.getMessage.contains("graft_hashed_shingles"), e3.getMessage)
+    // a trailing third argument is an arity error, not a hash mode
+    val e4 = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_hashed_shingles('a b c', 3, true)").collect())
+    assert(e4.getMessage.contains("`graft_hashed_shingles`"), e4.getMessage)
+    val e5 = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_simhash('a b c', array(''), true)").collect())
+    assert(e5.getMessage.contains("`graft_simhash`"), e5.getMessage)
   }
 }
 
 /** The Column-composed reference forms the native text kernels replaced,
-  * kept as their executable specifications: TextKernelsSpec and
-  * HashModeSpec pin the kernels bit-equal to these.
+  * kept as their executable specifications: TextKernelsSpec pins the
+  * kernels bit-equal to these.
   */
 object LegacyTextKernels {
 
   /** The Column-composed form [[TextOps.hashedShingleSet]] replaces (kept as the
-    * kernel's executable specification + oracle-SQL mirror; `xx` selects
-    * the xxhash64 production hash so HashModeSpec can pin kernel parity
-    * in both modes).
+    * kernel's executable specification + oracle-SQL mirror).
     */
-  def legacyHashedShingleSet(text: Column, n: Int = 3,
-                             xx: Boolean = false): Column =
+  def legacyHashedShingleSet(text: Column, n: Int = 3): Column =
     array_sort(array_distinct(transform(
-      array_distinct(shingles(text, n)),
-      s => if (xx) hash7Xx(s) else hash7(s))))
+      array_distinct(shingles(text, n)), s => hash7(s))))
 
   /** The explode → bit-sum aggregate form [[TextOps.simhashWideDf]] replaces
     * (kept as the kernel's executable specification).
     */
   def legacySimhashWideDf(df: DataFrame, idCol: String,
                           textCol: String,
-                          salts: Seq[String],
-                          xx: Boolean = false): DataFrame = {
+                          salts: Seq[String]): DataFrame = {
     require(salts.nonEmpty && 28 * salts.size <= 63,
       "width must fit a single long")
-    val h: Column => Column = if (xx) hash7Xx else hash7
     val ex = salts.zipWithIndex.foldLeft(
       df.select(col(idCol).as("doc_id"),
         explode(array_distinct(words(col(textCol)))).as("w"))) {
       case (d, (s, k)) => d.withColumn(s"h$k",
-        h(if (s.isEmpty) col("w") else concat(col("w"), lit(s))))
+        hash7(if (s.isEmpty) col("w") else concat(col("w"), lit(s))))
     }
     val aggs = for { k <- salts.indices; j <- 0 until 28 }
       yield sum((shiftright(col(s"h$k"), j).bitwiseAND(1)) * 2 - 1)
