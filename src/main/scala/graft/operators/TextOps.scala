@@ -223,11 +223,6 @@ object TextOps {
         hashedShingleSet(col(textCol)).as("shset"))))
   }
 
-  /** [[lshVerifiedPairs]] over an ALREADY-persisted (doc_id, shset)
-    * frame — lets a caller that needs the shingle sets for its own joins
-    * ([[dedupRecall]]'s pooled verify) share one projection and one
-    * cache instead of materializing the md5-shingle pass twice.
-    */
   /** (doc_id, band, key) rows from a (doc_id, shset) frame: row-local
     * signatures ([[sigCols]]) exploded onto the [[bandsCount]] banded
     * bucket keys, null keys (empty shingle sets) dropped. THE one
@@ -245,6 +240,11 @@ object TextOps {
       .select(col(idName), col("bk.band"), col("bk.key"))
       .filter(col("key").isNotNull)
 
+  /** [[lshVerifiedPairs]] over an ALREADY-persisted (doc_id, shset)
+    * frame — lets a caller that needs the shingle sets for its own joins
+    * ([[dedupRecall]]'s pooled verify) share one projection and one
+    * cache instead of materializing the md5-shingle pass twice.
+    */
   private[graft] def lshVerifiedPairsFrom(shsets: DataFrame)
       : (DataFrame, DataFrame) = {
     // signatures are row-local over the cached hashed sets (sigCols) —

@@ -34,8 +34,7 @@ import graft.{Caches, CorpusOps, TextOps}
   * three-of-four tables or a half-applied refresh. [[compact]] builds
   * the next table GENERATION fully before the commit-marker flip —
   * readers keep answering from the old generation throughout
-  * (GenerationsSpec pins the equality), replacing the old
-  * purge-then-rename window.
+  * (GenerationsSpec pins the equality).
   *
   * [[search]] joins the postings against the broadcast query-term
   * table FIRST (bucket-key join, no corpus shuffle), computes df over
@@ -56,11 +55,6 @@ object Bm25Index {
     * partial-compaction touched-share law needs deployment-sized
     * counts, not a constant). */
   val Buckets = 32
-
-  /** The pinned bucket count of an existing index (pre-knob indexes
-    * default to [[Buckets]], which is what their writers used). */
-  private def bucketsOf(spark: SparkSession, prefix: String): Int =
-    Generations.bucketsOf(spark, prefix, Buckets)
 
   private[graft] val Logicals =
     Seq("postings", "doclens", "positions", "stats")
@@ -87,7 +81,7 @@ object Bm25Index {
     */
   private def writeAll(docs: DataFrame, idCol: String, textCol: String,
                        prefix: String, w: Int)(gen: Long, b: Long): Unit = {
-    val nb = bucketsOf(docs.sparkSession, prefix)
+    val nb = Generations.bucketsOf(docs.sparkSession, prefix)
     val mode = Generations.modeOf(b)
     val toks = Caches.persistTracked(docs.select(
       col(idCol).as("doc_id"),
@@ -409,11 +403,8 @@ object Bm25Index {
     * exactly as it was (GenerationsSpec pins both), and a batch
     * committed during the rewrite aborts the flip.
     */
-  def compact(spark: SparkSession, prefix: String,
-              retain: Int = 0): Unit = {
-    val (st, ng) = buildNextGeneration(spark, prefix)
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
-  }
+  def compact(spark: SparkSession, prefix: String): Unit =
+    Generations.rebuild(spark, prefix, Logicals)(compactInto(spark, prefix))
 
   /** Dead-row fraction of the log, in percent — one bounded stats-log
     * scan: gross row mass ∝ Σ|n| (inserts AND tombstones both append
@@ -440,9 +431,9 @@ object Bm25Index {
     * simply SKIPPED; above it the usual full [[compact]] runs.
     * @return true when a compaction actually ran */
   def compactIfStale(spark: SparkSession, prefix: String,
-                     gatePct: Long = 25L, retain: Int = 0): Boolean = {
+                     gatePct: Long): Boolean = {
     val stale = deadFractionPct(spark, prefix) >= gatePct
-    if (stale) compact(spark, prefix, retain)
+    if (stale) compact(spark, prefix)
     stale
   }
 
@@ -455,7 +446,7 @@ object Bm25Index {
     * rows stay visible — the b0 commit is the single atomic flip
     * (committedState's rule; a reader racing the carry-over never
     * sees a torn batch list). The stats log is rewritten NETTED to
-    * one live row (the [[buildNextGeneration]] form): the touched-
+    * one live row (the [[compactInto]] form): the touched-
     * bucket fold physically removed every tombstone-cancelled row —
     * tombstones live only in touched buckets by definition — so the
     * post-partial dead fraction IS zero, and copying the signed log
@@ -467,29 +458,24 @@ object Bm25Index {
     * touches most term buckets and partial ≈ full —
     * [[compactIfStale]] is the policy for that shape.
     * @return rewritten-bucket count per logical table (spec gate) */
-  def compactPartial(spark: SparkSession, prefix: String,
-                     retain: Int = 0): Map[String, Int] = {
-    val st = Generations.committedState(spark, prefix)
-    val nb = bucketsOf(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    val counts = Sinks.partialCompactLegs(spark, prefix, Bucketed,
-      bucketColsOf, nb, st, ng)
-    writeNetStats(spark, prefix, st, ng)
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, st._2)
-    counts
-  }
+  def compactPartial(spark: SparkSession,
+                     prefix: String): Map[String, Int] =
+    Generations.rebuild(spark, prefix, Logicals, carry = true) { (st, ng) =>
+      val counts = Sinks.partialCompactLegs(spark, prefix, Bucketed,
+        bucketColsOf, Generations.bucketsOf(spark, prefix), st, ng)
+      writeNetStats(spark, prefix, st, ng)
+      counts
+    }
 
-  /** Compaction's build phase (intent + next-generation tables, NO
-    * commit) — split out for GenerationsSpec's interleaved reads.
-    * @return (the committed state the build read, the new generation) */
-  private[graft] def buildNextGeneration(spark: SparkSession,
-      prefix: String): ((Long, Seq[Long]), Long) = {
-    val st = Generations.committedState(spark, prefix)
-    val nb = bucketsOf(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    Sinks.compactLegs(spark, prefix, Bucketed, bucketColsOf, nb, st, ng)
+  /** [[compact]]'s build: committed state `st` rewritten into
+    * generation `ng`, no commit — the closure [[compact]] hands to
+    * [[Generations.rebuild]], which GenerationsSpec wraps to read
+    * between build and flip. */
+  private[graft] def compactInto(spark: SparkSession, prefix: String)(
+      st: (Long, Seq[Long]), ng: Long): Unit = {
+    Sinks.compactLegs(spark, prefix, Bucketed, bucketColsOf,
+      Generations.bucketsOf(spark, prefix), st, ng)
     writeNetStats(spark, prefix, st, ng)
-    (st, ng)
   }
 
   /** Generation `ng`'s stats log: the live (n, tt) at `st` netted to

@@ -70,11 +70,6 @@ object DedupIndex {
     */
   val Buckets = 32
 
-  /** The pinned bucket count of an existing index (pre-knob indexes
-    * default to [[Buckets]], which is what their writers used). */
-  private def bucketsOf(spark: SparkSession, prefix: String): Int =
-    Generations.bucketsOf(spark, prefix, Buckets)
-
   private[graft] val Logicals = Seq("bands", "shsets", "hashes")
 
   /** The per-increment hashing pass shared by [[write]], [[append]]
@@ -106,7 +101,7 @@ object DedupIndex {
     * rows written here are invisible until the commit marker lands. */
   private def writeAll(docs: DataFrame, idCol: String, textCol: String,
                        prefix: String, w: Int)(gen: Long, b: Long): Unit = {
-    val nb = bucketsOf(docs.sparkSession, prefix)
+    val nb = Generations.bucketsOf(docs.sparkSession, prefix)
     val (bn, s, h) = project(docs, idCol, textCol, w)
     def one(df: DataFrame, logical: String): Unit =
       Sinks.writeBucketed(df.withColumn("b", lit(b)),
@@ -167,12 +162,9 @@ object DedupIndex {
     * missing-table or mixed-generation window at any point
     * (GenerationsSpec pins search-during-compaction equality). A batch
     * committed during the rewrite aborts the flip
-    * ([[Generations.flip]]). */
-  def compact(spark: SparkSession, prefix: String,
-              retain: Int = 0): Unit = {
-    val (st, ng) = buildNextGeneration(spark, prefix)
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
-  }
+    * ([[Generations.rebuild]]). */
+  def compact(spark: SparkSession, prefix: String): Unit =
+    Generations.rebuild(spark, prefix, Logicals)(compactInto(spark, prefix))
 
   /** PARTIAL compaction — the takedown-proportional maintenance pass
     * ([[Sinks.partialCompactBucketedTo]]; [[Bm25Index.compactPartial]]
@@ -192,29 +184,20 @@ object DedupIndex {
     * their one-file-per-batch layout; a periodic FULL [[compact]]
     * still bounds file count.
     * @return rewritten-bucket count per logical table (spec gate) */
-  def compactPartial(spark: SparkSession, prefix: String,
-                     retain: Int = 0): Map[String, Int] = {
-    val st = Generations.committedState(spark, prefix)
-    val nb = bucketsOf(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    val counts = Sinks.partialCompactLegs(spark, prefix, Logicals,
-      bucketColsOf, nb, st, ng)
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, st._2)
-    counts
-  }
+  def compactPartial(spark: SparkSession,
+                     prefix: String): Map[String, Int] =
+    Generations.rebuild(spark, prefix, Logicals, carry = true)(
+      Sinks.partialCompactLegs(spark, prefix, Logicals, bucketColsOf,
+        Generations.bucketsOf(spark, prefix), _, _))
 
-  /** Compaction's build phase only (intent + full next-generation
-    * write, NO commit) — split out so GenerationsSpec can interleave
-    * reads and simulate the crash-before-commit.
-    * @return (the committed state the build read, the new generation) */
-  private[graft] def buildNextGeneration(spark: SparkSession,
-      prefix: String): ((Long, Seq[Long]), Long) = {
-    val st = Generations.committedState(spark, prefix)
-    val nb = bucketsOf(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    Sinks.compactLegs(spark, prefix, Logicals, bucketColsOf, nb, st, ng)
-    (st, ng)
-  }
+  /** [[compact]]'s build: the full rewrite of committed state `st` into
+    * generation `ng`, no commit — the closure [[compact]] hands to
+    * [[Generations.rebuild]], which GenerationsSpec wraps to read and
+    * fail between build and flip. */
+  private[graft] def compactInto(spark: SparkSession, prefix: String)(
+      st: (Long, Seq[Long]), ng: Long): Unit =
+    Sinks.compactLegs(spark, prefix, Logicals, bucketColsOf,
+      Generations.bucketsOf(spark, prefix), st, ng)
 
   /** Screen a new batch against the standing index: banded-LSH
     * candidates from the index only, exact-Jaccard verify against the

@@ -28,10 +28,11 @@ import org.apache.spark.sql.functions.{col, sum}
   * The index modules never sequence these steps themselves: every
   * write goes through one of three brackets — [[bootstrap]] (reset,
   * write generation 0, commit), [[batch]] (claim, write, commit) and
-  * [[flip]] (re-check the compaction's snapshot, carry batch ids,
-  * commit b0, gc) — and every row-level tombstone fold goes through
-  * [[live]]. Each index keeps only its table layout, its projections
-  * and its weighted-sum readers.
+  * [[rebuild]] (read the snapshot, claim the next generation, build
+  * it, re-check the snapshot, carry batch ids, commit b0, gc) — and
+  * every row-level tombstone fold goes through [[live]]. Each index
+  * keeps only its table layout, its projections and its weighted-sum
+  * readers.
   *
   * The protocol — CONCURRENT writers, any number of readers:
   *
@@ -123,9 +124,8 @@ object Generations {
 
   def manifestT(prefix: String): String = s"${prefix}_manifest"
 
-  /** Physical table name of `logical` at `gen`. Generation 0 keeps the
-    * plain name, so a freshly bootstrapped index is laid out exactly as
-    * before this layer existed. */
+  /** Physical table name of `logical` at `gen`; generation 0 keeps the
+    * plain `<prefix>_<logical>` name. */
   def physical(prefix: String, logical: String, gen: Long): String =
     if (gen == 0L) s"${prefix}_${logical}" else s"${prefix}_${logical}_gen$gen"
 
@@ -149,18 +149,21 @@ object Generations {
                      b: Long, state: String): Path =
     new Path(dir(spark, prefix), s"${state}_g${gen}_b$b")
 
-  /** The full manifest: (gen, b, state) rows parsed from marker names —
-    * one bounded directory listing, no Spark job. */
-  private[graft] def rows(spark: SparkSession,
-                          prefix: String): Seq[(Long, Long, String)] = {
+  /** The manifest directory's file names — one bounded listing, no
+    * Spark job. */
+  private def names(spark: SparkSession, prefix: String): Seq[String] = {
     val d = dir(spark, prefix)
     val f = fsOf(spark, d)
     if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.flatMap(_.getPath.getName match {
-      case Marker(state, g, b) => Some((g.toLong, b.toLong, state))
-      case _ => None
-    })
+    else f.listStatus(d).toSeq.map(_.getPath.getName)
   }
+
+  /** The full manifest: (gen, b, state) rows parsed from marker names. */
+  private[graft] def rows(spark: SparkSession,
+                          prefix: String): Seq[(Long, Long, String)] =
+    names(spark, prefix).collect {
+      case Marker(state, g, b) => (g.toLong, b.toLong, state)
+    }
 
   /** Atomically create a marker via the pluggable [[ClaimPrimitive]];
     * false when it already exists — a concurrent writer won this id. */
@@ -172,11 +175,11 @@ object Generations {
 
   // ------------------------------------------------------ the protocol
 
-  /** Start a fresh index: reset the manifest (and any legacy catalog
-    * table holding its location). Until [[commit]] lands the index has
-    * no committed generation and readers refuse it, so bootstrap needs
-    * no intent marker — it is the one write with nothing prior to stay
-    * readable, and its invisibility-until-commit is structural. */
+  /** Start a fresh index: reset the manifest. Until [[commit]] lands
+    * the index has no committed generation and readers refuse it, so
+    * bootstrap needs no intent marker — it is the one write with
+    * nothing prior to stay readable, and its invisibility-until-commit
+    * is structural. */
   def beginBootstrap(spark: SparkSession, prefix: String): Unit =
     Sinks.purgeTable(spark, manifestT(prefix))
 
@@ -200,18 +203,13 @@ object Generations {
       s"${manifestT(prefix)}: bucket count already pinned")
   }
 
-  /** The writer-pinned bucket count, or `default` for indexes
-    * bootstrapped before the marker existed (their writers used the
-    * compile-time default — the counts agree by construction). */
-  def bucketsOf(spark: SparkSession, prefix: String,
-                default: Int): Int = {
-    val d = dir(spark, prefix)
-    val f = fsOf(spark, d)
-    if (!f.exists(d)) default
-    else f.listStatus(d).toSeq.map(_.getPath.getName).collectFirst {
+  /** The writer-pinned bucket count of a bucketed index; fails, naming
+    * the manifest, when no `buckets_N` marker exists. */
+  def bucketsOf(spark: SparkSession, prefix: String): Int =
+    names(spark, prefix).collectFirst {
       case BucketsMarker(n) => n.toInt
-    }.getOrElse(default)
-  }
+    }.getOrElse(throw new IllegalArgumentException(
+      s"${manifestT(prefix)}: no pinned bucket count (buckets_N marker)"))
 
   /** Claim the first free batch id at or past `startB` in generation
     * `g` — the arbitration loop, split out so GenerationsSpec can
@@ -248,7 +246,7 @@ object Generations {
   /** Allocate the next generation (for compaction's full rewrite) via
     * the same claim loop — two concurrent compactions can never build
     * into the same generation's tables. */
-  def beginGeneration(spark: SparkSession, prefix: String): Long = {
+  private def beginGeneration(spark: SparkSession, prefix: String): Long = {
     val rs = rows(spark, prefix)
     require(rs.exists(_._3 == "commit"),
       s"${manifestT(prefix)}: no committed generation to compact")
@@ -375,26 +373,37 @@ object Generations {
     out
   }
 
-  /** Make compacted generation `ng` current. `snapshot` is the
-    * committed state the build read; a batch committed since then
-    * appended into the old generation's tables, which the build neither
-    * folded nor copied and [[gc]] is about to drop — so the flip
-    * refuses (no b0 lands, readers stay on the old generation, and the
-    * orphaned tables are reaped after a later flip). The re-list
-    * shrinks the race to one listing; truly concurrent append and
-    * compaction would need a CAS on the flip itself. `carried` are the
-    * old batch ids a partial compaction copied forward: they commit
-    * first and stay invisible until the b0 commit flips the whole set
-    * at once ([[committedState]]'s rule). Then [[gc]]. */
-  def flip(spark: SparkSession, prefix: String, ng: Long,
-           logicals: Seq[String], retain: Int,
-           snapshot: (Long, Seq[Long]), carried: Seq[Long]): Unit = {
+  /** One maintenance pass (compaction, re-route, refresh): read the
+    * committed snapshot, claim the next generation `ng`, `build(snapshot,
+    * ng)` every one of its `logicals` tables, then flip to it. A build
+    * that throws commits nothing: readers stay on the snapshot's
+    * generation, and the claimed number is never reused — its tables
+    * are reaped by the [[gc]] after a later flip.
+    *
+    * The flip re-lists the manifest first. A batch committed since the
+    * snapshot appended into the old generation's tables, which the
+    * build neither folded nor copied and [[gc]] is about to drop — so
+    * the flip refuses (no b0 lands, readers stay on the old generation).
+    * The re-list shrinks the race to one listing; truly concurrent
+    * append and compaction would need a CAS on the flip itself. `carry`
+    * then commits the snapshot's batch ids into `ng` (a partial
+    * compaction that copied their rows forward); they stay invisible
+    * until the b0 commit flips the whole set at once ([[committedState]]'s
+    * rule). Last comes [[gc]], with its `retain`. */
+  def rebuild[A](spark: SparkSession, prefix: String, logicals: Seq[String],
+                 retain: Int = 0, carry: Boolean = false)(
+      build: ((Long, Seq[Long]), Long) => A): A = {
+    val snapshot = committedState(spark, prefix)
+    val ng = beginGeneration(spark, prefix)
+    val out = build(snapshot, ng)
     require(committedState(spark, prefix) == snapshot,
       s"$prefix: a batch committed during compaction — aborting the " +
         "flip (single-maintenance-writer contract)")
-    carried.filter(_ != 0L).foreach(commit(spark, prefix, ng, _))
+    if (carry)
+      snapshot._2.filter(_ != 0L).foreach(commit(spark, prefix, ng, _))
     commit(spark, prefix, ng, 0L)
     gc(spark, prefix, ng, logicals, retain)
+    out
   }
 
   /** `b` is one of the `visible` batch ids, with the ids bound as data:

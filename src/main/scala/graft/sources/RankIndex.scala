@@ -48,17 +48,16 @@ object RankIndex {
     * (and any crashed intents) are GC'd.
     * @return rounds the warm convergence ran */
   def refresh(nodes: DataFrame, newEdges: DataFrame, prefix: String,
-              scale: Long = Graph.RefreshScale,
-              retain: Int = 0): Int = {
+              scale: Long = Graph.RefreshScale): Int = {
     val spark = nodes.sparkSession
-    val st = Generations.committedState(spark, prefix)
-    val prev = spark.table(Generations.physical(prefix, "ranks", st._1))
-    val ng = Generations.beginGeneration(spark, prefix)
-    val (r, rounds) = Graph.pageRankFixedPoint(nodes, newEdges,
-      init = Some(prev), scale = scale)
-    // the purge in saveTable also clears a crashed intent's leftover
-    Sinks.saveTable(r, Generations.physical(prefix, "ranks", ng))
-    Generations.flip(spark, prefix, ng, logicals, retain, st, Nil)
+    val rounds = Generations.rebuild(spark, prefix, logicals) { (st, ng) =>
+      val prev = spark.table(Generations.physical(prefix, "ranks", st._1))
+      val (r, n) = Graph.pageRankFixedPoint(nodes, newEdges,
+        init = Some(prev), scale = scale)
+      // the purge in saveTable also clears a crashed intent's leftover
+      Sinks.saveTable(r, Generations.physical(prefix, "ranks", ng))
+      n
+    }
     Caches.clear()
     rounds
   }

@@ -197,11 +197,10 @@ object Sinks {
     * the deployments never produce (double inserts,
     * delete-before-insert).
     *
-    * Writing into `to` (the next generation's physical name,
-    * [[Generations.physical]]) instead of renaming over `from` is what
-    * removes the old missing-table window: readers keep resolving the
-    * previous generation until its [[Generations.commit]] marker lands —
-    * the source table is never dropped here (that is post-commit
+    * `to` is the next generation's physical name
+    * ([[Generations.physical]]): readers keep resolving `from` until the
+    * new generation's [[Generations.commit]] marker lands — the source
+    * table is never dropped here (that is post-commit
     * [[Generations.gc]]). The explicit `repartition(numBuckets,
     * bucketKey)` pins partition-to-bucket alignment — repartition's
     * hash IS the bucket hash — so each write task holds exactly one
@@ -298,7 +297,7 @@ object Sinks {
     * source, so a batch committed concurrently would be silently
     * dropped from the new generation — callers must re-resolve
     * [[Generations.committedState]] immediately before their b0 flip
-    * and abort on drift ([[Generations.flip]] does).
+    * and abort on drift ([[Generations.rebuild]] does).
     * Untouched buckets keep their
     * one-file-per-batch layout — partial compaction bounds tombstone
     * mass, FULL compaction bounds file count; a maintenance schedule

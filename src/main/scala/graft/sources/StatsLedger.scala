@@ -94,41 +94,34 @@ object StatsLedger {
   /** Compact the ledger into the next generation: one netted row per
     * source, then the commit-marker flip + GC (the [[Bm25Index.compact]]
     * stats posture). */
-  def compact(spark: SparkSession, prefix: String,
-              retain: Int = 0): Unit = {
-    val st @ (gen, bs) = Generations.committedState(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    val net = spark.table(ledger(prefix, gen))
-      .filter(Generations.visibleIn(bs))
+  def compact(spark: SparkSession, prefix: String): Unit =
+    Generations.rebuild(spark, prefix, Logicals) { (st, ng) =>
+      val net = netBySource(spark, prefix, st)
+        .filter(col("n_docs") =!= 0)
+        .withColumn("w", lit(1)).withColumn("b", lit(0L))
+      Sinks.saveTable(net.coalesce(1), ledger(prefix, ng))
+    }
+
+  /** The ledger's visible partials at committed state `st`, each count
+    * summed with its sign `w` per source. */
+  private def netBySource(spark: SparkSession, prefix: String,
+                          st: (Long, Seq[Long])): DataFrame = {
+    val sums = Seq("n_docs", "n_tokens", "n_chars", "n_stop", "n_short")
+      .map(c => sum(col(c) * col("w")).as(c))
+    spark.table(ledger(prefix, st._1))
+      .filter(Generations.visibleIn(st._2))
       .groupBy("source")
-      .agg(sum(col("n_docs") * col("w")).as("n_docs"),
-        sum(col("n_tokens") * col("w")).as("n_tokens"),
-        sum(col("n_chars") * col("w")).as("n_chars"),
-        sum(col("n_stop") * col("w")).as("n_stop"),
-        sum(col("n_short") * col("w")).as("n_short"))
-      .filter(col("n_docs") =!= 0)
-      .withColumn("w", lit(1)).withColumn("b", lit(0L))
-    Sinks.saveTable(net.coalesce(1), ledger(prefix, ng))
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
+      .agg(sums.head, sums.tail: _*)
   }
 
   /** Finish the reduce: the live per-source data card. One scan of a
     * |sources × batches|-row ledger — no corpus read. */
-  def profile(spark: SparkSession, prefix: String): DataFrame = {
-    val (gen, bs) = Generations.committedState(spark, prefix)
-    spark.table(ledger(prefix, gen))
-      .filter(Generations.visibleIn(bs))
-      .groupBy("source")
-      .agg(sum(col("n_docs") * col("w")).as("n_docs"),
-        sum(col("n_tokens") * col("w")).as("n_tokens"),
-        sum(col("n_chars") * col("w")).as("n_chars"),
-        sum(col("n_stop") * col("w")).as("n_stop"),
-        sum(col("n_short") * col("w")).as("n_short"))
+  def profile(spark: SparkSession, prefix: String): DataFrame =
+    netBySource(spark, prefix, Generations.committedState(spark, prefix))
       .filter(col("n_docs") > 0)
       .select(col("source"), col("n_docs"), col("n_tokens"),
         col("n_chars"),
         round(col("n_stop") / col("n_tokens"), 6).as("stop_ratio"),
         col("n_short"))
       .orderBy("source")
-  }
 }

@@ -261,23 +261,21 @@ object VectorIndex {
     * commit-marker flip and post-commit GC. Readers resolve the old
     * generation until the flip; a batch committed during the rewrite
     * aborts it. */
-  def compact(spark: SparkSession, prefix: String,
-              retain: Int = 0): Unit = {
-    val st @ (gen, bs) = Generations.committedState(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    Sinks.compactBucketedTo(spark, phys(prefix, "vectors", gen),
-      phys(prefix, "vectors", ng), Seq("block"), Buckets, bs)
-    val net = liveCentroids(spark, prefix, st)
-      .join(spark.table(phys(prefix, "centroids", gen))
-          .filter(Generations.visibleIn(bs))
-          .groupBy("block")
-          .agg(sum(col("cnt") * col("w")).as("cnt")),
-        Seq("block"))
-      .select(col("block"), col("cq"), col("cnt"), lit(1).as("w"),
-        lit(0L).as("b"))
-    Sinks.saveTable(net.coalesce(1), phys(prefix, "centroids", ng))
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
-  }
+  def compact(spark: SparkSession, prefix: String): Unit =
+    Generations.rebuild(spark, prefix, Logicals) {
+      case (st @ (gen, bs), ng) =>
+        Sinks.compactBucketedTo(spark, phys(prefix, "vectors", gen),
+          phys(prefix, "vectors", ng), Seq("block"), Buckets, bs)
+        val net = liveCentroids(spark, prefix, st)
+          .join(spark.table(phys(prefix, "centroids", gen))
+              .filter(Generations.visibleIn(bs))
+              .groupBy("block")
+              .agg(sum(col("cnt") * col("w")).as("cnt")),
+            Seq("block"))
+          .select(col("block"), col("cq"), col("cnt"), lit(1).as("w"),
+            lit(0L).as("b"))
+        Sinks.saveTable(net.coalesce(1), phys(prefix, "centroids", ng))
+    }
 
   // ---------------------------------------------------------------
   // LEARNED coarse routing — blocks assigned by the TRAINED quantizer
@@ -389,15 +387,13 @@ object VectorIndex {
     */
   def reroute(df: DataFrame, idCol: String, vecCol: String,
               prefix: String, k: Int = 4, iters: Int = 3,
-              retain: Int = 0): Unit = {
-    val spark = df.sparkSession
-    val st = Generations.committedState(spark, prefix)
-    val ng = Generations.beginGeneration(spark, prefix)
-    trainCoarse(df, idCol, vecCol, prefix, k, iters)
-    writeAll(withLearnedBlock(df, vecCol, prefix), idCol, vecCol,
-      "_lblock", prefix, w = 1)(ng, 0L)
-    Generations.flip(spark, prefix, ng, Logicals, retain, st, Nil)
-  }
+              retain: Int = 0): Unit =
+    Generations.rebuild(df.sparkSession, prefix, Logicals, retain) {
+      (_, ng) =>
+        trainCoarse(df, idCol, vecCol, prefix, k, iters)
+        writeAll(withLearnedBlock(df, vecCol, prefix), idCol, vecCol,
+          "_lblock", prefix, w = 1)(ng, 0L)
+    }
 
   /** [[trainCodebook]] with codewords = the LEARNED clusters instead
     * of caller labels:
@@ -578,15 +574,13 @@ object VectorIndex {
   /** Compact the codes log into the next generation (codebook copied
     * forward — codes and their codebook travel together), then the
     * commit-marker flip + GC. */
-  def compactCodes(spark: SparkSession, prefix: String,
-                   retain: Int = 0): Unit = {
+  def compactCodes(spark: SparkSession, prefix: String): Unit = {
     val pq = pqPrefix(prefix)
-    val st = Generations.committedState(spark, pq)
-    val ng = Generations.beginGeneration(spark, pq)
-    Sinks.compactBucketedTo(spark, phys(pq, "codes", st._1),
-      phys(pq, "codes", ng), Seq("block"), Buckets, st._2)
-    Sinks.saveTable(spark.table(phys(pq, "codebook", st._1)).coalesce(1),
-      phys(pq, "codebook", ng))
-    Generations.flip(spark, pq, ng, PqLogicals, retain, st, Nil)
+    Generations.rebuild(spark, pq, PqLogicals) { case ((gen, bs), ng) =>
+      Sinks.compactBucketedTo(spark, phys(pq, "codes", gen),
+        phys(pq, "codes", ng), Seq("block"), Buckets, bs)
+      Sinks.saveTable(spark.table(phys(pq, "codebook", gen)).coalesce(1),
+        phys(pq, "codebook", ng))
+    }
   }
 }

@@ -243,7 +243,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d)
     DedupIndex.write(docs.filter(col("doc_id") % 5 <= 2), "doc_id",
       "text", p, buckets = nb)
-    assert(graft.sources.Generations.bucketsOf(spark, p, -1) == nb,
+    assert(graft.sources.Generations.bucketsOf(spark, p) == nb,
       "bootstrap did not pin the bucket count in the manifest")
     // append and delete must resolve the pinned 8, not the default 32
     // — a mismatched count would write files whose NAME-encoded bucket
@@ -277,6 +277,25 @@ class DedupIndexSpec extends AnyFunSuite {
     }
     assert(near() == near0,
       "screen diverged across full compact at 8 buckets")
+    Caches.clear()
+  }
+
+  test("a bucketed index whose buckets_N marker is gone refuses to " +
+      "append, naming its manifest") {
+    val p = "tbkgone"
+    val docs = Tables.documents(spark, d)
+    DedupIndex.write(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
+      p, buckets = 4)
+    val manifest = graft.sources.Generations.manifestT(p)
+    val marker = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(spark.sessionState.conf.warehousePath,
+        manifest), "buckets_4")
+    assert(marker.getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(marker, false), s"no $marker to delete")
+    val e = intercept[IllegalArgumentException](
+      DedupIndex.append(docs.filter(col("doc_id") % 5 === 1), "doc_id",
+        "text", p))
+    assert(e.getMessage.contains(manifest), e.getMessage)
     Caches.clear()
   }
 

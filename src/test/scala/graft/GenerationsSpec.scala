@@ -10,9 +10,10 @@ import graft.sources.{Bm25Index, DedupIndex, Generations, StatsLedger,
   * ([[graft.sources.Generations]]): a reader NEVER observes a missing
   * table, a half-written batch, or a mixed-generation index —
   * maintenance becomes visible only through one manifest commit
-  * marker. Simulated crashes = running the build/append phases without
-  * their commit call (the exact prefix of work a real crash leaves);
-  * the failed-write case plants a real failing write job instead.
+  * marker. Crashed batches = running the append phase without its
+  * commit call (the exact prefix of work a real crash leaves); crashed
+  * compactions throw from inside the [[Generations.rebuild]] build;
+  * the failed-write case plants a real failing write job.
   */
 class GenerationsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -33,16 +34,22 @@ class GenerationsSpec extends AnyFunSuite {
     def run() = Bm25Index.search(spark, p, qs).collect().toSeq
     val before = run()
     assert(before.nonEmpty)
-    // the build phase: full next-generation tables exist on disk, but
-    // no commit row — readers must keep resolving the old generation
-    val (_, ng) = Bm25Index.buildNextGeneration(spark, p)
-    assert(Generations.committedState(spark, p)._1 != ng,
-      "uncommitted generation leaked into the committed state")
-    assert(run() == before, "search diverged mid-compaction")
-    Caches.clear()
-    // the flip: ONE manifest row; answers unchanged
-    Generations.commit(spark, p, ng, 0L)
+    // between build and flip: full next-generation tables exist on
+    // disk, but no commit marker — readers keep the old generation
+    val ng = Generations.rebuild(spark, p, Bm25Index.Logicals,
+      retain = 1) { (st, ng) =>
+        Bm25Index.compactInto(spark, p)(st, ng)
+        assert(Generations.committedState(spark, p)._1 != ng,
+          "uncommitted generation leaked into the committed state")
+        assert(run() == before, "search diverged mid-compaction")
+        Caches.clear()
+        ng
+    }
+    // the flip: ONE b0 marker; retain = 1 keeps the old generation on
+    // disk, the state a reader lands in between commit and GC
     assert(Generations.committedState(spark, p) == (ng -> Seq(0L)))
+    assert(spark.catalog.tableExists(s"${p}_postings"),
+      "the old generation was dropped before GC")
     assert(run() == before, "search diverged across the commit flip")
     Caches.clear()
     // GC drops the old generation only after the flip
@@ -66,7 +73,21 @@ class GenerationsSpec extends AnyFunSuite {
       .collect().toSeq
     val before = screen()
     assert(before.nonEmpty)
-    val (_, orphan) = DedupIndex.buildNextGeneration(spark, p) // crash here
+    val st0 = Generations.committedState(spark, p)
+    // the build writes the whole next generation, then crashes
+    var orphan = -1L
+    val crash = intercept[IllegalStateException](
+      Generations.rebuild(spark, p, DedupIndex.Logicals) { (st, ng) =>
+        DedupIndex.compactInto(spark, p)(st, ng)
+        orphan = ng
+        throw new IllegalStateException("crash before commit")
+      })
+    assert(crash.getMessage == "crash before commit")
+    assert(spark.catalog.tableExists(
+      Generations.physical(p, "hashes", orphan)),
+      "the crashed build wrote no next-generation table")
+    assert(Generations.committedState(spark, p) == st0,
+      "interrupted compaction changed the committed state")
     assert(screen() == before, "interrupted compaction changed answers")
     Caches.clear()
     // recovery: a later compaction allocates a FRESH generation (the
@@ -173,7 +194,8 @@ class GenerationsSpec extends AnyFunSuite {
     val before = screen()
     val (gOld, _) = Generations.committedState(spark, p)
     val oldPhys = Generations.physical(p, "hashes", gOld)
-    DedupIndex.compact(spark, p, retain = 1)
+    Generations.rebuild(spark, p, DedupIndex.Logicals, retain = 1)(
+      DedupIndex.compactInto(spark, p))
     val (g1, _) = Generations.committedState(spark, p)
     assert(g1 > gOld)
     // the pre-flip generation survived the flip: a reader that
@@ -183,7 +205,7 @@ class GenerationsSpec extends AnyFunSuite {
     assert(screen() == before, "answers diverged across retained GC")
     Caches.clear()
     // the next compaction with retain = 0 drops ALL predecessors
-    DedupIndex.compact(spark, p, retain = 0)
+    DedupIndex.compact(spark, p)
     assert(!spark.catalog.tableExists(oldPhys),
       "retain = 0 kept a superseded generation")
     assert(!spark.catalog.tableExists(
@@ -365,18 +387,24 @@ class GenerationsSpec extends AnyFunSuite {
     DedupIndex.write(Seq((1L, "alpha beta gamma delta epsilon"),
       (2L, "zeta eta theta iota kappa")).toDF("doc_id", "text"),
       "doc_id", "text", p)
-    val (st, ng) = DedupIndex.buildNextGeneration(spark, p)
-    // doc X commits into the OLD generation while the next one builds
+    val st = Generations.committedState(spark, p)
     val x = Seq((3L, "the late batch lands mid compaction"))
       .toDF("doc_id", "text")
-    DedupIndex.append(x, "doc_id", "text", p)
+    var ng = -1L
     val flipped = scala.util.Try(
-      Generations.flip(spark, p, ng, DedupIndex.Logicals, 0, st, Nil))
+      Generations.rebuild(spark, p, DedupIndex.Logicals) { (snap, g) =>
+        DedupIndex.compactInto(spark, p)(snap, g)
+        ng = g
+        // doc X commits into the OLD generation while the next builds
+        DedupIndex.append(x, "doc_id", "text", p)
+      })
     def known() = DedupIndex.screenExact(spark, x, "doc_id", "text", p)
       .collect().map(_.getAs[Boolean]("is_known")).toSeq
     assert(known() == Seq(true),
       "the batch committed during compaction was lost by the flip")
     assert(flipped.isFailure, "the flip ignored a concurrent commit")
+    assert(flipped.failed.get.getMessage.contains(
+      "a batch committed during compaction"), flipped.failed.get)
     assert(Generations.committedState(spark, p)._1 == st._1)
     DedupIndex.compact(spark, p)
     assert(Generations.committedState(spark, p)._1 > ng)

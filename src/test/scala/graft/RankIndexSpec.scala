@@ -35,12 +35,17 @@ class RankIndexSpec extends AnyFunSuite {
     RankIndex.bootstrap(nodes, Graph.tradeGraphGen1(spark, d), "ricrash")
     val before = RankIndex.ranks(spark, "ricrash").orderBy("node")
       .collect().map(r => (r.getString(0), r.getLong(1)))
-    // simulate a refresh that crashes AFTER writing its generation's
-    // table but BEFORE the commit row: allocate the intent and write
-    // a poisoned table under the new generation's physical name
-    val ng = Generations.beginGeneration(spark, "ricrash")
-    nodes.withColumn("rank", lit(-1L)).write.mode("overwrite")
-      .saveAsTable(Generations.physical("ricrash", "ranks", ng))
+    // a refresh that crashes AFTER writing its generation's table but
+    // BEFORE the commit marker: the build writes a poisoned table under
+    // the new generation's physical name, then throws
+    var ng = -1L
+    intercept[IllegalStateException](
+      Generations.rebuild(spark, "ricrash", Seq("ranks")) { (_, g) =>
+        ng = g
+        nodes.withColumn("rank", lit(-1L)).write.mode("overwrite")
+          .saveAsTable(Generations.physical("ricrash", "ranks", g))
+        throw new IllegalStateException("crash before commit")
+      })
     // readers still resolve the committed generation — bit-equal
     val during = RankIndex.ranks(spark, "ricrash").orderBy("node")
       .collect().map(r => (r.getString(0), r.getLong(1)))
